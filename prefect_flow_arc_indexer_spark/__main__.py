@@ -22,7 +22,7 @@ Reference parameter -> CLI flag:
   stays required — the manifest/watermark source of truth is local);
   without ``--es-nodes`` they are unused
 - flow retries (``flows/main_flow.py:722-723``) -> ``--retries
-  --retry-delay`` (X4 per-index retry wrapper)
+  --retry-delay`` (X4 retry wrapper around each write and publish)
 
 The command prints one JSON line with the SyncReport fields so schedulers
 can parse the outcome — the moral equivalent of the reference's Prefect
@@ -65,18 +65,6 @@ def build_parser() -> argparse.ArgumentParser:
     run.add_argument("--watermark-store", default=None)
     run.add_argument("--retries", type=int, default=0)
     run.add_argument("--retry-delay", type=float, default=0.0)
-    run.add_argument(
-        "--one-pass",
-        action="store_true",
-        help="full sync: single partitionBy(index) write job (one fact-"
-        "table scan) instead of the per-index loop",
-    )
-    run.add_argument(
-        "--parallel-large",
-        action="store_true",
-        help="full sync: submit the pg-indexer-large class from concurrent "
-        "driver threads (reference run_large_indexer_parallel)",
-    )
     run.add_argument(
         "--bucketed",
         action="store_true",
@@ -149,9 +137,7 @@ def main(argv: list[str] | None = None) -> int:
         WatermarkStore,
     )
 
-    # --parallel-large needs REAL pool isolation: FAIR mode + the shipped
-    # allocation file are build-time confs, so they go in here
-    spark = get_spark("arc-indexer-cli", fair_pools=args.parallel_large)
+    spark = get_spark("arc-indexer-cli")
     docs = load_docs(spark, args)
     sink = VersionedSink(
         args.sink_dir, keep_history=args.keep_generations is not None
@@ -172,8 +158,6 @@ def main(argv: list[str] | None = None) -> int:
             or_ids=or_ids,
             retries=args.retries,
             retry_delay_s=args.retry_delay,
-            parallel_large=args.parallel_large,
-            one_pass=args.one_pass,
             bucketed=args.bucketed,
             n_buckets=args.n_buckets,
         )

@@ -59,8 +59,3 @@ def minhash_perm(hash_col: Column, i: int) -> Column:
     """i-th MinHash permutation of an already-stable-hashed column."""
     a, b = MINHASH_COEFFS[i]
     return (hash_col * F.lit(a) + F.lit(b)) % F.lit(HASH_PRIME)
-
-
-def dd_minhash_perm(hash_expr: str, i: int) -> str:
-    a, b = MINHASH_COEFFS[i]
-    return f"(({hash_expr}) * {a} + {b}) % {HASH_PRIME}"

@@ -64,9 +64,3 @@ def spark_round_half_up_long(y: np.ndarray) -> np.ndarray:
                 )
             )
     return fast.astype(np.int64)
-
-
-def sequential_dot(a: np.ndarray, b: np.ndarray) -> float:
-    """Left-to-right float64 dot product — the JVM ``aggregate`` fold order
-    (NumPy's pairwise ``dot``/``sum`` would differ in the last ulp)."""
-    return float(np.cumsum(a * b)[-1]) if a.size else 0.0

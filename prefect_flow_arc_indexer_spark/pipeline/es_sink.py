@@ -1,34 +1,35 @@
-"""Elasticsearch sink configuration — the production write path standing
-opposite the local :class:`~prefect_flow_arc_indexer_spark.pipeline.sinks.
-VersionedSink` (reference data path: ``streaming_bulk`` upsert/delete at
+"""Elasticsearch sink — the production mirror standing opposite the local
+:class:`~prefect_flow_arc_indexer_spark.pipeline.sinks.VersionedSink`
+(reference data path: ``streaming_bulk`` upsert/delete at
 ``flows/main_flow.py:366-436``; bulk-tuning defaults at ``608-616``).
 
-The environment ships no ES cluster and no ``elasticsearch-spark`` jar, so
-everything here is buildable and unit-testable up to the writer-options
-boundary; :func:`write_upserts` raises a clear error when the connector
-class is absent instead of failing deep inside py4j.
+Every write goes over the ES REST API from the executors
+(``foreachPartition`` shipping NDJSON ``_bulk`` chunks), so no
+elasticsearch-spark connector jar is needed, and every transport is
+injectable so the module is unit-testable without a cluster.
 
 Semantics mapped from the reference:
 
-- upsert-by-id      -> ``es.write.operation=upsert`` + ``es.mapping.id``
-- bulk chunk 500    -> ``es.batch.size.entries`` (reference es_chunk_size)
-- request timeout   -> ``es.http.timeout`` (reference es_request_timeout 30s)
-- per-doc retries   -> ``es.batch.write.retry.count`` (reference 10)
-- deletes           -> the connector cannot mix ops in one write (SURVEY
-  risk #4): :func:`apply_actions_batch` splits the action stream and applies
-  upserts first, then deletes — safe under replay because both are
-  idempotent by id, and a delete-then-recreate inside one batch is resolved
-  upstream by the last-writer-wins dedup in ``streaming.jobs``.
+- upsert-by-id      -> :func:`write_upserts_rest` (``_op_type: index``)
+- deletes           -> :func:`write_deletes` (``_op_type: delete``)
+- bulk chunk 500    -> ``EsSinkConfig.batch_entries`` (es_chunk_size)
+- request timeout   -> ``EsSinkConfig.timeout_s`` (es_request_timeout 30s)
+- 429 retries       -> ``EsSinkConfig.retries`` with the reference's
+  exponential backoff (:func:`make_retrying_post`)
+- action streams    -> :func:`apply_actions_batch` applies upserts first,
+  then deletes — safe under replay because both are idempotent by id, and
+  a delete-then-recreate inside one batch is resolved upstream by the
+  last-writer-wins dedup in ``streaming.jobs``.
+- alias changeover  -> :func:`swap_alias`; count reconcile ->
+  :func:`count_index`.
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, functions as F
-
-ES_FORMAT = "org.elasticsearch.spark.sql"
 
 
 @dataclass(frozen=True)
@@ -43,49 +44,11 @@ class EsSinkConfig:
     # per-chunk retries of 429-rejected items -> 30, 60, 120, 200, 200, ...
     initial_backoff_s: float = 30.0
     max_backoff_s: float = 200.0
-    extra_options: dict[str, str] = field(default_factory=dict)
-
-    def writer_options(self, operation: str = "upsert") -> dict[str, str]:
-        opts = {
-            "es.nodes": self.nodes,
-            "es.mapping.id": self.id_column,
-            "es.write.operation": operation,
-            "es.batch.size.entries": str(self.batch_entries),
-            "es.http.timeout": f"{self.timeout_s}s",
-            "es.batch.write.retry.count": str(self.retries),
-            # bulk-load posture; refresh is restored at publish time by the
-            # alias-swap step (reference flows/main_flow.py:187,546)
-            "es.batch.write.refresh": "false",
-        }
-        opts.update(self.extra_options)
-        return opts
 
 
-def _connector_available(spark) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.elasticsearch.spark.sql.DefaultSource"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def write_upserts(df: DataFrame, cfg: EsSinkConfig, index: str) -> None:
-    """Bulk-upsert ``df`` into ``index`` (executors stream partitions to ES;
-    no driver collect). Raises RuntimeError when the connector jar is absent
-    (this test environment) — callers fall back to VersionedSink."""
-    spark = df.sparkSession
-    if not _connector_available(spark):
-        raise RuntimeError(
-            "elasticsearch-spark connector not on the classpath; add the "
-            "org.elasticsearch:elasticsearch-spark-30 jar (production) or "
-            "use pipeline.sinks.VersionedSink (local)"
-        )
-    writer = df.write.format(ES_FORMAT).mode("append")
-    for k, v in cfg.writer_options("upsert").items():
-        writer = writer.option(k, v)
-    writer.save(index)
+def _node_url(cfg: EsSinkConfig) -> str:
+    node = cfg.nodes.split(",")[0].strip()
+    return node if "://" in node else f"http://{node}"
 
 
 class BulkItemError(RuntimeError):
@@ -196,18 +159,11 @@ def write_upserts_rest(
     sleep=time.sleep,
 ) -> None:
     """Bulk-upsert via the ES ``_bulk`` REST API, ``foreachPartition`` —
-    the connector-less fallback mirroring the reference's own write path
-    (``streaming_bulk`` with ``_op_type: index``, flows/main_flow.py:
-    366-395). Each executor task ships NDJSON ``{"index": meta}\\n{doc}``
-    pairs in ``batch_entries`` chunks; idempotent by ``_id`` (a replayed
-    partition re-indexes the same documents). Use when the
-    elasticsearch-spark jar is absent; the connector path
-    (:func:`write_upserts`) is preferred in production for its retry and
-    backpressure handling."""
-    node = cfg.nodes.split(",")[0].strip()
-    if "://" not in node:
-        node = f"http://{node}"
-    url = f"{node}/_bulk"
+    the reference's own write path (``streaming_bulk`` with ``_op_type:
+    index``, flows/main_flow.py:366-395). Each executor task ships NDJSON
+    ``{"index": meta}\\n{doc}`` pairs in ``batch_entries`` chunks; idempotent
+    by ``_id`` (a replayed partition re-indexes the same documents)."""
+    url = f"{_node_url(cfg)}/_bulk"
     id_col, chunk, timeout_s = cfg.id_column, cfg.batch_entries, cfg.timeout_s
     # in-place 429 retry with the reference's 30->200s exponential backoff
     post = make_retrying_post(cfg, post=post, sleep=sleep)
@@ -242,17 +198,12 @@ def write_deletes(
     API, executed ``foreachPartition`` (each executor task ships its own
     NDJSON chunks — no driver collect).
 
-    The elasticsearch-spark connector has NO delete operation
-    (``es.write.operation`` supports index/create/update/upsert only), so
-    routing tombstones through :func:`write_upserts` would silently persist
-    deleted docs as null-_source upserts (ADVICE r1, medium). Deletes
-    therefore take the REST path the reference itself uses
-    (``streaming_bulk`` ``_op_type: delete``, flows/main_flow.py:378-395).
+    Tombstones never go through the upsert writer, which would persist
+    deleted docs as null-_source upserts (ADVICE r1, medium); they take
+    the REST path the reference itself uses (``streaming_bulk``
+    ``_op_type: delete``, flows/main_flow.py:378-395).
     """
-    node = cfg.nodes.split(",")[0].strip()
-    if "://" not in node:
-        node = f"http://{node}"
-    url = f"{node}/_bulk"
+    url = f"{_node_url(cfg)}/_bulk"
     id_col, chunk, timeout_s = cfg.id_column, cfg.batch_entries, cfg.timeout_s
     # in-place 429 retry with the reference's 30->200s exponential backoff
     post = make_retrying_post(cfg, post=post, sleep=sleep)
@@ -283,9 +234,7 @@ def count_index(cfg: EsSinkConfig, index: str, refresh: bool = True) -> int:
     import json as _json
     import urllib.request
 
-    node = cfg.nodes.split(",")[0].strip()
-    if "://" not in node:
-        node = f"http://{node}"
+    node = _node_url(cfg)
     if refresh:
         try:
             urllib.request.urlopen(
@@ -300,11 +249,6 @@ def count_index(cfg: EsSinkConfig, index: str, refresh: bool = True) -> int:
         f"{node}/{index}/_count", timeout=cfg.timeout_s
     ) as resp:
         return int(_json.loads(resp.read())["count"])
-
-
-def _node_url(cfg: EsSinkConfig) -> str:
-    node = cfg.nodes.split(",")[0].strip()
-    return node if "://" in node else f"http://{node}"
 
 
 def _request_json(
@@ -344,7 +288,8 @@ def restore_publish_settings(
 ) -> None:
     """Publish-time settings restore (reference flows/main_flow.py:544-548):
     the bulk writers load with ``refresh_interval=-1 / replicas=0`` posture
-    (``es.batch.write.refresh=false`` here, the reference's DDL at :187);
+    (the ``_bulk`` writers here never request a refresh; the reference's
+    DDL at :187);
     before the alias flip the new physical index goes back to serving
     posture — ``refresh_interval: 30s, number_of_replicas: 1``. Without
     this the published index never refreshes on its own and holds no
@@ -428,12 +373,12 @@ def write_adaptive(
     df: DataFrame,
     cfg: EsSinkConfig,
     index: str,
-    write=write_upserts,
+    write=write_upserts_rest,
     backoff_s: float = 120.0,
     sleep=time.sleep,
 ) -> EsSinkConfig:
     """T6 adaptive bulk sizing (reference ``flows/main_flow.py:439-451``):
-    retry a failed bulk write with a smaller ``es.batch.size.entries`` —
+    retry a failed bulk write with a smaller ``batch_entries`` chunk —
     sleep, shrink per :func:`shrink_chunk`, re-attempt. The write is
     idempotent by id (upsert/delete), so a replay after a partial batch is
     safe — the same guarantee the reference leans on when it rewinds its
@@ -457,7 +402,7 @@ def write_adaptive(
 def apply_actions_batch(
     actions: DataFrame,
     cfg: EsSinkConfig,
-    write=write_upserts,
+    write=write_upserts_rest,
     write_delete=write_deletes,
     adaptive: bool = False,
     sleep=time.sleep,
@@ -465,8 +410,8 @@ def apply_actions_batch(
 ) -> dict[str, int]:
     """Two-phase apply of a doc-action DataFrame (_op_type index|delete,
     grouped per target ``_index``): upserts first, then deletes — each phase
-    through its OWN writer, because the ES connector cannot express deletes
-    (see :func:`write_deletes`). Returns counts per phase. Both writers are
+    through its OWN writer, so a tombstone can never reach the upsert
+    writer (see :func:`write_deletes`). Returns counts per phase. Both writers are
     injectable so tests (and the local pipeline) can capture the per-phase
     frames without an ES cluster. With ``adaptive=True`` each per-index
     write goes through :func:`write_adaptive` (T6), and a chunk size that
@@ -503,13 +448,13 @@ class EsStreamSink:
     :func:`apply_actions_batch` with ``adaptive=True`` and CARRIES the
     shrunken chunk size across micro-batches — a stream that hit ES
     backpressure in batch N starts batch N+1 at the reduced
-    ``es.batch.size.entries``, exactly the reference's behavior for the
+    ``batch_entries``, exactly the reference's behavior for the
     remainder of its cursor stream (flows/main_flow.py:443-451)."""
 
     def __init__(
         self,
         cfg: EsSinkConfig,
-        write=write_upserts,
+        write=write_upserts_rest,
         write_delete=write_deletes,
         sleep=time.sleep,
     ) -> None:

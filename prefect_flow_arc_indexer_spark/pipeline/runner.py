@@ -1,9 +1,9 @@
 """Pipeline drivers reproducing the reference's three entry points (SURVEY
 §3 E1/E2/E3; reference ``main_flow``, ``flows/main_flow.py:603-762``):
 
-- :func:`full_sync` (E1): enumerate indexes -> order smallest-first -> per
-  index: write a fresh generation -> validate -> atomically publish -> count
-  reconcile; failed writes roll back their generation (X5).
+- :func:`full_sync` (E1): enumerate indexes -> order smallest-first -> one
+  write job stages every index's fresh generation -> per index: count
+  reconcile -> atomically publish; failed attempts roll back (X5).
 - :func:`incremental_sync` (E2): per index, count changed rows since the
   inclusive watermark (skip-if-zero, T4), then merge upserts and tombstone
   deletes into the live generation (T3) and advance the watermark (T1).
@@ -18,20 +18,21 @@ Resilience / scheduling semantics carried over from the reference:
 
 - X4 flow-level retries (reference ``flows/main_flow.py:722-723``: 5 retries
   x 500 s on the stream task): both drivers accept ``(retries,
-  retry_delay_s)``; a failed index rolls back its half-written generation,
-  sleeps, and retries — only after exhaustion does the run abort.
-- X3 concurrency classes (reference ``flows/main_flow.py:685-687,721``): the
-  two largest indexes carry the ``pg-indexer-large`` tag; :func:`full_sync`
-  maps the tag onto ``spark.scheduler.pool`` via a task-local property so a
-  fair-scheduler config can cap / isolate the heavyweight jobs exactly as
-  the reference's Prefect concurrency limit does.
+  retry_delay_s)``; a failed write or publish rolls back what it
+  half-wrote, sleeps, and retries — only after exhaustion does the run
+  abort.
+- X3 concurrency classes (reference ``flows/main_flow.py:685-687,721``)
+  have no counterpart: the reference runs its two largest indexes in a
+  separate pool because each index is its own job, while :func:`full_sync`
+  writes every index in one Spark job whose tasks AQE spreads over the
+  cluster.
 
-Spark notes: the per-index loop is *driver-side control flow* (as in the
-reference, where Prefect owns it); the data plane per index is one
-declarative DataFrame job, so Catalyst still sees whole plans. The
-incremental merge is the parquet-sink equivalent of ES upsert+delete-by-id:
+Spark notes: the per-index publish loop is *driver-side control flow* (as
+in the reference, where Prefect owns it); the data plane is declarative
+DataFrame jobs, so Catalyst still sees whole plans. The incremental
+merge is the parquet-sink equivalent of ES upsert+delete-by-id:
 ``old ANTI JOIN batch ids  UNION  batch upserts`` — at production scale the
-same logic is a Delta/Iceberg MERGE or the ES connector's upsert mode.
+same logic is a Delta/Iceberg MERGE or ES upserts and deletes by id.
 """
 
 from __future__ import annotations
@@ -39,7 +40,6 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime
 
@@ -50,12 +50,6 @@ from prefect_flow_arc_indexer_spark.pipeline.sinks import (
     generation_timestamp,
 )
 from prefect_flow_arc_indexer_spark.streaming.watermark import WatermarkStore
-
-# Reference concurrency tags (flows/main_flow.py:685-687,721); the top-2
-# largest indexes run under the -large class (same rule as q_topk_tail).
-POOL_DEFAULT = "pg-indexer"
-POOL_LARGE = "pg-indexer-large"
-N_LARGE = 2
 
 # Reference JSONB probe path (flows/main_flow.py:69:
 # ``document->'schema_maintainer'->>'schema_name'``).
@@ -74,7 +68,6 @@ class SyncReport:
     dropped_orphans: list[str] = field(default_factory=list)
     rebuilt: list[str] = field(default_factory=list)  # T7 forced rebuilds
     retried: dict[str, int] = field(default_factory=dict)  # X4 retries used
-    pools: dict[str, str] = field(default_factory=dict)  # X3 pool per index
     # X7 applied to the ES mirror: alias count == ES _count after the
     # mirror writes (warn-only, like the reference's reconcile)
     mirror_reconcile: dict[str, bool] = field(default_factory=dict)
@@ -109,7 +102,7 @@ def _order_by_size(docs: DataFrame, indexes: list[str]) -> list[str]:
 
 
 def _run_with_retries(
-    index: str,
+    indexes: list[str],
     attempt,
     rollback,
     report: SyncReport,
@@ -119,17 +112,20 @@ def _run_with_retries(
 ) -> None:
     """X4: run ``attempt()`` up to ``1 + retries`` times; every failure
     rolls back via ``rollback()`` (X5) so a retry starts from a clean sink;
-    the last failure re-raises after a final rollback."""
+    the last failure re-raises after a final rollback. ``indexes`` are the
+    ones the attempt writes: each is charged the retries it used, and on
+    exhaustion each is recorded as rolled back."""
     for n in range(retries + 1):
         try:
             attempt()
             if n:
-                report.retried[index] = n
+                for index in indexes:
+                    report.retried[index] = report.retried.get(index, 0) + n
             return
         except Exception:
             rollback()
             if n == retries:
-                report.rolled_back.append(index)
+                report.rolled_back.extend(indexes)
                 raise
             sleep(retry_delay_s)
 
@@ -186,89 +182,120 @@ def _unescape_partition_value(s: str) -> str:
     return "".join(out)
 
 
-def one_pass_live(docs: DataFrame, indexes: list[str]) -> DataFrame:
-    """The fused full-sync data plane: ONE frame holding every index's live
-    documents, pre-shuffled on ``index`` so the ``partitionBy`` write emits
-    one directory per index from few tasks (the
-    ``pipeline.partitioned.write_partitioned`` discipline). A full sync
-    through this frame scans the fact table ONCE, not O(#indexes) times —
-    the Spark-native improvement over the reference's one-SQL-per-index
-    shape (flows/main_flow.py:317-343)."""
-    return (
-        docs.where(F.col("index").isin(indexes) & ~F.col("is_deleted"))
-        .select("index", "id", "document")
-        .repartition(F.col("index"))
+def one_pass_live(
+    docs: DataFrame, indexes: list[str], n_buckets: int | None = None
+) -> DataFrame:
+    """Every index's live documents in ONE frame, rebalanced on ``index``
+    (plus ``bucket`` when ``n_buckets`` lays down the hash-bucketed layout)
+    so the ``partitionBy`` write emits each directory from few tasks. A
+    ``REBALANCE`` rather than a hash repartition: AQE splits a skewed
+    partition, so an index holding a third of the corpus is still written
+    by many tasks. A full sync through this frame scans the fact table
+    ONCE, not O(#indexes) times -- the Spark-native improvement over the
+    reference's one-SQL-per-index shape (flows/main_flow.py:317-343)."""
+    from prefect_flow_arc_indexer_spark.pipeline.bucketed import bucket_of
+
+    live = docs.where(F.col("index").isin(indexes) & ~F.col("is_deleted"))
+    part_cols = ["index"]
+    if n_buckets is not None:
+        live = live.withColumn("bucket", bucket_of(F.col("id"), n_buckets))
+        part_cols.append("bucket")
+    return live.select(*part_cols, "id", "document").hint(
+        "rebalance", *part_cols
     )
 
 
-def _full_sync_one_pass(
+def full_sync(
     spark: SparkSession,
     docs: DataFrame,
     sink: VersionedSink,
-    report: SyncReport,
-    ts: str,
-    retries: int,
-    retry_delay_s: float,
-    sleep,
+    or_ids: list[str] | None = None,
+    now: datetime | None = None,
+    retries: int = 0,
+    retry_delay_s: float = 0.0,
+    sleep=time.sleep,
     bucketed: bool = False,
     n_buckets: int = 16,
-) -> None:
-    """One Spark job writes every index's generation data (partitionBy on
-    ``index`` into a staging dir, single fact-table scan); the per-index
-    write-audit-publish loop stays driver-side: each staged partition
-    directory is renamed into place as its generation, reconciled against
-    per-index expected counts collected by an ``Observation`` ON the write
-    job itself (one conditional count per index — #indexes is
-    catalog-bounded — so reconciliation costs ZERO extra scans), and
-    atomically published. Rollback moves a generation back to staging so a
-    retry can re-promote it."""
+) -> SyncReport:
+    """E1: full rebuild with write-audit-publish per index.
+
+    One ``partitionBy("index")`` write job (a single fact-table scan)
+    stages every index's generation data under ``_stage_<ts>``; an
+    ``Observation`` on that job counts each index's rows, so the audit
+    costs no extra scan. Then, smallest index first, each staged directory
+    is moved into place as its generation, audited against its count and
+    atomically published. The staged write and every per-index publish
+    run under :func:`_run_with_retries`: a failed write removes the stage
+    before its retry, a failed publish moves the generation back to the
+    stage so a retry can re-promote it. ``bucketed=True`` lays generations
+    out hash-bucketed by id (``pipeline.bucketed``) so later incremental
+    merges rewrite only touched buckets.
+    """
     from pyspark.sql import Observation
 
     from prefect_flow_arc_indexer_spark.pipeline.bucketed import (
         _write_marker,
-        bucket_of,
         write_generation_bucketed,
     )
 
-    live_all = one_pass_live(docs, report.indexes)
+    report = SyncReport()
+    if or_ids:
+        indexes = [x.lower() for x in or_ids]  # P8, flows/main_flow.py:640
+    else:
+        indexes = _enumerate_indexes(docs)
+        # X8: orphan cleanup only runs on unpinned full syncs
+        report.dropped_orphans = sink.cleanup_orphans(indexes)
+    if not indexes:
+        return report
+    report.indexes = _order_by_size(docs, indexes)
+    ts = generation_timestamp(now)
     stage = os.path.join(sink.base_dir, f"_stage_{ts}")
     os.makedirs(sink.base_dir, exist_ok=True)
-    obs = Observation(f"one_pass_counts_{ts}")
-    observed = live_all.observe(
-        obs,
-        *(
-            F.sum(F.when(F.col("index") == idx, 1).otherwise(0))
-            .cast("long")
-            .alias(f"c_{n}")
-            for n, idx in enumerate(report.indexes)
-        ),
+    live_all = one_pass_live(
+        docs, report.indexes, n_buckets if bucketed else None
     )
-    part_cols = ["index"]
-    if bucketed:
-        # composes: the same single scan also lays down the hash-bucketed
-        # generation layout the incremental merge path prunes on
-        observed = observed.withColumn(
-            "bucket", bucket_of(F.col("id"), n_buckets)
-        ).repartition(F.col("index"), F.col("bucket"))
-        part_cols = ["index", "bucket"]
-    observed.write.partitionBy(*part_cols).mode("overwrite").parquet(stage)
-    counts = obs.get  # blocks until the write job finishes
-    expected = {
-        idx: counts[f"c_{n}"] or 0 for n, idx in enumerate(report.indexes)
-    }
-    # Resolve each index's staged dir by DECODING Spark's partition-value
-    # escaping (escapePathName writes %XX for chars that are unsafe in a
-    # path, e.g. 'a:b' stages as 'index=a%3Ab'): building 'index={value}'
-    # by hand would miss every escaped name and the guard below would abort
-    # a perfectly good sync. Unknown dirs are left unmapped and the audit
-    # abort still protects against a genuinely missing stage.
-    staged_dirs: dict[str, str] = {}
-    for entry in os.listdir(stage) if os.path.isdir(stage) else []:
-        if entry.startswith("index="):
-            staged_dirs[_unescape_partition_value(entry[len("index="):])] = (
-                os.path.join(stage, entry)
-            )
+    part_cols = ["index", "bucket"] if bucketed else ["index"]
+    expected: dict[str, int] = {}
+
+    def write_stage() -> None:
+        # pyspark refuses to reuse an Observation (REUSE_OBSERVATION): each
+        # attempt observes through a fresh one, named by a random UUID
+        obs = Observation()
+        live_all.observe(
+            obs,
+            *(
+                F.sum(F.when(F.col("index") == idx, 1).otherwise(0))
+                .cast("long")
+                .alias(f"c_{n}")
+                for n, idx in enumerate(report.indexes)
+            ),
+        ).write.partitionBy(*part_cols).mode("overwrite").parquet(stage)
+        counts = obs.get  # blocks until the write job finishes
+        for n, idx in enumerate(report.indexes):
+            expected[idx] = counts[f"c_{n}"] or 0
+
     try:
+        _run_with_retries(
+            report.indexes,
+            write_stage,
+            lambda: shutil.rmtree(stage, ignore_errors=True),
+            report,
+            retries,
+            retry_delay_s,
+            sleep,
+        )
+        # Resolve each index's staged dir by DECODING Spark's
+        # partition-value escaping (escapePathName writes %XX for chars
+        # that are unsafe in a path, e.g. 'a:b' stages as 'index=a%3Ab'):
+        # building 'index={value}' by hand would miss every escaped name and
+        # the audit below would abort a perfectly good sync.
+        staged_dirs = {
+            _unescape_partition_value(entry[len("index="):]): os.path.join(
+                stage, entry
+            )
+            for entry in (os.listdir(stage) if os.path.isdir(stage) else [])
+            if entry.startswith("index=")
+        }
         for index in report.indexes:
             part_dir = staged_dirs.get(
                 index, os.path.join(stage, f"index={index}")
@@ -278,7 +305,7 @@ def _full_sync_one_pass(
 
             def attempt(index=index, part_dir=part_dir, gen=gen,
                         gen_path=gen_path):
-                want = expected.get(index, 0)
+                want = expected[index]
                 if os.path.isdir(part_dir) and not os.path.isdir(gen_path):
                     shutil.move(part_dir, gen_path)
                     if bucketed:
@@ -287,18 +314,17 @@ def _full_sync_one_pass(
                     actual = spark.read.parquet(gen_path).count()
                 elif want > 0:
                     # the write job counted live docs for this index but its
-                    # staged partition dir is absent (partition-value
-                    # escaping of an unusual index name, prior partial
-                    # failure): publishing would commit an EMPTY generation
-                    # over live data — abort so _run_with_retries rolls back,
-                    # mirroring compact()'s audit-abort discipline
+                    # staged partition dir is absent: publishing would
+                    # commit an EMPTY generation over live data -- abort so
+                    # _run_with_retries rolls back, mirroring compact()'s
+                    # audit-abort discipline
                     raise RuntimeError(
                         f"one-pass stage for {index!r} missing: expected "
                         f"{want} docs but no staged partition at {part_dir}"
                     )
                 else:
                     # an index whose docs are all tombstones writes no
-                    # partition — publish an explicitly empty generation,
+                    # partition -- publish an explicitly empty generation,
                     # in the bucketed layout when requested so the index
                     # keeps its O(touched-buckets) merge cost class
                     empty = docs.where(F.lit(False)).select("id", "document")
@@ -328,124 +354,11 @@ def _full_sync_one_pass(
                     shutil.rmtree(gen_path, ignore_errors=True)
 
             _run_with_retries(
-                index, attempt, rollback, report, retries, retry_delay_s,
+                [index], attempt, rollback, report, retries, retry_delay_s,
                 sleep,
             )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-def full_sync(
-    spark: SparkSession,
-    docs: DataFrame,
-    sink: VersionedSink,
-    or_ids: list[str] | None = None,
-    now: datetime | None = None,
-    retries: int = 0,
-    retry_delay_s: float = 0.0,
-    sleep=time.sleep,
-    parallel_large: bool = False,
-    one_pass: bool = False,
-    bucketed: bool = False,
-    n_buckets: int = 16,
-) -> SyncReport:
-    """E1: full rebuild with write-audit-publish per index.
-    ``bucketed=True`` lays generations out hash-bucketed by id
-    (``pipeline.bucketed``) so later incremental merges rewrite only
-    touched buckets.
-
-    ``parallel_large=True`` finishes X3 end-to-end (reference
-    ``run_large_indexer_parallel``, flows/main_flow.py:685-687,721): the
-    small indexes still run smallest-first sequentially, then the
-    ``pg-indexer-large`` class is submitted CONCURRENTLY from a driver
-    thread pool — each thread sets its own thread-local scheduler pool, so
-    a FAIR scheduler config actually sees both pools at once.
-
-    ``one_pass=True`` fuses the data plane: one ``partitionBy("index")``
-    write job (single fact-table scan) feeds every generation; publish/
-    reconcile remain per-index and driver-side. Implies the data plane is
-    already one parallel job, so ``parallel_large`` is moot there.
-    """
-    report = SyncReport()
-    if or_ids:
-        indexes = [x.lower() for x in or_ids]  # P8, flows/main_flow.py:640
-    else:
-        indexes = _enumerate_indexes(docs)
-        # X8: orphan cleanup only runs on unpinned full syncs
-        report.dropped_orphans = sink.cleanup_orphans(indexes)
-    if not indexes:
-        return report
-    report.indexes = _order_by_size(docs, indexes)
-    # X3: _order_by_size is ascending, so the top-N_LARGE are the tail
-    large = set(report.indexes[-N_LARGE:])
-    ts = generation_timestamp(now)
-    sc = spark.sparkContext
-    for index in report.indexes:
-        report.pools[index] = POOL_LARGE if index in large else POOL_DEFAULT
-
-    if one_pass:
-        _full_sync_one_pass(
-            spark, docs, sink, report, ts, retries, retry_delay_s, sleep,
-            bucketed=bucketed, n_buckets=n_buckets,
-        )
-        return report
-
-    def _sync_one(index: str) -> None:
-        # setLocalProperty is thread-local (pinned-thread mode), so each
-        # concurrent driver thread carries its own pool tag
-        sc.setLocalProperty("spark.scheduler.pool", report.pools[index])
-        try:
-            live = docs.where(
-                (F.col("index") == index) & ~F.col("is_deleted")
-            ).select("id", "document")
-            gen = sink.generation_name(index, ts)
-
-            def attempt(index=index, live=live, gen=gen):
-                if bucketed:
-                    from prefect_flow_arc_indexer_spark.pipeline.bucketed import (  # noqa: E501
-                        write_generation_bucketed,
-                    )
-
-                    write_generation_bucketed(
-                        sink, live, index, ts, n_buckets
-                    )
-                else:
-                    sink.write_generation(live, index, ts)
-                # X7: count reconciliation before the swap commits the alias
-                expected = live.count()
-                actual = spark.read.parquet(sink.generation_path(gen)).count()
-                report.reconcile_ok[index] = expected == actual
-                sink.publish(index, gen)
-                report.written[index] = actual
-
-            _run_with_retries(
-                index,
-                attempt,
-                lambda gen=gen: sink.drop_generation(gen),
-                report,
-                retries,
-                retry_delay_s,
-                sleep,
-            )
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
-
-    small = [i for i in report.indexes if i not in large]
-    big = [i for i in report.indexes if i in large]
-    if parallel_large and len(big) > 1:
-        for index in small:
-            _sync_one(index)
-        with ThreadPoolExecutor(
-            max_workers=len(big), thread_name_prefix="pg-indexer-large"
-        ) as pool:
-            futures = [pool.submit(_sync_one, i) for i in big]
-            errs = [f.exception() for f in futures]
-        for e in errs:
-            if e is not None:
-                raise e
-    else:
-        for index in report.indexes:
-            _sync_one(index)
     return report
 
 
@@ -540,7 +453,7 @@ def incremental_sync(
                 sink.publish(index, gen)
 
             _run_with_retries(
-                index,
+                [index],
                 attempt,
                 lambda gen=gen: sink.drop_generation(gen),
                 report,
@@ -578,7 +491,7 @@ def incremental_sync(
                 sink.publish(index, gen)
 
         _run_with_retries(
-            index,
+            [index],
             attempt,
             lambda gen=gen: sink.drop_generation(gen),
             report,

@@ -54,39 +54,18 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
-def fair_scheduler_confs() -> dict[str, str]:
-    """Build-time confs that turn the X3 pool TAGS into real scheduling:
-    FAIR mode + the shipped allocation file declaring the ``pg-indexer`` /
-    ``pg-indexer-large`` pools (double weight + min share for the large
-    class). Without these, ``spark.scheduler.pool`` labels are accepted but
-    every job still queues FIFO — the reference's concurrency limit
-    (flows/main_flow.py:685-687) needs the FAIR split to be real."""
-    alloc = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "pipeline",
-        "fairscheduler.xml",
-    )
-    return {
-        "spark.scheduler.mode": "FAIR",
-        "spark.scheduler.allocation.file": alloc,
-    }
-
-
 def get_spark(
     app_name: str = "arc-indexer-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
-    fair_pools: bool = False,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
     ``shuffle_partitions`` defaults to the core count: right for local test
     scale; a production deployment sizes it to ~2-3x total executor cores or
-    lets AQE coalesce from a high initial value. ``fair_pools=True`` adds
-    :func:`fair_scheduler_confs` (scheduler mode is build-time only — it
-    cannot be applied to an already-running session, so the sync CLI passes
-    it here when ``--parallel-large`` is requested).
+    lets AQE coalesce from a high initial value. ``extra_confs`` override
+    the tuned defaults.
     """
     par = _default_parallelism()
     builder = (
@@ -95,8 +74,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or par))
     )
     confs = {**_BUILD_CONFS, **RUNTIME_CONFS, **(extra_confs or {})}
-    if fair_pools:
-        confs.update(fair_scheduler_confs())
     for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

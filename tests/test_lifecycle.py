@@ -37,7 +37,7 @@ def test_one_pass_bucketed_full_sync_then_merge_then_compact(spark, tmp_path):
     #    hash-bucketed layout for every index
     report = full_sync(
         spark, docs0, sink, now=datetime(2024, 2, 1),
-        one_pass=True, bucketed=True, n_buckets=N_BUCKETS,
+        bucketed=True, n_buckets=N_BUCKETS,
     )
     assert report.written == {"beta": 10, "alpha": 40}
     assert all(report.reconcile_ok.values())
@@ -114,7 +114,7 @@ def test_one_pass_bucketed_respects_or_ids(spark, tmp_path):
     docs = _docs(spark, _rows(6) + _rows(4, index="beta"))
     report = full_sync(
         spark, docs, sink, or_ids=["ALPHA"], now=datetime(2024, 2, 1),
-        one_pass=True, bucketed=True, n_buckets=N_BUCKETS,
+        bucketed=True, n_buckets=N_BUCKETS,
     )
     assert report.indexes == ["alpha"]  # P8 lowercase + pinning
     assert not sink.alias_exists("beta")

@@ -162,23 +162,15 @@ def test_watermark_store_roundtrip(tmp_path):
     assert json.load(open(tmp_path / "wm.json"))["p"].startswith("2024-03-01")
 
 
-def test_es_sink_writer_options_and_two_phase(spark):
-    """ES sink maps the reference's bulk-tuning defaults onto connector
-    options, and the action apply is two-phase: all upserts before any
-    delete, grouped per target index."""
+def test_es_sink_two_phase_apply(spark):
+    """The action apply is two-phase: all upserts before any delete,
+    grouped per target index."""
     from prefect_flow_arc_indexer_spark.pipeline.es_sink import (
         EsSinkConfig,
         apply_actions_batch,
-        write_upserts,
     )
 
     cfg = EsSinkConfig(nodes="es:9200", id_column="_id")
-    opts = cfg.writer_options()
-    assert opts["es.write.operation"] == "upsert"
-    assert opts["es.batch.size.entries"] == "500"  # reference es_chunk_size
-    assert opts["es.http.timeout"] == "30s"
-    assert opts["es.batch.write.retry.count"] == "10"
-
     actions = spark.createDataFrame(
         [
             ("idx_a", "1", "index", '{"v":1}'),
@@ -201,18 +193,13 @@ def test_es_sink_writer_options_and_two_phase(spark):
             order.append("delete"),
         ),
     )
-    # deletes go through the DELETE writer only — never the upsert path
-    # (the ES connector has no delete op), and strictly after all upserts
+    # deletes go through the DELETE writer only — never the upsert path —
+    # and strictly after all upserts
     assert upsert_calls == [("idx_a", ["1"]), ("idx_b", ["3"])] or sorted(
         upsert_calls
     ) == [("idx_a", ["1"]), ("idx_b", ["3"])]
     assert delete_calls == [("idx_a", ["2"])]
     assert order.index("delete") == len(order) - 1
-
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="connector"):
-        write_upserts(actions, cfg, "idx_a")
 
 
 def test_es_sink_rest_delete_bulk_bodies(spark, tmp_path):
@@ -374,36 +361,115 @@ def test_flow_level_retries_exhaust_and_rollback(spark, sink, monkeypatch):
     assert sink.list_generations() == []  # every attempt rolled back
 
 
-def test_scheduler_pool_tags_top2_large(spark, sink, monkeypatch):
-    """X3 (reference flows/main_flow.py:685-687,721): the two largest
-    indexes run under the pg-indexer-large scheduler pool; the local
-    property is live while their jobs execute and cleared afterwards."""
-    rows = BASE_ROWS + [
+def _stage_dirs(sink):
+    return [d for d in os.listdir(sink.base_dir) if d.startswith("_stage")]
+
+
+def test_staged_write_retries_then_rolls_back(spark, tmp_path, monkeypatch):
+    """X4 + X5 on the single-scan write: a failed staged write removes its
+    stage and retries; once retries are exhausted every index is recorded
+    as rolled back, nothing is published and no stage is left behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import prefect_flow_arc_indexer_spark.pipeline.runner as runner_mod
+
+    original = DataFrameWriter.parquet
+    calls = {"n": 0, "fail": 1}
+
+    def lossy_parquet(self, path, *args, **kwargs):
+        # the write lands, then the attempt fails: the stage is half-made
+        original(self, path, *args, **kwargs)
+        if "_stage_" in path:
+            calls["n"] += 1
+            if calls["n"] <= calls["fail"]:
+                raise RuntimeError("staged write lost")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", lossy_parquet)
+    docs = _docs(spark, BASE_ROWS)
+    ok = VersionedSink(str(tmp_path / "ok"))
+    slept = []
+    report = full_sync(
+        spark, docs, ok, now=datetime(2024, 2, 1), retries=1,
+        retry_delay_s=2.0, sleep=slept.append,
+    )
+    assert calls["n"] == 2 and slept == [2.0]
+    assert report.retried == {"beta": 1, "alpha": 1}
+    assert report.rolled_back == []
+    assert report.written == {"beta": 1, "alpha": 2}
+    assert not _stage_dirs(ok)
+
+    reports = []
+
+    class SpyReport(SyncReport):
+        def __init__(self):
+            super().__init__()
+            reports.append(self)
+
+    monkeypatch.setattr(runner_mod, "SyncReport", SpyReport)
+    calls.update(n=0, fail=2)
+    bad = VersionedSink(str(tmp_path / "bad"))
+    with pytest.raises(RuntimeError, match="staged write lost"):
+        full_sync(
+            spark, docs, bad, now=datetime(2024, 2, 1), retries=1,
+            sleep=slept.append,
+        )
+    assert calls["n"] == 2
+    assert sorted(reports[0].rolled_back) == ["alpha", "beta"]
+    assert reports[0].written == {}
+    assert bad.read_manifest() == {}
+    assert bad.list_generations() == []
+    assert not _stage_dirs(bad)
+
+
+def _three_index_rows():
+    return BASE_ROWS + [
         ("gamma", "20", '{"v": 20}', False, "2024-01-01 00:00:00"),
         ("gamma", "21", '{"v": 21}', False, "2024-01-01 00:00:00"),
         ("gamma", "22", '{"v": 22}', False, "2024-01-01 00:00:00"),
     ]
-    seen_pools = {}
-    original = VersionedSink.write_generation
 
-    def spying_write(self, df, alias, timestamp):
-        seen_pools[alias] = df.sparkSession.sparkContext.getLocalProperty(
-            "spark.scheduler.pool"
-        )
-        return original(self, df, alias, timestamp)
 
-    monkeypatch.setattr(VersionedSink, "write_generation", spying_write)
+def test_one_pass_full_sync_matches_python_live_set(spark, tmp_path):
+    """Every published alias holds exactly the live (id, document) rows of
+    its index, computed here in plain Python from the input rows."""
+    rows = _three_index_rows()
+    want: dict[str, list] = {}
+    for index, id_, document, is_deleted, _ in rows:
+        if not is_deleted:
+            want.setdefault(index, []).append((id_, document))
+    sink = VersionedSink(str(tmp_path / "one"))
     report = full_sync(spark, _docs(spark, rows), sink, now=datetime(2024, 2, 1))
-    # sizes: beta=1 < alpha=2 < gamma=3 -> alpha+gamma are the top 2
-    assert report.pools == {
-        "beta": "pg-indexer",
-        "alpha": "pg-indexer-large",
-        "gamma": "pg-indexer-large",
-    }
-    assert seen_pools == report.pools  # property was live during each write
-    assert (
-        spark.sparkContext.getLocalProperty("spark.scheduler.pool") is None
-    )
+    # ascending size: beta(1) < alpha(3 rows, 1 tombstone) = gamma(3)
+    assert report.indexes == ["beta", "alpha", "gamma"]
+    assert report.written == {i: len(d) for i, d in want.items()}
+    assert report.reconcile_ok == dict.fromkeys(want, True)
+    for index, live in want.items():
+        assert sorted(
+            (r.id, r.document) for r in sink.read_alias(spark, index).collect()
+        ) == sorted(live)
+    assert not _stage_dirs(sink)
+
+
+def test_one_pass_plan_scans_fact_table_once(spark, tmp_path):
+    """The full-sync data plane is ONE FileScan (not one per index) and ONE
+    shuffle, a rebalance rather than a hash repartition, so AQE can split
+    a large index over many write tasks; the bucketed layout rebalances on
+    (index, bucket) in that same shuffle."""
+    from prefect_flow_arc_indexer_spark.pipeline.runner import one_pass_live
+
+    src = str(tmp_path / "docs_parquet")
+    _docs(spark, _three_index_rows()).write.parquet(src)
+    docs = spark.read.parquet(src)
+    for n_buckets in (None, 4):
+        plan = (
+            one_pass_live(docs, ["alpha", "beta", "gamma"], n_buckets)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert plan.count("FileScan parquet") == 1
+        assert plan.count("Exchange") == 1
+        assert "REBALANCE_PARTITIONS_BY_COL" in plan
 
 
 def test_adaptive_bulk_shrink_steps_down(spark):
@@ -559,9 +625,11 @@ def test_sink_compaction_reduces_files_and_preserves_rows(spark, sink):
     generation — readers only ever see a complete generation."""
     rows = [("alpha", str(i), '{"v": %d}' % i, False, "2024-01-01 00:00:00")
             for i in range(200)]
-    docs = _docs(spark, rows).repartition(16)
-    full_sync(spark, docs, sink, now=datetime(2024, 2, 1))
-    old_gen = sink.read_manifest()["alpha"]
+    # written straight through the sink: full_sync's rebalanced write
+    # already coalesces 200 rows into one file
+    docs = _docs(spark, rows).select("id", "document").repartition(16)
+    old_gen = sink.write_generation(docs, "alpha", "2024-02-01t00.00.00")
+    sink.publish("alpha", old_gen)
     old_files = [
         f for f in os.listdir(sink.generation_path(old_gen))
         if f.endswith(".parquet")

@@ -5,7 +5,6 @@ and the CLI's ES mirror path."""
 from __future__ import annotations
 
 import json
-import os
 from datetime import datetime
 
 import pytest
@@ -231,101 +230,7 @@ def test_cli_es_nodes_mirrors_published_indexes(tmp_path, capsys, monkeypatch):
     assert delete_calls == []
 
 
-# -- X3: concurrent submission of the large-index class ----------------------
-
-
-def _three_index_rows():
-    return BASE_ROWS + [
-        ("gamma", "20", '{"v": 20}', False, "2024-01-01 00:00:00"),
-        ("gamma", "21", '{"v": 21}', False, "2024-01-01 00:00:00"),
-        ("gamma", "22", '{"v": 22}', False, "2024-01-01 00:00:00"),
-    ]
-
-
-def test_parallel_large_runs_both_pools_concurrently(spark, sink, monkeypatch):
-    """full_sync(parallel_large=True): the two pg-indexer-large indexes are
-    submitted from concurrent driver threads (reference
-    run_large_indexer_parallel). A 2-party barrier inside write_generation
-    proves overlap — if submission were sequential the first writer would
-    time out waiting for the second."""
-    import threading
-
-    barrier = threading.Barrier(2)
-    seen: list[tuple[str, str | None]] = []
-    orig = sink.write_generation
-
-    def barrier_write(df, alias, ts):
-        pool = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
-        seen.append((alias, pool))
-        if pool == "pg-indexer-large":
-            barrier.wait(timeout=60)  # both large writers must be in flight
-        return orig(df, alias, ts)
-
-    monkeypatch.setattr(sink, "write_generation", barrier_write)
-    report = full_sync(
-        spark,
-        _docs(spark, _three_index_rows()),
-        sink,
-        now=datetime(2024, 2, 1),
-        parallel_large=True,
-    )
-    # ascending size: beta(1) < alpha(2 live) < gamma(3) -> large = top 2
-    assert report.indexes == ["beta", "alpha", "gamma"]
-    assert report.pools == {
-        "beta": "pg-indexer",
-        "alpha": "pg-indexer-large",
-        "gamma": "pg-indexer-large",
-    }
-    large_seen = {a: p for a, p in seen if p == "pg-indexer-large"}
-    assert set(large_seen) == {"alpha", "gamma"}
-    # SyncReport unchanged vs the sequential contract
-    assert report.written == {"beta": 1, "alpha": 2, "gamma": 3}
-    assert all(report.reconcile_ok.values())
-    assert {r.id for r in sink.read_alias(spark, "gamma").collect()} == {
-        "20", "21", "22"
-    }
-
-
-# -- one-pass full-sync data plane -------------------------------------------
-
-
-def test_one_pass_full_sync_matches_sequential(spark, tmp_path):
-    docs = _docs(spark, _three_index_rows())
-    seq = VersionedSink(str(tmp_path / "seq"))
-    one = VersionedSink(str(tmp_path / "one"))
-    t = datetime(2024, 2, 1)
-    r_seq = full_sync(spark, docs, seq, now=t)
-    r_one = full_sync(spark, docs, one, now=t, one_pass=True)
-    assert r_one.indexes == r_seq.indexes
-    assert r_one.written == r_seq.written
-    assert r_one.reconcile_ok == r_seq.reconcile_ok
-    assert r_one.pools == r_seq.pools
-    for idx in r_seq.indexes:
-        assert sorted(
-            (r.id, r.document)
-            for r in one.read_alias(spark, idx).collect()
-        ) == sorted(
-            (r.id, r.document) for r in seq.read_alias(spark, idx).collect()
-        )
-    # staging directory cleaned up
-    assert not [d for d in os.listdir(one.base_dir) if d.startswith("_stage")]
-
-
-def test_one_pass_plan_scans_fact_table_once(spark, tmp_path):
-    """The fused data plane is ONE FileScan: the per-index filter loop
-    (O(#indexes) scans) is gone."""
-    from prefect_flow_arc_indexer_spark.pipeline.runner import one_pass_live
-
-    src = str(tmp_path / "docs_parquet")
-    _docs(spark, _three_index_rows()).write.parquet(src)
-    docs = spark.read.parquet(src)
-    plan = (
-        one_pass_live(docs, ["alpha", "beta", "gamma"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("FileScan parquet") == 1
+# -- single-scan full sync ------------------------------------------------
 
 
 def test_one_pass_publishes_empty_generation_for_all_tombstone_index(
@@ -335,18 +240,15 @@ def test_one_pass_publishes_empty_generation_for_all_tombstone_index(
         ("gamma", "30", '{"v": 30}', True, "2024-01-05 00:00:00"),
     ]
     one = VersionedSink(str(tmp_path / "one"))
-    report = full_sync(
-        spark, _docs(spark, rows), one, now=datetime(2024, 2, 1),
-        one_pass=True,
-    )
+    report = full_sync(spark, _docs(spark, rows), one, now=datetime(2024, 2, 1))
     assert report.written["gamma"] == 0
     assert report.reconcile_ok["gamma"] is True
     assert one.alias_exists("gamma")
 
 
 def test_cli_one_pass_bucketed_flags(tmp_path, capsys):
-    """The round-5 sync modes are reachable from the CLI: --one-pass lays
-    down --bucketed generations through the single-scan data plane."""
+    """The CLI's --bucketed full sync lays down bucketed generations through
+    the single-scan data plane."""
     import json as _json
 
     from prefect_flow_arc_indexer_spark.__main__ import main
@@ -358,7 +260,6 @@ def test_cli_one_pass_bucketed_flags(tmp_path, capsys):
             "--source", "/root/testdata/sf0.001",
             "--sink-dir", sink_dir,
             "--full-sync",
-            "--one-pass",
             "--bucketed",
             "--n-buckets", "4",
         ]
@@ -369,28 +270,3 @@ def test_cli_one_pass_bucketed_flags(tmp_path, capsys):
     sink = VersionedSink(sink_dir)
     for idx, gen in sink.read_manifest().items():
         assert bucket_count(sink, gen) == 4, idx
-
-
-def test_fair_scheduler_confs_point_at_valid_pool_file():
-    """X3 pools must be REAL scheduling, not labels: the conf helper turns
-    on FAIR mode with an allocation file declaring exactly the pool names
-    the runner assigns."""
-    import xml.etree.ElementTree as ET
-
-    from prefect_flow_arc_indexer_spark.pipeline.runner import (
-        POOL_DEFAULT,
-        POOL_LARGE,
-    )
-    from prefect_flow_arc_indexer_spark.session import fair_scheduler_confs
-
-    confs = fair_scheduler_confs()
-    assert confs["spark.scheduler.mode"] == "FAIR"
-    path = confs["spark.scheduler.allocation.file"]
-    assert os.path.isfile(path)
-    pools = {
-        p.get("name"): {c.tag: c.text for c in p}
-        for p in ET.parse(path).getroot().findall("pool")
-    }
-    assert set(pools) == {POOL_DEFAULT, POOL_LARGE}
-    # the large class outweighs the default one
-    assert int(pools[POOL_LARGE]["weight"]) > int(pools[POOL_DEFAULT]["weight"])

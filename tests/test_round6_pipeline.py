@@ -395,7 +395,7 @@ def test_one_pass_handles_partition_escaped_index_names(spark, tmp_path):
             ("a:b", "2", '{"v": 2}', False, "2024-01-01 00:00:00"),
         ],
     )
-    report = full_sync(spark, docs, sink, now=datetime(2024, 2, 1), one_pass=True)
+    report = full_sync(spark, docs, sink, now=datetime(2024, 2, 1))
     assert report.written == {"a:b": 2}
     assert report.reconcile_ok == {"a:b": True}
     assert {r.id for r in sink.read_alias(spark, "a:b").collect()} == {"1", "2"}
@@ -415,9 +415,7 @@ def test_one_pass_missing_stage_aborts_instead_of_empty_publish(
     # dir never appears while the observed count says 1 doc exists
     monkeypatch.setattr(runner_mod.shutil, "move", lambda src, dst: None)
     with pytest.raises(RuntimeError, match="one-pass (stage|audit)"):
-        runner_mod.full_sync(
-            spark, docs, sink, now=datetime(2024, 2, 1), one_pass=True
-        )
+        runner_mod.full_sync(spark, docs, sink, now=datetime(2024, 2, 1))
     assert "alpha" not in sink.read_manifest()
 
 
@@ -438,7 +436,7 @@ def test_one_pass_all_tombstone_bucketed_keeps_bucket_marker(spark, tmp_path):
     )
     report = full_sync(
         spark, docs, sink, now=datetime(2024, 2, 1),
-        one_pass=True, bucketed=True, n_buckets=4,
+        bucketed=True, n_buckets=4,
     )
     assert report.written == {"alpha": 1, "ghost": 0}
     manifest = sink.read_manifest()
