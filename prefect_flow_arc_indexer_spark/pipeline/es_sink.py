@@ -6,7 +6,8 @@
 Every write goes over the ES REST API from the executors
 (``foreachPartition`` shipping NDJSON ``_bulk`` chunks), so no
 elasticsearch-spark connector jar is needed, and every transport is
-injectable so the module is unit-testable without a cluster.
+injectable so the module is unit-testable without a cluster. Each row names
+its target index in an ``_index`` column, so one job writes every index.
 
 Semantics mapped from the reference:
 
@@ -16,6 +17,8 @@ Semantics mapped from the reference:
 - request timeout   -> ``EsSinkConfig.timeout_s`` (es_request_timeout 30s)
 - 429 retries       -> ``EsSinkConfig.retries`` with the reference's
   exponential backoff (:func:`make_retrying_post`)
+- chunk shrink      -> :func:`write_adaptive`, through
+  :func:`apply_actions_batch` and :class:`EsStreamSink` only
 - action streams    -> :func:`apply_actions_batch` applies upserts first,
   then deletes — safe under replay because both are idempotent by id, and
   a delete-then-recreate inside one batch is resolved upstream by the
@@ -133,8 +136,9 @@ def make_retrying_post(cfg: EsSinkConfig, post=_post_bulk, sleep=time.sleep):
     — safe because every op is idempotent by ``_id``, the same guarantee
     ``streaming_bulk`` leans on.  Non-retryable item failures (mapping
     errors, 4xx other than 429) raise immediately; exhausted retries
-    re-raise the last error so :func:`write_adaptive`'s chunk-shrink
-    backpressure (the reference's OUTER loop) takes over."""
+    re-raise the last error: the CLI mirror fails the run, while under
+    :func:`apply_actions_batch` :func:`write_adaptive`'s chunk shrink (the
+    reference's OUTER loop) takes over."""
     delays = backoff_schedule(cfg)
 
     def _retrying(url: str, body: bytes, timeout_s: int) -> int:
@@ -150,19 +154,17 @@ def make_retrying_post(cfg: EsSinkConfig, post=_post_bulk, sleep=time.sleep):
     return _retrying
 
 
-def write_upserts_rest(
+def _ship(
     df: DataFrame,
     cfg: EsSinkConfig,
-    index: str,
-    post=_post_bulk,
-    source_column: str = "_source",
-    sleep=time.sleep,
+    op: str,
+    source_column: str | None,
+    post,
+    sleep,
 ) -> None:
-    """Bulk-upsert via the ES ``_bulk`` REST API, ``foreachPartition`` —
-    the reference's own write path (``streaming_bulk`` with ``_op_type:
-    index``, flows/main_flow.py:366-395). Each executor task ships NDJSON
-    ``{"index": meta}\\n{doc}`` pairs in ``batch_entries`` chunks; idempotent
-    by ``_id`` (a replayed partition re-indexes the same documents)."""
+    """The bulk writers' shared partition loop: each executor task ships
+    NDJSON ``{op: {"_index", "_id"}}`` lines (plus the row's document when
+    ``source_column`` is given) in ``batch_entries`` chunks."""
     url = f"{_node_url(cfg)}/_bulk"
     id_col, chunk, timeout_s = cfg.id_column, cfg.batch_entries, cfg.timeout_s
     # in-place 429 retry with the reference's 30->200s exponential backoff
@@ -173,55 +175,51 @@ def write_upserts_rest(
 
         buf: list[bytes] = []
         for row in rows:
-            meta = {"index": {"_index": index, "_id": str(row[id_col])}}
-            src = row[source_column]
-            doc = src if isinstance(src, str) else _json.dumps(src)
-            buf.append(
-                _json.dumps(meta).encode() + b"\n" + doc.encode() + b"\n"
-            )
+            meta = {op: {"_index": row["_index"], "_id": str(row[id_col])}}
+            line = _json.dumps(meta).encode() + b"\n"
+            if source_column is not None:
+                src = row[source_column]
+                doc = src if isinstance(src, str) else _json.dumps(src)
+                line += doc.encode() + b"\n"
+            buf.append(line)
             if len(buf) >= chunk:
                 post(url, b"".join(buf), timeout_s)
                 buf.clear()
         if buf:
             post(url, b"".join(buf), timeout_s)
 
-    df.select(F.col(id_col), F.col(source_column)).foreachPartition(
-        _partition
-    )
+    cols = ["_index", id_col] + ([source_column] if source_column else [])
+    df.select(*cols).foreachPartition(_partition)
+
+
+def write_upserts_rest(
+    df: DataFrame,
+    cfg: EsSinkConfig,
+    post=_post_bulk,
+    source_column: str = "_source",
+    sleep=time.sleep,
+) -> None:
+    """Bulk-upsert every row of ``df`` into the index its ``_index`` column
+    names via the ES ``_bulk`` REST API, ``foreachPartition`` — the
+    reference's own write path (``streaming_bulk`` with ``_op_type:
+    index``, flows/main_flow.py:366-395). Idempotent by ``_id`` (a replayed
+    partition re-indexes the same documents)."""
+    _ship(df, cfg, "index", source_column, post, sleep)
 
 
 def write_deletes(
-    df: DataFrame, cfg: EsSinkConfig, index: str, post=_post_bulk,
-    sleep=time.sleep,
+    df: DataFrame, cfg: EsSinkConfig, post=_post_bulk, sleep=time.sleep
 ) -> None:
-    """Bulk-delete the ids in ``df`` from ``index`` via the ES ``_bulk`` REST
-    API, executed ``foreachPartition`` (each executor task ships its own
-    NDJSON chunks — no driver collect).
+    """Bulk-delete each row's id from the index its ``_index`` column names
+    via the ES ``_bulk`` REST API, executed ``foreachPartition`` (each
+    executor task ships its own NDJSON chunks — no driver collect).
 
     Tombstones never go through the upsert writer, which would persist
     deleted docs as null-_source upserts (ADVICE r1, medium); they take
     the REST path the reference itself uses (``streaming_bulk``
     ``_op_type: delete``, flows/main_flow.py:378-395).
     """
-    url = f"{_node_url(cfg)}/_bulk"
-    id_col, chunk, timeout_s = cfg.id_column, cfg.batch_entries, cfg.timeout_s
-    # in-place 429 retry with the reference's 30->200s exponential backoff
-    post = make_retrying_post(cfg, post=post, sleep=sleep)
-
-    def _partition(rows) -> None:
-        import json as _json
-
-        buf: list[bytes] = []
-        for row in rows:
-            meta = {"delete": {"_index": index, "_id": str(row[id_col])}}
-            buf.append(_json.dumps(meta).encode() + b"\n")
-            if len(buf) >= chunk:
-                post(url, b"".join(buf), timeout_s)
-                buf.clear()
-        if buf:
-            post(url, b"".join(buf), timeout_s)
-
-    df.select(F.col(id_col)).foreachPartition(_partition)
+    _ship(df, cfg, "delete", None, post, sleep)
 
 
 def count_index(cfg: EsSinkConfig, index: str, refresh: bool = True) -> int:
@@ -372,7 +370,6 @@ def shrink_chunk(entries: int) -> int:
 def write_adaptive(
     df: DataFrame,
     cfg: EsSinkConfig,
-    index: str,
     write=write_upserts_rest,
     backoff_s: float = 120.0,
     sleep=time.sleep,
@@ -388,7 +385,7 @@ def write_adaptive(
     current = cfg
     while True:
         try:
-            write(df, current, index)
+            write(df, current)
             return current
         except Exception:
             if current.batch_entries <= 1:
@@ -408,34 +405,38 @@ def apply_actions_batch(
     sleep=time.sleep,
     out_cfg: list | None = None,
 ) -> dict[str, int]:
-    """Two-phase apply of a doc-action DataFrame (_op_type index|delete,
-    grouped per target ``_index``): upserts first, then deletes — each phase
-    through its OWN writer, so a tombstone can never reach the upsert
-    writer (see :func:`write_deletes`). Returns counts per phase. Both writers are
-    injectable so tests (and the local pipeline) can capture the per-phase
-    frames without an ES cluster. With ``adaptive=True`` each per-index
-    write goes through :func:`write_adaptive` (T6), and a chunk size that
-    had to shrink for one index CARRIES OVER to the rest of the batch —
+    """Two-phase apply of a doc-action DataFrame (``_op_type`` index|delete,
+    each row targeting its own ``_index``): one upsert write, then one
+    delete write, each across every index and each through its OWN writer,
+    so a tombstone can never reach the upsert writer (see
+    :func:`write_deletes`). A phase with no rows is skipped. Returns the
+    row count per ``"{op}:{index}"``, taken by one aggregation. Both
+    writers are injectable so tests (and the local pipeline) can capture
+    the per-phase frames without an ES cluster. With ``adaptive=True`` each
+    phase goes through :func:`write_adaptive` (T6), and a chunk size that
+    had to shrink in the upsert phase CARRIES OVER to the delete phase —
     the reference keeps the reduced ``es_chunk_size`` for the remainder of
     its stream (flows/main_flow.py:443-451), on the theory that an ES
     cluster under pressure stays under pressure. When ``out_cfg`` (an
     empty list) is passed, the config that last succeeded is appended to
     it so callers batching many micro-batches (:class:`EsStreamSink`) can
     carry the adapted size forward."""
-    counts: dict[str, int] = {}
+    counts = {
+        f"{r['_op_type']}:{r['_index']}": r["count"]
+        for r in actions.where(F.col("_op_type").isin("index", "delete"))
+        .groupBy("_op_type", "_index")
+        .count()
+        .collect()
+    }
     current = cfg
     for op, writer in (("index", write), ("delete", write_delete)):
-        subset = actions.where(F.col("_op_type") == op)
-        for row in subset.select("_index").distinct().collect():
-            idx = row["_index"]
-            frame = subset.where(F.col("_index") == idx)
-            if adaptive:
-                current = write_adaptive(
-                    frame, current, idx, write=writer, sleep=sleep
-                )
-            else:
-                writer(frame, current, idx)
-            counts[f"{op}:{idx}"] = frame.count()
+        if not any(key.startswith(f"{op}:") for key in counts):
+            continue
+        frame = actions.where(F.col("_op_type") == op)
+        if adaptive:
+            current = write_adaptive(frame, current, write=writer, sleep=sleep)
+        else:
+            writer(frame, current)
     if out_cfg is not None:
         out_cfg.append(current)
     return counts

@@ -69,12 +69,19 @@ class SyncReport:
     rebuilt: list[str] = field(default_factory=list)  # T7 forced rebuilds
     retried: dict[str, int] = field(default_factory=dict)  # X4 retries used
     # X7 applied to the ES mirror: alias count == ES _count after the
-    # mirror writes (warn-only, like the reference's reconcile)
-    mirror_reconcile: dict[str, bool] = field(default_factory=dict)
+    # mirror writes (warn-only, like the reference's reconcile; None =
+    # the _count call failed, so the check could not run)
+    mirror_reconcile: dict[str, bool | None] = field(default_factory=dict)
     # X6 applied to the ES mirror on full sync: the physical index the
     # alias was atomically swapped to (None = swap attempted and failed;
     # warn-only posture, reference swap_indexes flows/main_flow.py:534-555)
     mirror_published: dict[str, str | None] = field(default_factory=dict)
+
+
+def changed_since(docs: DataFrame, watermark: datetime) -> DataFrame:
+    """T2: the rows an incremental sync merges and the CLI's ES mirror
+    ships; inclusive, so a boundary row re-delivers (safe: idempotent)."""
+    return docs.where(F.col("updated_at") >= F.lit(watermark))
 
 
 def _enumerate_indexes(docs: DataFrame) -> list[str]:
@@ -402,7 +409,7 @@ def incremental_sync(
     )
     report.indexes = indexes
 
-    changed = docs.where(F.col("updated_at") >= F.lit(wm))  # T2: inclusive
+    changed = changed_since(docs, wm)
     ts = generation_timestamp(run_started)
     for index in indexes:
         batch = changed.where(F.col("index") == index)

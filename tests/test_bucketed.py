@@ -252,7 +252,7 @@ def test_es_stream_sink_carries_shrunken_chunk_across_batches(spark):
     seen: list[int] = []
     fail_once = {"armed": True}
 
-    def flaky_write(df, cfg, index):
+    def flaky_write(df, cfg):
         seen.append(cfg.batch_entries)
         if fail_once["armed"]:
             fail_once["armed"] = False
@@ -261,7 +261,7 @@ def test_es_stream_sink_carries_shrunken_chunk_across_batches(spark):
     es = EsStreamSink(
         EsSinkConfig(nodes="example:9200", batch_entries=500),
         write=flaky_write,
-        write_delete=lambda df, cfg, index: None,
+        write_delete=lambda df, cfg: None,
         sleep=lambda s: None,
     )
     batch = doc_actions(

@@ -29,6 +29,7 @@ class _RecordingEs(http.server.BaseHTTPRequestHandler):
     docs: dict[str, set[str]] = {}  # index -> live ids — class-level
     aliases: dict[str, str] = {}  # alias -> physical index — class-level
     settings: list[tuple[str, dict]] = []  # PUT _settings calls — class-level
+    fail_bulk = False  # answer every _bulk with a non-retryable item error
 
     def _resolve(self, name: str) -> str:
         return type(self).aliases.get(name, name)
@@ -48,6 +49,10 @@ class _RecordingEs(http.server.BaseHTTPRequestHandler):
                 ):
                     del type(self).aliases[spec["alias"]]
             return self._reply({"acknowledged": True})
+        if type(self).fail_bulk:
+            return self._reply({"errors": True, "items": [{"index": {
+                "status": 400, "error": {"type": "mapper_parsing_exception"},
+            }}]})
         lines = [ln for ln in body.decode().splitlines() if ln.strip()]
         i = 0
         while i < len(lines):
@@ -112,6 +117,7 @@ def es_stub():
     _RecordingEs.docs = {}
     _RecordingEs.aliases = {}
     _RecordingEs.settings = []
+    _RecordingEs.fail_bulk = False
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _RecordingEs)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     yield f"127.0.0.1:{srv.server_address[1]}", _RecordingEs.ops
@@ -246,6 +252,124 @@ def test_mirror_reconcile_mismatch_warns_only(spark, tmp_path, capsys, es_stub):
     report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert report["written"]["alpha"] == 1
     assert report["mirror_reconcile"] == {"alpha": False}  # ES holds 4, alias 3
+
+
+def _count_mirror_calls(monkeypatch) -> dict[str, int]:
+    """Count the CLI mirror's bulk writer calls through wrappers that still
+    ship to the stub."""
+    import prefect_flow_arc_indexer_spark.pipeline.es_sink as es_sink
+
+    calls = {"write_upserts_rest": 0, "write_deletes": 0}
+    for name in calls:
+        original = getattr(es_sink, name)
+
+        def counted(*args, _name=name, _original=original, **kwargs):
+            calls[_name] += 1
+            return _original(*args, **kwargs)
+
+        monkeypatch.setattr(es_sink, name, counted)
+    return calls
+
+
+def test_cli_mirror_one_pass_across_indexes(
+    spark, tmp_path, capsys, es_stub, monkeypatch
+):
+    """Three indexes mirror in ONE upsert job per run (plus one delete job
+    on an incremental run), and every document still lands in its own
+    index: the full sync's in its alias's generation, the incremental
+    delta's through its alias, a schema-drift rebuild's whole alias too."""
+    from prefect_flow_arc_indexer_spark.__main__ import main
+
+    nodes, ops = es_stub
+    calls = _count_mirror_calls(monkeypatch)
+    src = str(tmp_path / "src")
+    t0, t1 = datetime(2024, 1, 1, 12, 0, 0), datetime(2030, 1, 1)
+    v1 = '{"schema_maintainer": {"schema_name": "v1"}}'
+    v2 = '{"schema_maintainer": {"schema_name": "v2"}}'
+    base = [
+        ("alpha", 1, '{"v": 1}', t0),
+        ("alpha", 2, '{"v": 2}', t0),
+        ("alpha", 13, '{"v": 13}', t0),  # tombstone (13 % 13 == 0)
+        ("beta", 3, '{"v": 3}', t0),
+        ("beta", 4, '{"v": 4}', t0),
+        ("gamma", 5, v1, t0),
+        ("gamma", 6, v1, t0),
+    ]
+    _write_events(spark, f"{src}/events.parquet", base)
+    argv = ["--source", src, "--sink-dir", str(tmp_path / "sink"),
+            "--es-nodes", nodes]
+    assert main([*argv, "--full-sync"]) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    gens = report["mirror_published"]
+    assert sorted(gens) == ["alpha", "beta", "gamma"]
+    assert all(gens[a].startswith(f"{a}_") for a in gens)
+    assert sorted(ops) == sorted([
+        ("index", gens["alpha"], "1"), ("index", gens["alpha"], "2"),
+        ("index", gens["beta"], "3"), ("index", gens["beta"], "4"),
+        ("index", gens["gamma"], "5"), ("index", gens["gamma"], "6"),
+    ])
+    assert _RecordingEs.aliases == gens
+    assert calls == {"write_upserts_rest": 1, "write_deletes": 0}
+    assert report["mirror_reconcile"] == {
+        "alpha": True, "beta": True, "gamma": True,
+    }
+
+    # --- incremental: alpha merges an upsert, beta a tombstone, gamma's
+    # schema_name drifts and it is rebuilt -------------------------------
+    ops.clear()
+    _write_events(spark, f"{src}/events.parquet", [
+        *[r for r in base if r[0] != "gamma"],
+        ("alpha", 7, '{"v": 7}', t1),
+        ("beta", 26, '{"v": 26}', t1),  # tombstone
+        ("gamma", 5, v2, t0),
+        ("gamma", 6, v2, t0),
+        ("gamma", 8, v2, t1),
+    ])
+    assert main(argv) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["rebuilt"] == ["gamma"]
+    assert sorted(ops) == sorted([
+        ("index", "alpha", "7"),
+        ("delete", "beta", "26"),
+        ("index", "gamma", "5"), ("index", "gamma", "6"),
+        ("index", "gamma", "8"),
+    ])
+    assert calls == {"write_upserts_rest": 2, "write_deletes": 1}
+    assert report["mirror_reconcile"] == {
+        "alpha": True, "beta": True, "gamma": True,
+    }
+    assert _RecordingEs.docs[gens["alpha"]] == {"1", "2", "7"}
+
+
+def test_cli_full_sync_mirror_failure_swaps_no_alias(
+    spark, tmp_path, capsys, es_stub
+):
+    """Every upsert finishes before any alias swaps: when the bulk load of
+    a full sync fails, the run raises and every alias still points at its
+    previous generation."""
+    from prefect_flow_arc_indexer_spark.__main__ import main
+
+    nodes, _ops = es_stub
+    src = str(tmp_path / "src")
+    t0 = datetime(2024, 1, 1, 12, 0, 0)
+    _write_events(spark, f"{src}/events.parquet", [
+        ("alpha", 1, '{"v": 1}', t0),
+        ("beta", 2, '{"v": 2}', t0),
+        ("gamma", 3, '{"v": 3}', t0),
+    ])
+    argv = ["--source", src, "--sink-dir", str(tmp_path / "sink"),
+            "--es-nodes", nodes, "--full-sync"]
+    assert main(argv) == 0
+    capsys.readouterr()
+    before = dict(_RecordingEs.aliases)
+    assert sorted(before) == ["alpha", "beta", "gamma"]
+    settings_before = list(_RecordingEs.settings)
+
+    _RecordingEs.fail_bulk = True
+    with pytest.raises(Exception):
+        main(argv)
+    assert _RecordingEs.aliases == before
+    assert _RecordingEs.settings == settings_before  # no swap even began
 
 
 def test_count_index_refresh_then_count(es_stub):
@@ -537,16 +661,14 @@ def test_429_retry_interplays_with_adaptive_shrink():
     attempts: list[int] = []
     post = _reject_429(3)  # two full inner rounds of 2 retries fail; 4th ok
 
-    def write(df, cfg, index):
+    def write(df, cfg):
         attempts.append(cfg.batch_entries)
         make_retrying_post(cfg, post=post, sleep=inner_sleeps.append)(
             "u", b"", cfg.timeout_s
         )
 
     cfg = EsSinkConfig(nodes="x", batch_entries=120, retries=1)
-    out = write_adaptive(
-        None, cfg, "idx", write=write, sleep=outer_sleeps.append
-    )
+    out = write_adaptive(None, cfg, write=write, sleep=outer_sleeps.append)
     # attempt 1: post fails, 1 inner retry (30s) fails -> outer shrink;
     # attempt 2: post fails (3rd failure), inner retry succeeds
     assert attempts == [120, 70]
@@ -597,9 +719,10 @@ def test_rest_429s_retry_over_real_http(spark, es_stub):
             initial_backoff_s=0.01, max_backoff_s=0.02,
         )
         df = spark.createDataFrame(
-            [("1", '{"v": 1}')], "id string, _source string"
+            [("idx_retry", "1", '{"v": 1}')],
+            "_index string, id string, _source string",
         ).coalesce(1)
-        write_upserts_rest(df, cfg, "idx_retry")
+        write_upserts_rest(df, cfg)
         assert state["posts"] == 3
     finally:
         srv.shutdown()

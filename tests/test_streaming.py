@@ -718,7 +718,7 @@ def test_stream_doc_actions_with_es_stream_sink_carries_chunk(spark, tmp_path):
     seen: list[tuple[str, int, int]] = []  # (ids, chunk at write time)
     fail_once = {"armed": True}
 
-    def flaky_write(df, cfg, index):
+    def flaky_write(df, cfg):
         ids = ",".join(sorted(r["_id"] for r in df.collect()))
         seen.append((ids, cfg.batch_entries, 0))
         if fail_once["armed"]:
@@ -728,7 +728,7 @@ def test_stream_doc_actions_with_es_stream_sink_carries_chunk(spark, tmp_path):
     es = EsStreamSink(
         EsSinkConfig(nodes="example:9200", batch_entries=500),
         write=flaky_write,
-        write_delete=lambda df, cfg, index: None,
+        write_delete=lambda df, cfg: None,
         sleep=lambda s: None,
     )
     ckpt = str(tmp_path / "ckpt_es")
