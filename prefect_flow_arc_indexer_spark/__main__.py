@@ -129,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
     from prefect_flow_arc_indexer_spark.pipeline.runner import (
-        changed_since,
+        changed,
         full_sync,
         incremental_sync,
     )
@@ -149,7 +149,7 @@ def main(argv: list[str] | None = None) -> int:
     wm_path = args.watermark_store or f"{args.sink_dir}/watermarks.json"
     watermarks = WatermarkStore(wm_path)
     # captured BEFORE the run: the ES mirror re-derives the merged delta
-    # through the runner's own predicate (runner.changed_since)
+    # through the runner's own predicate (runner.changed)
     wm_prev = watermarks.get(args.pipeline_name)
     if args.full_sync:
         run_started = datetime.now()
@@ -198,8 +198,10 @@ def main(argv: list[str] | None = None) -> int:
             retries=args.es_retries,
         )
 
+        doc_schema = docs.select("id", "document").schema
+
         def alias_rows(index: str, target: str) -> DataFrame:
-            return sink.read_alias(spark, index).select(
+            return sink.read_alias(spark, index, doc_schema).select(
                 "id", "document", F.lit(target).alias("_index")
             )
 
@@ -238,8 +240,8 @@ def main(argv: list[str] | None = None) -> int:
             # (re-shipping whole aliases is the 100 TB scale bug) and delete
             # its tombstones, or ES drifts from the manifest (ADVICE r5); a
             # schema-drift rebuild's whole alias is re-shipped instead
-            delta = changed_since(docs, wm_prev).where(
-                F.col("index").isin(list(report.written))
+            delta = docs.where(
+                changed(wm_prev) & F.col("index").isin(list(report.written))
             ).withColumn("_index", F.col("index"))
             merged = [i for i in report.written if i not in report.rebuilt]
             upserts = delta.where(
@@ -254,19 +256,11 @@ def main(argv: list[str] | None = None) -> int:
                 delta.where(F.col("is_deleted")).select("id", "_index"),
                 es_cfg,
             )
-        # post-mirror count reconcile (VERDICT r6 task 6): the reference's
-        # X7 gate applied to the mirror — the published alias is the source
-        # of truth, ES must hold exactly its live doc count. Warn-only,
-        # like the reference (flows/main_flow.py:560-575 logs and proceeds).
+        # post-mirror count reconcile (VERDICT r6 task 6), the reference's
+        # warn-only X7 gate (flows/main_flow.py:560-575): ES must hold the
+        # row count the sync audited in each generation it published
         for index in report.written:
-            if args.full_sync or index in report.rebuilt:
-                # the sync audited the generation it just published
-                expected = report.written[index]
-            else:
-                # footer-only at any scale: the session enables parquet
-                # aggregate pushdown, so count() over a generation reads
-                # row counts from file footers, never the data pages
-                expected = sink.read_alias(spark, index).count()
+            expected = report.published_rows[index]
             try:
                 actual = es_sink.count_index(es_cfg, index)
             except Exception as exc:

@@ -1,38 +1,31 @@
 """Pipeline drivers reproducing the reference's three entry points (SURVEY
 §3 E1/E2/E3; reference ``main_flow``, ``flows/main_flow.py:603-762``):
 
-- :func:`full_sync` (E1): enumerate indexes -> order smallest-first -> one
-  write job stages every index's fresh generation -> per index: count
-  reconcile -> atomically publish; failed attempts roll back (X5).
-- :func:`incremental_sync` (E2): per index, count changed rows since the
-  inclusive watermark (skip-if-zero, T4), then merge upserts and tombstone
-  deletes into the live generation (T3) and advance the watermark (T1).
-  When the sink's stored ``schema_name`` diverges from the source's current
-  value, the index is force-rebuilt instead of merged (T7, reference
-  ``flows/main_flow.py:62-86,674-693``).
+- :func:`full_sync` (E1): one stats job lists the indexes and orders them
+  smallest first -> one write job stages every index's fresh generation
+  -> one footer-count job audits the stage -> per index: atomic publish.
+- :func:`incremental_sync` (E2): the stats job also counts each index's
+  rows changed since the inclusive watermark (skip-if-zero, T4); one probe
+  compares every touched index's stored ``schema_name`` with the source's
+  and a drifted index is rebuilt instead of merged (T7, reference
+  ``flows/main_flow.py:62-86,674-693``); one staged write merges upserts
+  and tombstone deletes into every touched index (T3), audited and
+  published as in a full sync; the watermark then advances (T1).
 - both accept ``or_ids`` (E3): a caller-pinned, lowercased index subset that
   bypasses enumeration and orphan cleanup (reference flows/main_flow.py:
   633-640,652).
 
-Resilience / scheduling semantics carried over from the reference:
-
-- X4 flow-level retries (reference ``flows/main_flow.py:722-723``: 5 retries
-  x 500 s on the stream task): both drivers accept ``(retries,
-  retry_delay_s)``; a failed write or publish rolls back what it
-  half-wrote, sleeps, and retries — only after exhaustion does the run
-  abort.
-- X3 concurrency classes (reference ``flows/main_flow.py:685-687,721``)
-  have no counterpart: the reference runs its two largest indexes in a
-  separate pool because each index is its own job, while :func:`full_sync`
-  writes every index in one Spark job whose tasks AQE spreads over the
-  cluster.
-
-Spark notes: the per-index publish loop is *driver-side control flow* (as
-in the reference, where Prefect owns it); the data plane is declarative
-DataFrame jobs, so Catalyst still sees whole plans. The incremental
-merge is the parquet-sink equivalent of ES upsert+delete-by-id:
-``old ANTI JOIN batch ids  UNION  batch upserts`` — at production scale the
-same logic is a Delta/Iceberg MERGE or ES upserts and deletes by id.
+So a run costs a fixed number of Spark jobs however many indexes exist or
+are touched (hash-bucketed merges excepted): the reference's per-index
+count, probe, write and reconcile are each one grouped job here, and only
+the renames and manifest flips of the publish stay per index. X4 retries
+(reference ``flows/main_flow.py:722-723``): a failed write or publish
+rolls back what it half-wrote, sleeps and retries; only after exhaustion
+does the run abort. X3's separate pool for the two largest indexes
+(reference ``flows/main_flow.py:685-687,721``) has no counterpart: every
+index is written by one job whose tasks AQE spreads over the cluster. The
+merge is the parquet-sink form of ES upsert+delete-by-id, ``old ANTI JOIN
+batch ids UNION batch upserts`` (a Delta/Iceberg MERGE at scale).
 """
 
 from __future__ import annotations
@@ -42,9 +35,25 @@ import shutil
 import time
 from dataclasses import dataclass, field
 from datetime import datetime
+from functools import partial, reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    Column,
+    DataFrame,
+    Observation,
+    Row,
+    SparkSession,
+    functions as F,
+)
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from prefect_flow_arc_indexer_spark.pipeline.bucketed import (
+    _write_marker,
+    bucket_count,
+    bucket_of,
+    merge_bucketed,
+    write_generation_bucketed,
+)
 from prefect_flow_arc_indexer_spark.pipeline.sinks import (
     VersionedSink,
     generation_timestamp,
@@ -68,7 +77,7 @@ class SyncReport:
     dropped_orphans: list[str] = field(default_factory=list)
     rebuilt: list[str] = field(default_factory=list)  # T7 forced rebuilds
     retried: dict[str, int] = field(default_factory=dict)  # X4 retries used
-    # X7 applied to the ES mirror: alias count == ES _count after the
+    # X7 applied to the ES mirror: published_rows == ES _count after the
     # mirror writes (warn-only, like the reference's reconcile; None =
     # the _count call failed, so the check could not run)
     mirror_reconcile: dict[str, bool | None] = field(default_factory=dict)
@@ -76,36 +85,33 @@ class SyncReport:
     # alias was atomically swapped to (None = swap attempted and failed;
     # warn-only posture, reference swap_indexes flows/main_flow.py:534-555)
     mirror_published: dict[str, str | None] = field(default_factory=dict)
+    # the audited row count of every generation the run published (X7)
+    published_rows: dict[str, int] = field(default_factory=dict)
 
 
-def changed_since(docs: DataFrame, watermark: datetime) -> DataFrame:
+def changed(watermark: datetime) -> Column:
     """T2: the rows an incremental sync merges and the CLI's ES mirror
     ships; inclusive, so a boundary row re-delivers (safe: idempotent)."""
-    return docs.where(F.col("updated_at") >= F.lit(watermark))
+    return F.col("updated_at") >= F.lit(watermark)
 
 
-def _enumerate_indexes(docs: DataFrame) -> list[str]:
-    """A1: distinct non-null index names."""
-    return [
-        r["index"]
-        for r in docs.where(F.col("index").isNotNull())
-        .select("index")
-        .distinct()
-        .collect()
-    ]
-
-
-def _order_by_size(docs: DataFrame, indexes: list[str]) -> list[str]:
-    """A2+O1: smallest index first (fail fast, free memory early —
-    reference flows/main_flow.py:153-169)."""
-    rows = (
-        docs.where(F.col("index").isin(indexes))
-        .groupBy("index")
-        .agg(F.count("id").alias("cnt"))
-        .orderBy(F.col("cnt").asc(), F.col("index").asc())
-        .collect()
-    )
-    return [r["index"] for r in rows]
+def _index_stats(
+    docs: DataFrame, pinned: list[str] | None, watermark: datetime | None = None
+) -> dict[str, Row]:
+    """A1+A2+T4 in ONE grouped job that reads ``index``, ``id`` and
+    ``updated_at``, never ``document``: each non-null (or ``pinned``) index
+    with its row count ``n`` and, given a watermark, its ``changed`` count,
+    smallest first (reference flows/main_flow.py:121,153-169,317-343)."""
+    rows = docs.where(F.col("index").isNotNull())
+    if pinned:
+        rows = rows.where(F.col("index").isin(pinned))
+    aggs = [F.count("id").alias("n")]
+    if watermark is not None:
+        aggs.append(F.count_if(changed(watermark)).alias("changed"))
+    stats = rows.groupBy("index").agg(*aggs).collect()
+    return {
+        r["index"]: r for r in sorted(stats, key=lambda r: (r["n"], r["index"]))
+    }
 
 
 def _run_with_retries(
@@ -157,15 +163,39 @@ def _collision_free_ts(
     return ts
 
 
-def _probe_schema_name(frame: DataFrame, path: str):
-    """T7 probe: the ``schema_name`` of one (deterministically-arbitrary:
-    min-id) document — the reference grabs an arbitrary doc from each side
-    (flows/main_flow.py:37-59) and compares the JSONB path value."""
-    row = frame.agg(
-        F.min_by(F.get_json_object(F.col("document"), path), F.col("id"))
-        .alias("schema_name")
-    ).first()
-    return row["schema_name"] if row else None
+def _aliases(
+    spark: SparkSession, sink: VersionedSink, indexes: list[str],
+    schema: StructType,
+) -> DataFrame:
+    """The published rows of ``indexes`` in one frame, tagged by index."""
+    return reduce(DataFrame.unionByName, [
+        sink.read_alias(spark, i, schema).withColumn("index", F.lit(i))
+        for i in indexes
+    ])
+
+
+def _drifted(
+    spark: SparkSession, docs: DataFrame, sink: VersionedSink,
+    indexes: list[str], schema: StructType, path: str,
+) -> list[str]:
+    """T7 probe in ONE action: the ``indexes`` whose alias and live source
+    rows disagree on the JSON ``path`` value of their lowest-id document
+    (``min_by``: the path is parsed once per side per index), the
+    arbitrary-doc probe the reference makes (flows/main_flow.py:37-86)."""
+    if not indexes:
+        return []
+    live = docs.where(F.col("index").isin(indexes) & ~F.col("is_deleted"))
+    both = live.select("index", "id", "document", F.lit("src").alias("side"))
+    both = both.unionByName(
+        _aliases(spark, sink, indexes, schema).withColumn("side", F.lit("sink"))
+    )
+    names = {
+        (r["side"], r["index"]): r["name"]
+        for r in both.groupBy("side", "index").agg(
+            F.get_json_object(F.min_by("document", "id"), path).alias("name")
+        ).collect()
+    }
+    return [i for i in indexes if names.get(("sink", i)) != names.get(("src", i))]
 
 
 def _unescape_partition_value(s: str) -> str:
@@ -189,6 +219,18 @@ def _unescape_partition_value(s: str) -> str:
     return "".join(out)
 
 
+def _part_cols(n_buckets: int | None) -> list[str]:
+    return ["index"] if n_buckets is None else ["index", "bucket"]
+
+
+def _stage_rows(rows: DataFrame, n_buckets: int | None) -> DataFrame:
+    """``rows`` in the stage's column layout: the partition columns (with
+    the id-hash ``bucket`` when ``n_buckets`` is set), then the document."""
+    if n_buckets is not None:
+        rows = rows.withColumn("bucket", bucket_of(F.col("id"), n_buckets))
+    return rows.select(*_part_cols(n_buckets), "id", "document")
+
+
 def one_pass_live(
     docs: DataFrame, indexes: list[str], n_buckets: int | None = None
 ) -> DataFrame:
@@ -200,16 +242,136 @@ def one_pass_live(
     by many tasks. A full sync through this frame scans the fact table
     ONCE, not O(#indexes) times -- the Spark-native improvement over the
     reference's one-SQL-per-index shape (flows/main_flow.py:317-343)."""
-    from prefect_flow_arc_indexer_spark.pipeline.bucketed import bucket_of
-
     live = docs.where(F.col("index").isin(indexes) & ~F.col("is_deleted"))
-    part_cols = ["index"]
-    if n_buckets is not None:
-        live = live.withColumn("bucket", bucket_of(F.col("id"), n_buckets))
-        part_cols.append("bucket")
-    return live.select(*part_cols, "id", "document").hint(
-        "rebalance", *part_cols
+    return _stage_rows(live, n_buckets).hint(
+        "rebalance", *_part_cols(n_buckets)
     )
+
+
+def _stage_audit_publish(
+    spark: SparkSession,
+    sink: VersionedSink,
+    frame: DataFrame,
+    timestamps: dict[str, str],
+    ts: str,
+    n_buckets: int | None,
+    report: SyncReport,
+    retry,
+) -> None:
+    """Write-audit-publish for every index of ``frame`` (``_stage_rows``
+    layout) in a fixed number of Spark jobs:
+
+    - ONE ``partitionBy`` write stages ``frame`` under ``_stage_<ts>``; an
+      ``Observation`` on it counts each index's rows (no extra scan);
+    - ONE footer-count job audits the stage, read with the known schema
+      and ``index`` as a string (inference would read index ``007`` as
+      ``7``); a short index aborts before anything is published;
+    - per index, in ``timestamps`` order, the staged dir is renamed into
+      place as generation ``{index}_{timestamps[index]}`` and published;
+      ``report.written`` and ``report.published_rows`` take its audit count.
+
+    The write and each publish run under ``retry`` (a bound
+    :func:`_run_with_retries`): a failed write removes the stage, a failed
+    publish moves the generation back into the stage for the retry to
+    re-promote. The stage is removed however it ends."""
+    indexes = list(timestamps)
+    schema = frame.select("id", "document").schema
+    stage_gen = sink.generation_name("_stage", ts)
+    stage = sink.generation_path(stage_gen)
+    expected: dict[str, int] = {}
+
+    def write_stage() -> None:
+        # pyspark refuses to reuse an Observation (REUSE_OBSERVATION): each
+        # attempt observes through a fresh one, named by a random UUID
+        obs = Observation()
+        sink.write_generation(
+            frame.observe(obs, *(
+                F.count_if(F.col("index") == i).alias(f"c_{n}")
+                for n, i in enumerate(indexes)
+            )),
+            "_stage", ts, partition_by=_part_cols(n_buckets),
+        )
+        counts = obs.get  # blocks until the write job finishes
+        expected.update((i, counts[f"c_{n}"]) for n, i in enumerate(indexes))
+
+    try:
+        retry(indexes, write_stage, lambda: sink.drop_generation(stage_gen))
+        # decode the dir names: 'a:b' stages as 'index=a%3Ab'
+        staged_dirs = {
+            _unescape_partition_value(entry[len("index="):]): os.path.join(
+                stage, entry
+            )
+            for entry in os.listdir(stage)
+            if entry.startswith("index=")
+        }
+        audited: dict[str, int] = {}
+        if staged_dirs:
+            # a new StructType: ``.add`` would append to ``schema``'s own
+            # field list, which the all-tombstone branch below writes with
+            part_fields = [StructField("index", StringType())]
+            if n_buckets is not None:
+                part_fields.append(StructField("bucket", IntegerType()))
+            audit_schema = StructType([*schema.fields, *part_fields])
+            # the dirs, not the '_stage' root Spark warns is hidden
+            audited = {
+                r["index"]: r["count"]
+                for r in spark.read.schema(audit_schema)
+                .option("basePath", stage)
+                .parquet(*staged_dirs.values())
+                .groupBy("index").count().collect()
+            }
+        short = {i: (n, audited.get(i, 0)) for i, n in expected.items()
+                 if audited.get(i, 0) != n}
+        if short:  # lost files or concurrent truncation: abort, publish none
+            report.rolled_back.extend(indexes)
+            raise RuntimeError(f"one-pass audit failed (expected, staged): {short}")
+        for index in indexes:
+            part_dir = staged_dirs.get(
+                index, os.path.join(stage, f"index={index}")
+            )
+            gen = sink.generation_name(index, timestamps[index])
+            gen_path = sink.generation_path(gen)
+
+            def attempt(index=index, part_dir=part_dir, gen=gen,
+                        gen_path=gen_path):
+                want = expected[index]
+                if os.path.isdir(part_dir) and not os.path.isdir(gen_path):
+                    shutil.move(part_dir, gen_path)
+                    if n_buckets is not None:
+                        _write_marker(gen_path, n_buckets)
+                if not os.path.isdir(gen_path):
+                    if want > 0:
+                        # publishing would put an EMPTY generation over
+                        # live data: abort, so the attempt rolls back
+                        raise RuntimeError(
+                            f"one-pass stage for {index!r} missing: "
+                            f"expected {want} docs but {gen_path} is absent"
+                        )
+                    # an all-tombstone index stages no partition: publish
+                    # an empty generation, bucketed when asked so the
+                    # index keeps its O(touched-buckets) merge cost class
+                    empty = spark.createDataFrame([], schema)
+                    if n_buckets is not None:
+                        write_generation_bucketed(
+                            sink, empty, index, timestamps[index], n_buckets
+                        )
+                    else:
+                        sink.write_generation(empty, index, timestamps[index])
+                report.reconcile_ok[index] = True
+                sink.publish(index, gen)
+                report.published_rows[index] = want
+                report.written[index] = want
+
+            def rollback(part_dir=part_dir, gen_path=gen_path):
+                # restore the staged partition so a retry can re-promote it
+                if os.path.isdir(gen_path) and not os.path.isdir(part_dir):
+                    shutil.move(gen_path, part_dir)
+                else:
+                    shutil.rmtree(gen_path, ignore_errors=True)
+
+            retry([index], attempt, rollback)
+    finally:
+        sink.drop_generation(stage_gen)
 
 
 def full_sync(
@@ -226,146 +388,29 @@ def full_sync(
 ) -> SyncReport:
     """E1: full rebuild with write-audit-publish per index.
 
-    One ``partitionBy("index")`` write job (a single fact-table scan)
-    stages every index's generation data under ``_stage_<ts>``; an
-    ``Observation`` on that job counts each index's rows, so the audit
-    costs no extra scan. Then, smallest index first, each staged directory
-    is moved into place as its generation, audited against its count and
-    atomically published. The staged write and every per-index publish
-    run under :func:`_run_with_retries`: a failed write removes the stage
-    before its retry, a failed publish moves the generation back to the
-    stage so a retry can re-promote it. ``bucketed=True`` lays generations
-    out hash-bucketed by id (``pipeline.bucketed``) so later incremental
-    merges rewrite only touched buckets.
+    One stats job lists and sizes the indexes; :func:`one_pass_live` (a
+    single fact-table scan) feeds :func:`_stage_audit_publish`, which
+    stages, audits and publishes every index smallest first.
+    ``bucketed=True`` lays generations out hash-bucketed by id
+    (``pipeline.bucketed``) so later incremental merges rewrite only
+    touched buckets.
     """
-    from pyspark.sql import Observation
-
-    from prefect_flow_arc_indexer_spark.pipeline.bucketed import (
-        _write_marker,
-        write_generation_bucketed,
-    )
-
     report = SyncReport()
-    if or_ids:
-        indexes = [x.lower() for x in or_ids]  # P8, flows/main_flow.py:640
-    else:
-        indexes = _enumerate_indexes(docs)
+    pinned = [x.lower() for x in or_ids] if or_ids else None  # P8, :640
+    report.indexes = list(_index_stats(docs, pinned))
+    if not pinned:
         # X8: orphan cleanup only runs on unpinned full syncs
-        report.dropped_orphans = sink.cleanup_orphans(indexes)
-    if not indexes:
+        report.dropped_orphans = sink.cleanup_orphans(report.indexes)
+    if not report.indexes:
         return report
-    report.indexes = _order_by_size(docs, indexes)
     ts = generation_timestamp(now)
-    stage = os.path.join(sink.base_dir, f"_stage_{ts}")
-    os.makedirs(sink.base_dir, exist_ok=True)
-    live_all = one_pass_live(
-        docs, report.indexes, n_buckets if bucketed else None
+    n = n_buckets if bucketed else None
+    _stage_audit_publish(
+        spark, sink, one_pass_live(docs, report.indexes, n),
+        dict.fromkeys(report.indexes, ts), ts, n, report,
+        partial(_run_with_retries, report=report, retries=retries,
+                retry_delay_s=retry_delay_s, sleep=sleep),
     )
-    part_cols = ["index", "bucket"] if bucketed else ["index"]
-    expected: dict[str, int] = {}
-
-    def write_stage() -> None:
-        # pyspark refuses to reuse an Observation (REUSE_OBSERVATION): each
-        # attempt observes through a fresh one, named by a random UUID
-        obs = Observation()
-        live_all.observe(
-            obs,
-            *(
-                F.sum(F.when(F.col("index") == idx, 1).otherwise(0))
-                .cast("long")
-                .alias(f"c_{n}")
-                for n, idx in enumerate(report.indexes)
-            ),
-        ).write.partitionBy(*part_cols).mode("overwrite").parquet(stage)
-        counts = obs.get  # blocks until the write job finishes
-        for n, idx in enumerate(report.indexes):
-            expected[idx] = counts[f"c_{n}"] or 0
-
-    try:
-        _run_with_retries(
-            report.indexes,
-            write_stage,
-            lambda: shutil.rmtree(stage, ignore_errors=True),
-            report,
-            retries,
-            retry_delay_s,
-            sleep,
-        )
-        # Resolve each index's staged dir by DECODING Spark's
-        # partition-value escaping (escapePathName writes %XX for chars
-        # that are unsafe in a path, e.g. 'a:b' stages as 'index=a%3Ab'):
-        # building 'index={value}' by hand would miss every escaped name and
-        # the audit below would abort a perfectly good sync.
-        staged_dirs = {
-            _unescape_partition_value(entry[len("index="):]): os.path.join(
-                stage, entry
-            )
-            for entry in (os.listdir(stage) if os.path.isdir(stage) else [])
-            if entry.startswith("index=")
-        }
-        for index in report.indexes:
-            part_dir = staged_dirs.get(
-                index, os.path.join(stage, f"index={index}")
-            )
-            gen = sink.generation_name(index, ts)
-            gen_path = sink.generation_path(gen)
-
-            def attempt(index=index, part_dir=part_dir, gen=gen,
-                        gen_path=gen_path):
-                want = expected[index]
-                if os.path.isdir(part_dir) and not os.path.isdir(gen_path):
-                    shutil.move(part_dir, gen_path)
-                    if bucketed:
-                        _write_marker(gen_path, n_buckets)
-                if os.path.isdir(gen_path):
-                    actual = spark.read.parquet(gen_path).count()
-                elif want > 0:
-                    # the write job counted live docs for this index but its
-                    # staged partition dir is absent: publishing would
-                    # commit an EMPTY generation over live data -- abort so
-                    # _run_with_retries rolls back, mirroring compact()'s
-                    # audit-abort discipline
-                    raise RuntimeError(
-                        f"one-pass stage for {index!r} missing: expected "
-                        f"{want} docs but no staged partition at {part_dir}"
-                    )
-                else:
-                    # an index whose docs are all tombstones writes no
-                    # partition -- publish an explicitly empty generation,
-                    # in the bucketed layout when requested so the index
-                    # keeps its O(touched-buckets) merge cost class
-                    empty = docs.where(F.lit(False)).select("id", "document")
-                    if bucketed:
-                        write_generation_bucketed(
-                            sink, empty, index, ts, n_buckets
-                        )
-                    else:
-                        sink.write_generation(empty, index, ts)
-                    actual = 0
-                if actual != want:
-                    # short generation (lost files, concurrent truncation):
-                    # abort-before-publish, same contract as compact()
-                    raise RuntimeError(
-                        f"one-pass audit for {index!r} failed: expected "
-                        f"{want} docs, staged generation has {actual}"
-                    )
-                report.reconcile_ok[index] = True
-                sink.publish(index, gen)
-                report.written[index] = actual
-
-            def rollback(part_dir=part_dir, gen_path=gen_path):
-                # restore the staged partition so a retry can re-promote it
-                if os.path.isdir(gen_path) and not os.path.isdir(part_dir):
-                    shutil.move(gen_path, part_dir)
-                else:
-                    shutil.rmtree(gen_path, ignore_errors=True)
-
-            _run_with_retries(
-                [index], attempt, rollback, report, retries, retry_delay_s,
-                sleep,
-            )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
     return report
 
 
@@ -387,16 +432,18 @@ def incremental_sync(
     """E2: CDC merge since the inclusive watermark, tombstones propagated;
     schema drift forces a full per-index rebuild (T7).
 
-    When the published generation is hash-bucketed (or ``bucketed=True``
-    makes rebuilds write that layout), the merge goes through
-    ``pipeline.bucketed.merge_bucketed``: only buckets containing touched
-    ids are rewritten, untouched buckets are hard-linked into the new
+    Every rebuilt index (no alias yet, or drifted) and every merged one
+    goes through ONE :func:`_stage_audit_publish` whose frame is the
+    merged aliases' rows ``LEFT ANTI JOIN`` the delta's ``(index, id)``
+    plus the source's live rows of rebuilt indexes and of the delta. A
+    failed staged write publishes none of them and leaves the watermark,
+    so the next run replays the delta (safe: idempotent by id). With
+    ``bucketed=True`` every staged generation is hash-bucketed.
+
+    An already hash-bucketed alias merges through
+    ``pipeline.bucketed.merge_bucketed`` instead: only buckets holding
+    touched ids are rewritten, the rest are hard-linked into the new
     generation — O(touched) I/O per batch instead of O(corpus)."""
-    from prefect_flow_arc_indexer_spark.pipeline.bucketed import (
-        bucket_count,
-        merge_bucketed,
-        write_generation_bucketed,
-    )
     report = SyncReport()
     wm = watermarks.get(pipeline_name)
     if wm is None:
@@ -404,109 +451,75 @@ def incremental_sync(
             "no watermark recorded; run full_sync first or seed the store"
         )
     run_started = now or datetime.now()
-    indexes = (
-        [x.lower() for x in or_ids] if or_ids else _enumerate_indexes(docs)
-    )
-    report.indexes = indexes
+    pinned = [x.lower() for x in or_ids] if or_ids else None
+    stats = _index_stats(docs, pinned, wm)
+    report.indexes = pinned or list(stats)
+    touched = {i: r["changed"] for i, r in stats.items() if r["changed"]}
+    report.skipped = [i for i in report.indexes if i not in touched]
 
-    changed = changed_since(docs, wm)
+    schema = docs.select("id", "document").schema
+    manifest = sink.read_manifest()
+    published = [i for i in touched if i in manifest]
+    report.rebuilt = _drifted(spark, docs, sink, published, schema, schema_path)
+    merged = [i for i in published if i not in report.rebuilt]
+    in_buckets = [i for i in merged if bucket_count(sink, manifest[i]) is not None]
+    merged = [i for i in merged if i not in in_buckets]
+    rebuild = [i for i in touched if i not in merged and i not in in_buckets]
     ts = generation_timestamp(run_started)
-    for index in indexes:
-        batch = changed.where(F.col("index") == index)
-        # T4/A4: skip-if-zero gate before any write work
-        n = batch.count()
-        if n == 0:
-            report.skipped.append(index)
-            continue
-        live = docs.where(
-            (F.col("index") == index) & ~F.col("is_deleted")
-        ).select("id", "document")
+    n = n_buckets if bucketed else None
+    delta = docs.where(changed(wm))
+    retry = partial(_run_with_retries, report=report, retries=retries,
+                    retry_delay_s=retry_delay_s, sleep=sleep)
 
-        rebuild = not sink.alias_exists(index)
-        old = None
-        if not rebuild:
-            old = sink.read_alias(spark, index)
-            # T7: schema_name drift in the sink forces a full rebuild
-            # (reference flows/main_flow.py:62-86,674-693) — compare one
-            # arbitrary doc's JSONB path value on each side.
-            sink_name = _probe_schema_name(old, schema_path)
-            src_name = _probe_schema_name(live, schema_path)
-            if sink_name != src_name:
-                rebuild = True
-                report.rebuilt.append(index)
-
-        # same-second collision with the published generation would clobber
-        # the directory the lazy plan reads from (and rollback would delete
-        # live data) — bump this index's timestamp until the name is free
-        idx_ts = _collision_free_ts(sink, index, ts, run_started)
-
-        if rebuild:
-            gen = sink.generation_name(index, idx_ts)
-            actual = [0]
-
-            def attempt(index=index, live=live, gen=gen, idx_ts=idx_ts,
-                        actual=actual):
-                if bucketed:
-                    write_generation_bucketed(
-                        sink, live, index, idx_ts, n_buckets
-                    )
-                else:
-                    sink.write_generation(live, index, idx_ts)
-                # record what the rebuild actually wrote (the full live doc
-                # set), not the CDC batch count — consistent with full_sync
-                actual[0] = spark.read.parquet(
-                    sink.generation_path(gen)
-                ).count()
-                sink.publish(index, gen)
-
-            _run_with_retries(
-                [index],
-                attempt,
-                lambda gen=gen: sink.drop_generation(gen),
-                report,
-                retries,
-                retry_delay_s,
-                sleep,
+    if rebuild or merged:
+        fresh = docs.where(F.col("index").isin(rebuild) | changed(wm))
+        frame = one_pass_live(fresh, rebuild + merged, n)
+        if merged:
+            old = _aliases(spark, sink, merged, schema)
+            # idempotent by id: delete-then-insert covers upsert +
+            # tombstone. One struct key, not (index, id): Catalyst pushes
+            # the anti join into each branch of the union, and a per-column
+            # key would filter the delta side per branch (one broadcast job
+            # per index); this way every branch probes one broadcast.
+            touched_keys = delta.where(F.col("index").isin(merged)).select(
+                F.struct("index", "id").alias("key")
             )
-            report.written[index] = actual[0]
-            continue
-
-        gen = sink.generation_name(index, idx_ts)
-        if bucket_count(sink, sink.read_manifest()[index]) is not None:
-            # bucketed merge: rewrite only buckets containing touched ids
-            def attempt(index=index, batch=batch, gen=gen, idx_ts=idx_ts):
-                merge_bucketed(
-                    spark,
-                    sink,
-                    index,
-                    batch.select("id", "document", "is_deleted"),
-                    idx_ts,
-                )
-                sink.publish(index, gen)
-        else:
-            upserts = batch.where(~F.col("is_deleted")).select(
-                "id", "document"
+            kept = old.join(
+                touched_keys,
+                F.struct(old["index"], old["id"]) == touched_keys["key"],
+                "left_anti",
             )
-            touched_ids = batch.select("id")
-            # idempotent by id: delete-then-insert covers upsert + tombstone
-            merged = old.join(touched_ids, "id", "left_anti").unionByName(
-                upserts
-            )
-
-            def attempt(index=index, merged=merged, gen=gen, idx_ts=idx_ts):
-                sink.write_generation(merged, index, idx_ts)
-                sink.publish(index, gen)
-
-        _run_with_retries(
-            [index],
-            attempt,
-            lambda gen=gen: sink.drop_generation(gen),
-            report,
-            retries,
-            retry_delay_s,
-            sleep,
+            frame = _stage_rows(kept, n).unionByName(frame)
+        _stage_audit_publish(
+            spark, sink, frame,
+            {i: _collision_free_ts(sink, i, ts, run_started)
+             for i in touched if i not in in_buckets},
+            ts, n, report, retry,
         )
-        report.written[index] = n
+        report.written.update({i: touched[i] for i in merged})
+
+    for index in in_buckets:
+        # bucketed merge: rewrite only buckets containing touched ids
+        idx_ts = _collision_free_ts(sink, index, ts, run_started)
+        gen = sink.generation_name(index, idx_ts)
+
+        def attempt(index=index, gen=gen, idx_ts=idx_ts):
+            batch = delta.where(F.col("index") == index)
+            merge_bucketed(
+                spark, sink, index,
+                batch.select("id", "document", "is_deleted"), idx_ts,
+            )
+            sink.publish(index, gen)
+
+        retry([index], attempt, lambda gen=gen: sink.drop_generation(gen))
+        report.written[index] = touched[index]
+    if in_buckets:
+        # the merged generations' row counts, in one footer-count job
+        counts = _aliases(spark, sink, in_buckets, schema).groupBy(
+            "index"
+        ).count().collect()
+        report.published_rows.update(dict.fromkeys(in_buckets, 0))
+        report.published_rows.update({r["index"]: r["count"] for r in counts})
 
     # T1: the *run start* becomes the next watermark (rows updated while the
     # run was in flight re-deliver next time; safe by idempotence)

@@ -22,6 +22,7 @@ from dataclasses import dataclass
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Reference generation-name format (flows/main_flow.py:647).
 TS_FORMAT = "%Y-%m-%dt%H.%M.%S"
@@ -66,11 +67,14 @@ class VersionedSink:
 
     # -- write / publish / rollback ----------------------------------------
     def write_generation(
-        self, df: DataFrame, alias: str, timestamp: str
+        self, df: DataFrame, alias: str, timestamp: str,
+        partition_by: tuple[str, ...] | list[str] = (),
     ) -> str:
-        """Write a new physical generation (not yet visible to readers)."""
+        """Write a new physical generation (not yet visible to readers),
+        Hive-partitioned by the ``partition_by`` columns."""
         gen = self.generation_name(alias, timestamp)
-        df.write.mode("overwrite").parquet(self.generation_path(gen))
+        path = self.generation_path(gen)
+        df.write.partitionBy(*partition_by).mode("overwrite").parquet(path)
         return gen
 
     def publish(
@@ -103,14 +107,21 @@ class VersionedSink:
             if os.path.isdir(os.path.join(self.base_dir, d))
         )
 
-    def read_alias(self, spark: SparkSession, alias: str) -> DataFrame:
+    def read_alias(
+        self, spark: SparkSession, alias: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """The published generation; a known ``schema`` spares the read its
+        parquet schema-inference job."""
         manifest = self.read_manifest()
         if alias not in manifest:
             raise KeyError(f"alias {alias!r} not published")
-        return self._read_generation(spark, manifest[alias])
+        return self._read_generation(spark, manifest[alias], schema)
 
-    def _read_generation(self, spark: SparkSession, generation: str) -> DataFrame:
-        df = spark.read.parquet(self.generation_path(generation))
+    def _read_generation(
+        self, spark: SparkSession, generation: str, schema: StructType | None = None
+    ) -> DataFrame:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(self.generation_path(generation))
         # hash-bucketed generations (pipeline.bucketed) carry a physical
         # `bucket` partition column; readers see the logical document schema
         if "bucket" in df.columns:

@@ -201,8 +201,8 @@ def test_es_sink_two_phase_apply(spark):
 
 
 def test_traced_entry_points_keep_their_names():
-    """``perfbench/sync.py:_wrap`` patches these functions by name to trace
-    the sync benchmark's layers; a rename would break only the traced run,
+    """``perfbench/sync.py:_wrap`` patches these functions and sink methods
+    by name to trace the sync benchmark's layers; a rename would break only the traced run,
     so it fails here instead."""
     from prefect_flow_arc_indexer_spark.pipeline import es_sink, runner
 
@@ -211,6 +211,8 @@ def test_traced_entry_points_keep_their_names():
         assert callable(getattr(es_sink, name, None)), name
     for name in ("full_sync", "incremental_sync"):
         assert callable(getattr(runner, name, None)), name
+    for name in ("write_generation", "publish"):
+        assert callable(getattr(VersionedSink, name, None)), name
 
 
 def test_es_sink_rest_delete_bulk_bodies(spark, tmp_path):
@@ -481,6 +483,251 @@ def test_one_pass_plan_scans_fact_table_once(spark, tmp_path):
         assert plan.count("FileScan parquet") == 1
         assert plan.count("Exchange") == 1
         assert "REBALANCE_PARTITIONS_BY_COL" in plan
+
+
+def _parquet_docs(spark, tmp_path, name, rows):
+    """The rows as a parquet-backed source, as the CLI reads one."""
+    path = str(tmp_path / name)
+    _docs(spark, rows).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _jobs_run(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts, counted under a job group
+    of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _index_rows(indexes, updated="2024-01-01 00:00:00", v=0):
+    return [
+        (index, f"{n}{k}", f'{{"v": {v}}}', False, updated)
+        for n, index in enumerate(indexes)
+        for k in range(3)
+    ]
+
+
+SIX = ["i0", "i1", "i2", "i3", "i4", "i5"]
+
+
+def test_sync_job_count_does_not_grow_with_indexes(spark, tmp_path):
+    """Counting, enumerating, probing, writing and auditing are each one
+    grouped job over every index, so a full sync over 3 indexes runs as
+    many Spark jobs as one over 6, and an incremental sync touching 2
+    indexes as many as one touching 5: the runners add no per-index count
+    jobs."""
+    full_jobs = []
+    for n in (3, 6):
+        docs = _parquet_docs(spark, tmp_path, f"full{n}", _index_rows(SIX[:n]))
+        sink = VersionedSink(str(tmp_path / f"full_sink{n}"))
+        full_jobs.append(_jobs_run(spark, lambda: full_sync(
+            spark, docs, sink, now=datetime(2024, 2, 1)
+        )))
+        assert sorted(sink.read_manifest()) == SIX[:n]
+    assert full_jobs[0] == full_jobs[1]
+
+    incr_jobs = []
+    base = _index_rows(SIX)
+    for n in (2, 5):
+        sink = VersionedSink(str(tmp_path / f"incr_sink{n}"))
+        full_sync(
+            spark, _parquet_docs(spark, tmp_path, f"base{n}", base), sink,
+            now=datetime(2024, 2, 1),
+        )
+        wm = WatermarkStore(str(tmp_path / f"wm{n}.json"))
+        wm.set("default", datetime(2024, 1, 10))
+        delta = _index_rows(SIX[:n], "2024-01-15 00:00:00", v=1)
+        delta[0] = delta[0][:3] + (True, delta[0][4])  # one tombstone
+        docs = _parquet_docs(
+            spark, tmp_path, f"delta{n}",
+            [r for r in base if r[0] not in SIX[:n]] + delta,
+        )
+        report = None
+
+        def run():
+            nonlocal report
+            report = incremental_sync(
+                spark, docs, sink, wm, now=datetime(2024, 2, 2)
+            )
+
+        incr_jobs.append(_jobs_run(spark, run))
+        assert sorted(report.written) == SIX[:n]
+        assert report.published_rows == {
+            i: 2 if i == "i0" else 3 for i in SIX[:n]
+        }
+        assert report.rebuilt == []
+    assert incr_jobs[0] == incr_jobs[1]
+
+
+def test_incremental_staged_write_retries_then_rolls_back(
+    spark, tmp_path, monkeypatch
+):
+    """X4 + X5 on the incremental staged write: a failed write removes its
+    stage and retries; once retries are exhausted every touched index is
+    recorded as rolled back, the manifest is byte-identical, no stage is
+    left behind and the watermark does not move, so the next run replays
+    the delta."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import prefect_flow_arc_indexer_spark.pipeline.runner as runner_mod
+
+    changed = BASE_ROWS + [
+        ("alpha", "4", '{"v": 4}', False, "2024-01-15 00:00:00"),
+        ("beta", "11", '{"v": 11}', False, "2024-01-15 00:00:00"),
+    ]
+    sinks, marks = [], []
+    for name in ("ok", "bad"):
+        sink = VersionedSink(str(tmp_path / name))
+        full_sync(spark, _docs(spark, BASE_ROWS), sink, now=datetime(2024, 2, 1))
+        wm = WatermarkStore(str(tmp_path / f"{name}_wm.json"))
+        wm.set("default", datetime(2024, 1, 10))
+        sinks.append(sink)
+        marks.append(wm)
+
+    original = DataFrameWriter.parquet
+    calls = {"n": 0, "fail": 1}
+
+    def lossy_parquet(self, path, *args, **kwargs):
+        original(self, path, *args, **kwargs)
+        if "_stage_" in path:
+            calls["n"] += 1
+            if calls["n"] <= calls["fail"]:
+                raise RuntimeError("staged write lost")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", lossy_parquet)
+    slept = []
+    report = incremental_sync(
+        spark, _docs(spark, changed), sinks[0], marks[0],
+        now=datetime(2024, 2, 2), retries=1, retry_delay_s=2.0,
+        sleep=slept.append,
+    )
+    assert calls["n"] == 2 and slept == [2.0]
+    assert report.retried == {"alpha": 1, "beta": 1}
+    assert report.rolled_back == []
+    assert report.written == {"alpha": 1, "beta": 1}
+    assert report.published_rows == {"alpha": 3, "beta": 2}
+    assert not _stage_dirs(sinks[0])
+    assert marks[0].get("default") == datetime(2024, 2, 2)
+
+    reports = []
+
+    class SpyReport(SyncReport):
+        def __init__(self):
+            super().__init__()
+            reports.append(self)
+
+    monkeypatch.setattr(runner_mod, "SyncReport", SpyReport)
+    calls.update(n=0, fail=2)
+    bad = sinks[1]
+    with open(os.path.join(bad.base_dir, "manifest.json"), "rb") as f:
+        manifest = f.read()
+    with pytest.raises(RuntimeError, match="staged write lost"):
+        incremental_sync(
+            spark, _docs(spark, changed), bad, marks[1],
+            now=datetime(2024, 2, 2), retries=1, sleep=slept.append,
+        )
+    assert calls["n"] == 2
+    assert sorted(reports[0].rolled_back) == ["alpha", "beta"]
+    assert reports[0].written == {}
+    with open(os.path.join(bad.base_dir, "manifest.json"), "rb") as f:
+        assert f.read() == manifest
+    assert sorted(bad.list_generations()) == sorted(bad.read_manifest().values())
+    assert not _stage_dirs(bad)
+    assert marks[1].get("default") == datetime(2024, 1, 10)
+
+
+def test_awkward_index_names_merge_and_rebuild(spark, tmp_path):
+    """Index names that partition inference would retype ('007' -> 7) or
+    that Spark escapes in a path ('a:b' -> 'a%3Ab') go through an
+    incremental merge and a schema-drift rebuild, and each lands in its own
+    generation holding the audited count."""
+    v1 = '{"schema_maintainer": {"schema_name": "v1"}}'
+    v2 = '{"schema_maintainer": {"schema_name": "v2"}}'
+    base = [
+        ("007", "1", '{"v": 1}', False, "2024-01-01 00:00:00"),
+        ("007", "2", '{"v": 2}', False, "2024-01-01 00:00:00"),
+        ("a:b", "5", v1, False, "2024-01-01 00:00:00"),
+        ("a:b", "6", v1, False, "2024-01-01 00:00:00"),
+    ]
+    sink = VersionedSink(str(tmp_path / "sink"))
+    report = full_sync(spark, _docs(spark, base), sink, now=datetime(2024, 2, 1))
+    assert report.written == {"007": 2, "a:b": 2}
+    wm = WatermarkStore(str(tmp_path / "wm.json"))
+    wm.set("default", datetime(2024, 1, 10))
+    changed = [
+        ("007", "1", '{"v": 1}', False, "2024-01-01 00:00:00"),
+        ("007", "2", "{}", True, "2024-01-15 00:00:00"),
+        ("007", "3", '{"v": 3}', False, "2024-01-15 00:00:00"),
+        ("007", "4", '{"v": 4}', False, "2024-01-15 00:00:00"),
+        ("a:b", "5", v2, False, "2024-01-01 00:00:00"),
+        ("a:b", "6", v2, False, "2024-01-01 00:00:00"),
+        ("a:b", "7", v2, False, "2024-01-15 00:00:00"),
+    ]
+    report = incremental_sync(
+        spark, _docs(spark, changed), sink, wm, now=datetime(2024, 2, 2)
+    )
+    assert report.rebuilt == ["a:b"]
+    assert report.written == {"007": 3, "a:b": 3}
+    assert report.published_rows == {"007": 3, "a:b": 3}
+    assert report.reconcile_ok == {"007": True, "a:b": True}
+    assert sink.read_manifest() == {
+        "007": "007_2024-02-02t00.00.00", "a:b": "a:b_2024-02-02t00.00.00",
+    }
+    assert {r.id for r in sink.read_alias(spark, "007").collect()} == {
+        "1", "3", "4",
+    }
+    rebuilt = {r.id: r.document for r in sink.read_alias(spark, "a:b").collect()}
+    assert rebuilt == {"5": v2, "6": v2, "7": v2}
+
+
+def test_drift_probe_reads_live_rows_and_both_sides(spark, tmp_path):
+    """The T7 probe compares the lowest-id LIVE document of each side: a
+    tombstone holding the source's lowest id, with another schema_name,
+    does not force a rebuild; a drifted document that only the sink still
+    holds does."""
+    org_a = '{"schema_maintainer": {"schema_name": "Org A"}}'
+    org_x = '{"schema_maintainer": {"schema_name": "Org X"}}'
+    rows = [
+        ("alpha", "0", org_x, True, "2024-01-01 00:00:00"),
+        ("alpha", "1", org_a, False, "2024-01-01 00:00:00"),
+        ("alpha", "2", org_a, False, "2024-01-01 00:00:00"),
+    ]
+    sink = VersionedSink(str(tmp_path / "sink"))
+    full_sync(spark, _docs(spark, rows), sink, now=datetime(2024, 2, 1))
+    wm = WatermarkStore(str(tmp_path / "wm.json"))
+    wm.set("default", datetime(2024, 1, 10))
+    rows.append(("alpha", "3", org_a, False, "2024-01-15 00:00:00"))
+    report = incremental_sync(
+        spark, _docs(spark, rows), sink, wm, now=datetime(2024, 2, 2)
+    )
+    assert report.rebuilt == []
+    assert report.written == {"alpha": 1}
+
+    # the published generation still carries an old schema_name on its
+    # lowest id, while every source document has moved on
+    stale = spark.createDataFrame(
+        [("1", org_x), ("2", org_a), ("3", org_a)],
+        "id string, document string",
+    )
+    sink.publish(
+        "alpha", sink.write_generation(stale, "alpha", "2024-02-03t00.00.00")
+    )
+    wm.set("default", datetime(2024, 1, 10))
+    report = incremental_sync(
+        spark, _docs(spark, rows), sink, wm, now=datetime(2024, 2, 4)
+    )
+    assert report.rebuilt == ["alpha"]
+    assert report.written == {"alpha": 3}
+    state = {r.id: r.document for r in sink.read_alias(spark, "alpha").collect()}
+    assert state == {"1": org_a, "2": org_a, "3": org_a}
 
 
 def test_adaptive_bulk_shrink_steps_down(spark):

@@ -251,6 +251,27 @@ def test_one_pass_publishes_empty_generation_for_all_tombstone_index(
     assert report.written["gamma"] == 0
     assert report.reconcile_ok["gamma"] is True
     assert one.alias_exists("gamma")
+    # the empty generation carries the document schema and nothing else,
+    # so a reader that infers it can still union (id, document) rows in
+    gen = one.generation_path(one.read_manifest()["gamma"])
+    assert spark.read.parquet(gen).columns == ["id", "document"]
+
+    from prefect_flow_arc_indexer_spark.streaming import jobs
+    from tests.test_streaming import _write_cdc_file
+
+    src = tmp_path / "cdc"
+    src.mkdir()
+    _write_cdc_file(src / "b0.json", [{
+        "index": "gamma", "id": "31", "document": '{"v": 31}',
+        "is_deleted": "false", "updated_at": "2024-02-02 00:00:00",
+    }])
+    jobs.stream_incremental_sink(
+        jobs.read_cdc_stream(spark, str(src)), spark, one,
+        str(tmp_path / "ckpt"),
+    ).awaitTermination(180)
+    assert [tuple(r) for r in one.read_alias(spark, "gamma").collect()] == [
+        ("31", '{"v": 31}')
+    ]
 
 
 def test_cli_one_pass_bucketed_flags(tmp_path, capsys):
