@@ -67,13 +67,6 @@ def build_parser() -> argparse.ArgumentParser:
     run.add_argument("--retries", type=int, default=0)
     run.add_argument("--retry-delay", type=float, default=0.0)
     run.add_argument(
-        "--bucketed",
-        action="store_true",
-        help="write generations hash-bucketed by id so incremental merges "
-        "rewrite only touched buckets",
-    )
-    run.add_argument("--n-buckets", type=int, default=16)
-    run.add_argument(
         "--keep-generations",
         type=int,
         default=None,
@@ -160,8 +153,6 @@ def main(argv: list[str] | None = None) -> int:
             or_ids=or_ids,
             retries=args.retries,
             retry_delay_s=args.retry_delay,
-            bucketed=args.bucketed,
-            n_buckets=args.n_buckets,
         )
         # the reference records last_modified after EITHER flow completes
         # (save_last_run_config on-completion hook, flows/main_flow.py:603),
@@ -177,8 +168,6 @@ def main(argv: list[str] | None = None) -> int:
             or_ids=or_ids,
             retries=args.retries,
             retry_delay_s=args.retry_delay,
-            bucketed=args.bucketed,
-            n_buckets=args.n_buckets,
         )
     if args.es_nodes and report.written:
         # mirror the run to ES over the connector-less REST bulk path

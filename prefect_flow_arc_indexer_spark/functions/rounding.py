@@ -14,9 +14,12 @@ Java BigDecimal has no signed zero, so results are normalized with
 The vectorized fast path (``floor(y*10^s + 0.5)`` sign-aware) agrees with
 the decimal semantics except within a tiny window of the .5 boundaries
 (binary product error vs decimal shifting); values inside the window are
-re-evaluated through Decimal. The window (1e-4 of a unit in the rounded
-digit) is orders of magnitude wider than the 1-ulp product error that can
-move a value across a boundary.
+re-evaluated through Decimal. The window is 1e-4 of a unit in the rounded
+digit, or 2**-44 of the scaled value where that is wider: the product
+error that can move a value across a boundary is a few ulps of the scaled
+value, which outgrows the fixed window above ~5e11 (and from 2**52 every
+double is an integer, so ``ys + 0.5`` itself rounds). Below ~1.8e9 the
+fixed window is the wider one.
 """
 
 from __future__ import annotations
@@ -35,14 +38,20 @@ def _decimal_round(x: float, scale: int) -> float:
     return float(d) + 0.0
 
 
+def _near_half(ys: np.ndarray) -> np.ndarray:
+    """The elements of ``ys`` too close to a .5 boundary for the fast path."""
+    frac = np.abs(ys - np.trunc(ys))
+    window = np.maximum(_BOUNDARY_WINDOW, np.abs(ys) * 2.0**-44)
+    return np.abs(frac - 0.5) < window
+
+
 def spark_round_half_up(y: np.ndarray, scale: int) -> np.ndarray:
     """round(y, scale) for a float64 array, bit-identical to Spark."""
     s = float(10**scale)
     ys = y * s
     fast = np.where(ys >= 0, np.floor(ys + 0.5), np.ceil(ys - 0.5))
     out = fast / s + 0.0
-    frac = np.abs(ys - np.trunc(ys))
-    sus = np.abs(frac - 0.5) < _BOUNDARY_WINDOW
+    sus = _near_half(ys)
     if sus.any():
         for i in np.nonzero(sus)[0]:
             out[i] = _decimal_round(float(y[i]), scale)
@@ -53,8 +62,7 @@ def spark_round_half_up_long(y: np.ndarray) -> np.ndarray:
     """``round(y).cast('bigint')`` for a float64 array, bit-identical to
     Spark (scale 0, result as int64)."""
     fast = np.where(y >= 0, np.floor(y + 0.5), np.ceil(y - 0.5))
-    frac = np.abs(y - np.trunc(y))
-    sus = np.abs(frac - 0.5) < _BOUNDARY_WINDOW
+    sus = _near_half(y)
     if sus.any():
         fast = fast.copy()
         for i in np.nonzero(sus)[0]:

@@ -124,9 +124,11 @@ SELECT d.lang AS declared_lang, p.predicted_lang,
         )
 
         docs = load_table(spark, sf_dir, "documents", fan_out=True)
-        # the oracle's inner join on doc_id keeps every document row:
-        # q_lang_id emits one row per doc unconditionally, so the fused
-        # one-scan row set is identical by construction
+        # equal to the oracle's inner self-join on doc_id only while doc_id
+        # is unique and non-null: a duplicate would multiply the join's
+        # rows and a NULL would drop them, where this one scan counts each
+        # row once. The corpus generator emits doc_id as the documents
+        # table's unique non-null key.
         pred = lang_id_frame(docs, [F.col("lang").alias("declared_lang")])
         return pred.groupBy("declared_lang", "predicted_lang").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -608,16 +608,16 @@ def q_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         cmat = np.array([c for _, c in cents], dtype=np.float64)
         cell_ids = [lbl for lbl, _ in cents]
         cnorm = np.sqrt(np.cumsum(cmat * cmat, axis=1)[:, -1])
-    for qid, qv in queries:
-        qa = np.array(qv, dtype=np.float64)
-        dots = np.cumsum(qa[None, :] * cmat, axis=1)[:, -1]
-        qn = float(np.sqrt(np.cumsum(qa * qa)[-1]))
-        cos = dots / (qn * cnorm)
-        r6 = spark_round_half_up(cos, 6)
-        order = sorted(
-            (float(-r6[i]), cell_ids[i]) for i in range(len(cell_ids))
-        )
-        probes[qid] = [cell for _, cell in order[:PQ_NPROBE]]
+        for qid, qv in queries:
+            qa = np.array(qv, dtype=np.float64)
+            dots = np.cumsum(qa[None, :] * cmat, axis=1)[:, -1]
+            qn = float(np.sqrt(np.cumsum(qa * qa)[-1]))
+            cos = dots / (qn * cnorm)
+            r6 = spark_round_half_up(cos, 6)
+            order = sorted(
+                (float(-r6[i]), cell_ids[i]) for i in range(len(cell_ids))
+            )
+            probes[qid] = [cell for _, cell in order[:PQ_NPROBE]]
     scored = e.select("vec_id", "x").mapInArrow(
         _pq_rowwise_kernel(cents, queries, probes),
         "query_id bigint, neighbor_id bigint, adc_dist double",

@@ -16,9 +16,10 @@
   633-640,652).
 
 So a run costs a fixed number of Spark jobs however many indexes exist or
-are touched (hash-bucketed merges excepted): the reference's per-index
-count, probe, write and reconcile are each one grouped job here, and only
-the renames and manifest flips of the publish stay per index. X4 retries
+are touched: the reference's per-index count, probe, write and reconcile
+are each one grouped job here, and only the renames and manifest flips of
+the publish stay per index. Every generation has one layout, the
+``partitionBy("index")`` stage's directory of parquet files. X4 retries
 (reference ``flows/main_flow.py:722-723``): a failed write or publish
 rolls back what it half-wrote, sleeps and retries; only after exhaustion
 does the run abort. X3's separate pool for the two largest indexes
@@ -45,15 +46,8 @@ from pyspark.sql import (
     SparkSession,
     functions as F,
 )
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
-from prefect_flow_arc_indexer_spark.pipeline.bucketed import (
-    _write_marker,
-    bucket_count,
-    bucket_of,
-    merge_bucketed,
-    write_generation_bucketed,
-)
 from prefect_flow_arc_indexer_spark.pipeline.sinks import (
     VersionedSink,
     generation_timestamp,
@@ -219,23 +213,14 @@ def _unescape_partition_value(s: str) -> str:
     return "".join(out)
 
 
-def _part_cols(n_buckets: int | None) -> list[str]:
-    return ["index"] if n_buckets is None else ["index", "bucket"]
+def _stage_rows(rows: DataFrame) -> DataFrame:
+    """``rows`` in the stage's column layout: the ``index`` partition
+    column, then the document."""
+    return rows.select("index", "id", "document")
 
 
-def _stage_rows(rows: DataFrame, n_buckets: int | None) -> DataFrame:
-    """``rows`` in the stage's column layout: the partition columns (with
-    the id-hash ``bucket`` when ``n_buckets`` is set), then the document."""
-    if n_buckets is not None:
-        rows = rows.withColumn("bucket", bucket_of(F.col("id"), n_buckets))
-    return rows.select(*_part_cols(n_buckets), "id", "document")
-
-
-def one_pass_live(
-    docs: DataFrame, indexes: list[str], n_buckets: int | None = None
-) -> DataFrame:
+def one_pass_live(docs: DataFrame, indexes: list[str]) -> DataFrame:
     """Every index's live documents in ONE frame, rebalanced on ``index``
-    (plus ``bucket`` when ``n_buckets`` lays down the hash-bucketed layout)
     so the ``partitionBy`` write emits each directory from few tasks. A
     ``REBALANCE`` rather than a hash repartition: AQE splits a skewed
     partition, so an index holding a third of the corpus is still written
@@ -243,9 +228,7 @@ def one_pass_live(
     ONCE, not O(#indexes) times -- the Spark-native improvement over the
     reference's one-SQL-per-index shape (flows/main_flow.py:317-343)."""
     live = docs.where(F.col("index").isin(indexes) & ~F.col("is_deleted"))
-    return _stage_rows(live, n_buckets).hint(
-        "rebalance", *_part_cols(n_buckets)
-    )
+    return _stage_rows(live).hint("rebalance", "index")
 
 
 def _stage_audit_publish(
@@ -254,7 +237,6 @@ def _stage_audit_publish(
     frame: DataFrame,
     timestamps: dict[str, str],
     ts: str,
-    n_buckets: int | None,
     report: SyncReport,
     retry,
 ) -> None:
@@ -289,7 +271,7 @@ def _stage_audit_publish(
                 F.count_if(F.col("index") == i).alias(f"c_{n}")
                 for n, i in enumerate(indexes)
             )),
-            "_stage", ts, partition_by=_part_cols(n_buckets),
+            "_stage", ts, partition_by=["index"],
         )
         counts = obs.get  # blocks until the write job finishes
         expected.update((i, counts[f"c_{n}"]) for n, i in enumerate(indexes))
@@ -308,10 +290,9 @@ def _stage_audit_publish(
         if staged_dirs:
             # a new StructType: ``.add`` would append to ``schema``'s own
             # field list, which the all-tombstone branch below writes with
-            part_fields = [StructField("index", StringType())]
-            if n_buckets is not None:
-                part_fields.append(StructField("bucket", IntegerType()))
-            audit_schema = StructType([*schema.fields, *part_fields])
+            audit_schema = StructType(
+                [*schema.fields, StructField("index", StringType())]
+            )
             # the dirs, not the '_stage' root Spark warns is hidden
             audited = {
                 r["index"]: r["count"]
@@ -337,8 +318,6 @@ def _stage_audit_publish(
                 want = expected[index]
                 if os.path.isdir(part_dir) and not os.path.isdir(gen_path):
                     shutil.move(part_dir, gen_path)
-                    if n_buckets is not None:
-                        _write_marker(gen_path, n_buckets)
                 if not os.path.isdir(gen_path):
                     if want > 0:
                         # publishing would put an EMPTY generation over
@@ -348,15 +327,11 @@ def _stage_audit_publish(
                             f"expected {want} docs but {gen_path} is absent"
                         )
                     # an all-tombstone index stages no partition: publish
-                    # an empty generation, bucketed when asked so the
-                    # index keeps its O(touched-buckets) merge cost class
-                    empty = spark.createDataFrame([], schema)
-                    if n_buckets is not None:
-                        write_generation_bucketed(
-                            sink, empty, index, timestamps[index], n_buckets
-                        )
-                    else:
-                        sink.write_generation(empty, index, timestamps[index])
+                    # an empty generation
+                    sink.write_generation(
+                        spark.createDataFrame([], schema), index,
+                        timestamps[index],
+                    )
                 report.reconcile_ok[index] = True
                 sink.publish(index, gen)
                 report.published_rows[index] = want
@@ -383,17 +358,12 @@ def full_sync(
     retries: int = 0,
     retry_delay_s: float = 0.0,
     sleep=time.sleep,
-    bucketed: bool = False,
-    n_buckets: int = 16,
 ) -> SyncReport:
     """E1: full rebuild with write-audit-publish per index.
 
     One stats job lists and sizes the indexes; :func:`one_pass_live` (a
     single fact-table scan) feeds :func:`_stage_audit_publish`, which
     stages, audits and publishes every index smallest first.
-    ``bucketed=True`` lays generations out hash-bucketed by id
-    (``pipeline.bucketed``) so later incremental merges rewrite only
-    touched buckets.
     """
     report = SyncReport()
     pinned = [x.lower() for x in or_ids] if or_ids else None  # P8, :640
@@ -404,10 +374,9 @@ def full_sync(
     if not report.indexes:
         return report
     ts = generation_timestamp(now)
-    n = n_buckets if bucketed else None
     _stage_audit_publish(
-        spark, sink, one_pass_live(docs, report.indexes, n),
-        dict.fromkeys(report.indexes, ts), ts, n, report,
+        spark, sink, one_pass_live(docs, report.indexes),
+        dict.fromkeys(report.indexes, ts), ts, report,
         partial(_run_with_retries, report=report, retries=retries,
                 retry_delay_s=retry_delay_s, sleep=sleep),
     )
@@ -426,8 +395,6 @@ def incremental_sync(
     retries: int = 0,
     retry_delay_s: float = 0.0,
     sleep=time.sleep,
-    bucketed: bool = False,
-    n_buckets: int = 16,
 ) -> SyncReport:
     """E2: CDC merge since the inclusive watermark, tombstones propagated;
     schema drift forces a full per-index rebuild (T7).
@@ -437,13 +404,8 @@ def incremental_sync(
     merged aliases' rows ``LEFT ANTI JOIN`` the delta's ``(index, id)``
     plus the source's live rows of rebuilt indexes and of the delta. A
     failed staged write publishes none of them and leaves the watermark,
-    so the next run replays the delta (safe: idempotent by id). With
-    ``bucketed=True`` every staged generation is hash-bucketed.
-
-    An already hash-bucketed alias merges through
-    ``pipeline.bucketed.merge_bucketed`` instead: only buckets holding
-    touched ids are rewritten, the rest are hard-linked into the new
-    generation — O(touched) I/O per batch instead of O(corpus)."""
+    so the next run replays the delta (safe: idempotent by id). A merged
+    index is rewritten whole: O(index) I/O per run, not O(delta)."""
     report = SyncReport()
     wm = watermarks.get(pipeline_name)
     if wm is None:
@@ -462,18 +424,12 @@ def incremental_sync(
     published = [i for i in touched if i in manifest]
     report.rebuilt = _drifted(spark, docs, sink, published, schema, schema_path)
     merged = [i for i in published if i not in report.rebuilt]
-    in_buckets = [i for i in merged if bucket_count(sink, manifest[i]) is not None]
-    merged = [i for i in merged if i not in in_buckets]
-    rebuild = [i for i in touched if i not in merged and i not in in_buckets]
+    rebuild = [i for i in touched if i not in merged]
     ts = generation_timestamp(run_started)
-    n = n_buckets if bucketed else None
-    delta = docs.where(changed(wm))
-    retry = partial(_run_with_retries, report=report, retries=retries,
-                    retry_delay_s=retry_delay_s, sleep=sleep)
 
-    if rebuild or merged:
+    if touched:
         fresh = docs.where(F.col("index").isin(rebuild) | changed(wm))
-        frame = one_pass_live(fresh, rebuild + merged, n)
+        frame = one_pass_live(fresh, rebuild + merged)
         if merged:
             old = _aliases(spark, sink, merged, schema)
             # idempotent by id: delete-then-insert covers upsert +
@@ -481,45 +437,23 @@ def incremental_sync(
             # the anti join into each branch of the union, and a per-column
             # key would filter the delta side per branch (one broadcast job
             # per index); this way every branch probes one broadcast.
-            touched_keys = delta.where(F.col("index").isin(merged)).select(
-                F.struct("index", "id").alias("key")
-            )
+            touched_keys = docs.where(
+                changed(wm) & F.col("index").isin(merged)
+            ).select(F.struct("index", "id").alias("key"))
             kept = old.join(
                 touched_keys,
                 F.struct(old["index"], old["id"]) == touched_keys["key"],
                 "left_anti",
             )
-            frame = _stage_rows(kept, n).unionByName(frame)
+            frame = _stage_rows(kept).unionByName(frame)
         _stage_audit_publish(
             spark, sink, frame,
-            {i: _collision_free_ts(sink, i, ts, run_started)
-             for i in touched if i not in in_buckets},
-            ts, n, report, retry,
+            {i: _collision_free_ts(sink, i, ts, run_started) for i in touched},
+            ts, report,
+            partial(_run_with_retries, report=report, retries=retries,
+                    retry_delay_s=retry_delay_s, sleep=sleep),
         )
         report.written.update({i: touched[i] for i in merged})
-
-    for index in in_buckets:
-        # bucketed merge: rewrite only buckets containing touched ids
-        idx_ts = _collision_free_ts(sink, index, ts, run_started)
-        gen = sink.generation_name(index, idx_ts)
-
-        def attempt(index=index, gen=gen, idx_ts=idx_ts):
-            batch = delta.where(F.col("index") == index)
-            merge_bucketed(
-                spark, sink, index,
-                batch.select("id", "document", "is_deleted"), idx_ts,
-            )
-            sink.publish(index, gen)
-
-        retry([index], attempt, lambda gen=gen: sink.drop_generation(gen))
-        report.written[index] = touched[index]
-    if in_buckets:
-        # the merged generations' row counts, in one footer-count job
-        counts = _aliases(spark, sink, in_buckets, schema).groupBy(
-            "index"
-        ).count().collect()
-        report.published_rows.update(dict.fromkeys(in_buckets, 0))
-        report.published_rows.update({r["index"]: r["count"] for r in counts})
 
     # T1: the *run start* becomes the next watermark (rows updated while the
     # run was in flight re-deliver next time; safe by idempotence)

@@ -122,8 +122,10 @@ class VersionedSink:
     ) -> DataFrame:
         reader = spark.read if schema is None else spark.read.schema(schema)
         df = reader.parquet(self.generation_path(generation))
-        # hash-bucketed generations (pipeline.bucketed) carry a physical
-        # `bucket` partition column; readers see the logical document schema
+        # a generation that an earlier release wrote hash-bucketed lays its
+        # files out under bucket=N/ dirs, which Spark reads back as a
+        # `bucket` column; dropping it keeps such an alias readable as
+        # (id, document) until the next merge or full sync rewrites it plain
         if "bucket" in df.columns:
             df = df.drop("bucket")
         return df
@@ -204,21 +206,15 @@ class VersionedSink:
         the existing write-audit-publish path — readers see the old or the
         new generation, never a half-compacted directory — and the row
         count is reconciled before the flip (X7 discipline). Returns the
-        new generation name. Bucketed generations delegate to
-        ``pipeline.bucketed.compact_bucketed`` so the merge-friendly
-        layout survives compaction."""
-        from prefect_flow_arc_indexer_spark.pipeline.bucketed import (
-            bucket_count,
-            compact_bucketed,
-        )
-
-        if bucket_count(self, self.read_manifest()[alias]) is not None:
-            return compact_bucketed(spark, self, alias, target_bytes, now)
+        new generation name."""
         df = self.read_alias(spark, alias)
         gen_dir = self.generation_path(self.read_manifest()[alias])
+        # walked, not listed: a legacy bucketed generation keeps its files
+        # in bucket=N/ subdirectories
         size = sum(
-            os.path.getsize(os.path.join(gen_dir, f))
-            for f in os.listdir(gen_dir)
+            os.path.getsize(os.path.join(root, f))
+            for root, _, files in os.walk(gen_dir)
+            for f in files
             if f.endswith(".parquet")
         )
         n_files = max(1, -(-size // target_bytes))

@@ -581,7 +581,6 @@ def stream_incremental_sink(
     spark: SparkSession,
     sink,
     checkpoint_dir: str,
-    n_buckets: int | None = None,
 ):
     """The reference's incremental flow (E2) as a STREAM: each micro-batch
     is last-writer-wins-compacted per id, split per target index, and
@@ -607,18 +606,7 @@ def stream_incremental_sink(
     This is the piece that makes the engine a drop-in for the reference's
     stream task (flows/main_flow.py:712-723): point ``read_cdc_stream`` at
     the CDC drop location and the sink stays continuously synced.
-
-    I/O class per micro-batch: when the published generation is
-    hash-bucketed (``pipeline.bucketed`` — pass ``n_buckets`` to seed new
-    aliases in that layout), the merge rewrites ONLY the buckets containing
-    the batch's ids and hard-links the rest: O(touched buckets), not
-    O(corpus), which is what keeps a 100 TB index continuously syncable.
     """
-    from prefect_flow_arc_indexer_spark.pipeline.bucketed import (
-        bucket_count,
-        merge_bucketed,
-        write_generation_bucketed,
-    )
     from prefect_flow_arc_indexer_spark.pipeline.sinks import (
         generation_timestamp,
     )
@@ -644,26 +632,10 @@ def stream_incremental_sink(
             b = latest.where(F.col("index") == idx)
             upserts = b.where(~F.col("is_deleted")).select("id", "document")
             if sink.alias_exists(idx):
-                if bucket_count(sink, sink.read_manifest()[idx]) is not None:
-                    gen = merge_bucketed(
-                        spark,
-                        sink,
-                        idx,
-                        b.select("id", "document", "is_deleted"),
-                        ts,
-                    )
-                    sink.publish(idx, gen)
-                    continue
                 old = sink.read_alias(spark, idx)
                 merged = old.join(
                     b.select("id"), "id", "left_anti"
                 ).unionByName(upserts)
-            elif n_buckets:
-                gen = write_generation_bucketed(
-                    sink, upserts, idx, ts, n_buckets
-                )
-                sink.publish(idx, gen)
-                continue
             else:
                 merged = upserts
             gen = sink.write_generation(merged, idx, ts)

@@ -12,7 +12,7 @@ Gated on the environment scripts/e2e_live.sh exports after bringing up
 docker/e2e-compose.yml — on machines without a Docker daemon every test
 here SKIPS, keeping the suite's existing env-skip posture (the REST
 contract itself stays covered by the mocked-transport tests in
-tests/test_lifecycle.py / test_pipeline.py).
+tests/test_pipeline.py and tests/test_round6_pipeline.py).
 """
 
 from __future__ import annotations

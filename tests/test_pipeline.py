@@ -466,23 +466,21 @@ def test_one_pass_full_sync_matches_python_live_set(spark, tmp_path):
 def test_one_pass_plan_scans_fact_table_once(spark, tmp_path):
     """The full-sync data plane is ONE FileScan (not one per index) and ONE
     shuffle, a rebalance rather than a hash repartition, so AQE can split
-    a large index over many write tasks; the bucketed layout rebalances on
-    (index, bucket) in that same shuffle."""
+    a large index over many write tasks."""
     from prefect_flow_arc_indexer_spark.pipeline.runner import one_pass_live
 
     src = str(tmp_path / "docs_parquet")
     _docs(spark, _three_index_rows()).write.parquet(src)
     docs = spark.read.parquet(src)
-    for n_buckets in (None, 4):
-        plan = (
-            one_pass_live(docs, ["alpha", "beta", "gamma"], n_buckets)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("FileScan parquet") == 1
-        assert plan.count("Exchange") == 1
-        assert "REBALANCE_PARTITIONS_BY_COL" in plan
+    plan = (
+        one_pass_live(docs, ["alpha", "beta", "gamma"])
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("FileScan parquet") == 1
+    assert plan.count("Exchange") == 1
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan
 
 
 def _parquet_docs(spark, tmp_path, name, rows):
@@ -802,38 +800,6 @@ def test_read_files_formats_agree(spark, tmp_path):
         read_files(spark, staged["json"], "json")
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Same-bucketed tables joined on the bucket key must plan with zero
-    ShuffleExchange operators (the write-time shuffle replaces every
-    join-time shuffle), and produce the same rows as the plain join."""
-    from prefect_flow_arc_indexer_spark.pipeline.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-    from prefect_flow_arc_indexer_spark.sources.parquet import load_table
-
-    orders = load_table(spark, "/root/testdata/sf0.001", "orders")
-    cust = load_table(spark, "/root/testdata/sf0.001", "customer").withColumnRenamed(
-        "c_custkey", "o_custkey"
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(orders, "t_orders_b", "o_custkey", 8)
-        write_bucketed(cust, "t_cust_b", "o_custkey", 8)
-        joined = bucketed_join(spark, "t_orders_b", "t_cust_b", "o_custkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        got = joined.count()
-        want = orders.join(cust, "o_custkey").count()
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_cust_b")
-
-
 def test_cli_full_then_incremental_roundtrip(spark, tmp_path, capsys):
     """The __main__ CLI mirrors the reference's flow parameters: a full
     sync publishes every index and seeds the watermark (the reference's
@@ -908,6 +874,33 @@ def test_sink_compaction_reduces_files_and_preserves_rows(spark, sink):
         spark, "alpha", target_bytes=10**9, now=datetime(2024, 2, 2)
     )
     assert gen2 != gen
+    assert sink.read_alias(spark, "alpha").count() == 200
+
+
+def test_compact_rewrites_legacy_bucketed_alias_plain(spark, sink):
+    """An alias an earlier release wrote hash-bucketed (bucket=N/ dirs)
+    compacts by its real byte size into a plain generation."""
+    legacy = sink.generation_name("alpha", "2024-02-01t00.00.00")
+    path = sink.generation_path(legacy)
+    spark.range(200).selectExpr(
+        "CAST(id AS STRING) AS id", "repeat('x', 100) AS document",
+        "CAST(id % 2 AS INT) AS bucket",
+    ).repartition(8).write.partitionBy("bucket").parquet(path)
+    sink.publish("alpha", legacy)
+    size = sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+    gen = sink.compact(
+        spark, "alpha", target_bytes=size // 3 + 1, now=datetime(2024, 2, 2)
+    )
+    new_dir = sink.generation_path(gen)
+    assert not any(e.startswith("bucket=") for e in os.listdir(new_dir))
+    assert len([f for f in os.listdir(new_dir) if f.endswith(".parquet")]) == 3
+    assert spark.read.parquet(new_dir).columns == ["id", "document"]
     assert sink.read_alias(spark, "alpha").count() == 200
 
 

@@ -85,3 +85,13 @@ def test_pq_queries_share_one_result_shape(spark):
             assert adc[key] == r["adc_dist"], key
     rec = all_queries()["q_pq_recall"].builder(spark, SF_DIR).collect()
     assert all(0 <= r["n_hits"] <= r["k_exact"] for r in rec)
+
+
+def test_ivfpq_empty_codebook_with_queries_is_empty(spark, monkeypatch):
+    """An empty codebook over a non-empty query set probes nothing: the
+    search returns no rows instead of reaching the probe loop without a
+    centroid matrix."""
+    import prefect_flow_arc_indexer_spark.operators.pq as pq
+
+    monkeypatch.setattr(pq, "_collect_codebook", lambda e: [])
+    assert pq.q_ivfpq_adc(spark, SF_DIR).collect() == []

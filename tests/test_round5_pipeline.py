@@ -272,29 +272,3 @@ def test_one_pass_publishes_empty_generation_for_all_tombstone_index(
     assert [tuple(r) for r in one.read_alias(spark, "gamma").collect()] == [
         ("31", '{"v": 31}')
     ]
-
-
-def test_cli_one_pass_bucketed_flags(tmp_path, capsys):
-    """The CLI's --bucketed full sync lays down bucketed generations through
-    the single-scan data plane."""
-    import json as _json
-
-    from prefect_flow_arc_indexer_spark.__main__ import main
-    from prefect_flow_arc_indexer_spark.pipeline.bucketed import bucket_count
-
-    sink_dir = str(tmp_path / "cli_sink")
-    rc = main(
-        [
-            "--source", "/root/testdata/sf0.001",
-            "--sink-dir", sink_dir,
-            "--full-sync",
-            "--bucketed",
-            "--n-buckets", "4",
-        ]
-    )
-    assert rc == 0
-    report = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert report["written"] and all(report["reconcile_ok"].values())
-    sink = VersionedSink(sink_dir)
-    for idx, gen in sink.read_manifest().items():
-        assert bucket_count(sink, gen) == 4, idx

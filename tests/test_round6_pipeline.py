@@ -1,6 +1,6 @@
 """Round-6 pipeline fixes (VERDICT r5 tasks 4/7/8 + ADVICE r5): the CLI
 ES mirror end-to-end over a real REST stub (delta-only upserts + tombstone
-deletes), one-pass publish guards, and the bucketed empty-generation marker.
+deletes), one-pass publish guards, and the plain layout every merge writes.
 """
 
 from __future__ import annotations
@@ -543,12 +543,20 @@ def test_one_pass_missing_stage_aborts_instead_of_empty_publish(
     assert "alpha" not in sink.read_manifest()
 
 
-def test_one_pass_all_tombstone_bucketed_keeps_bucket_marker(spark, tmp_path):
-    """An all-tombstone index under bucketed one-pass must publish its empty
-    generation IN the bucketed layout — otherwise the index silently falls
-    back to O(corpus) full-rewrite merges forever (ADVICE r5)."""
-    from prefect_flow_arc_indexer_spark.pipeline.bucketed import bucket_count
-    from prefect_flow_arc_indexer_spark.pipeline.runner import full_sync
+def test_all_tombstone_and_legacy_bucketed_aliases_merge_plain(
+    spark, tmp_path
+):
+    """Two generations the merge must read as plain ``id, document``: (a)
+    the empty generation an all-tombstone index publishes, and (b) one an
+    earlier release wrote hash-bucketed (``bucket=N/`` dirs plus a
+    ``_buckets.json`` marker). The next incremental run touching either
+    publishes a plain generation holding the merged rows."""
+    import os
+
+    from prefect_flow_arc_indexer_spark.pipeline.runner import (
+        full_sync,
+        incremental_sync,
+    )
 
     sink = VersionedSink(str(tmp_path / "sink"))
     docs = _docs(
@@ -558,35 +566,52 @@ def test_one_pass_all_tombstone_bucketed_keeps_bucket_marker(spark, tmp_path):
             ("ghost", "9", '{"v": 9}', True, "2024-01-01 00:00:00"),
         ],
     )
-    report = full_sync(
-        spark, docs, sink, now=datetime(2024, 2, 1),
-        bucketed=True, n_buckets=4,
-    )
+    report = full_sync(spark, docs, sink, now=datetime(2024, 2, 1))
     assert report.written == {"alpha": 1, "ghost": 0}
-    manifest = sink.read_manifest()
-    assert bucket_count(sink, manifest["ghost"]) == 4
-    assert bucket_count(sink, manifest["alpha"]) == 4
+    gen = sink.generation_path(sink.read_manifest()["ghost"])
+    assert spark.read.parquet(gen).columns == ["id", "document"]
     assert sink.read_alias(spark, "ghost").count() == 0
-    gen = sink.generation_path(manifest["ghost"])
-    assert spark.read.parquet(gen).columns == ["id", "document", "bucket"]
 
-    # a live document arriving later merges through merge_bucketed, which
-    # reads the generation with an inferred schema
-    from prefect_flow_arc_indexer_spark.pipeline.runner import incremental_sync
+    # hand-write alpha's generation in the retired bucketed layout
+    legacy = sink.generation_name("alpha", "2024-02-01t12.00.00")
+    legacy_path = sink.generation_path(legacy)
+    spark.createDataFrame(
+        [("1", '{"v": 1}', 0), ("2", '{"v": 2}', 1)],
+        "id string, document string, bucket int",
+    ).write.partitionBy("bucket").parquet(legacy_path)
+    with open(os.path.join(legacy_path, "_buckets.json"), "w") as f:
+        json.dump({"n_buckets": 2}, f)
+    sink.publish("alpha", legacy)
+    assert sink.read_alias(spark, "alpha").columns == ["id", "document"]
+    assert {r.id for r in sink.read_alias(spark, "alpha").collect()} == {
+        "1", "2"
+    }
 
     wm = WatermarkStore(str(tmp_path / "wm.json"))
     wm.set("default", datetime(2024, 2, 1))
     docs = docs.unionByName(_docs(
-        spark, [("ghost", "10", '{"v": 10}', False, "2024-02-02 00:00:00")]
+        spark,
+        [
+            ("ghost", "10", '{"v": 10}', False, "2024-02-02 00:00:00"),
+            ("alpha", "3", '{"v": 3}', False, "2024-02-02 00:00:00"),
+        ],
     ))
-    report = incremental_sync(
-        spark, docs, sink, wm, now=datetime(2024, 2, 3),
-        bucketed=True, n_buckets=4,
-    )
-    assert report.rebuilt == [] and report.published_rows == {"ghost": 1}
+    report = incremental_sync(spark, docs, sink, wm, now=datetime(2024, 2, 3))
+    assert report.rebuilt == []
+    # alpha keeps "2", which only the legacy generation held: a merge, not
+    # a rebuild from the source
+    assert report.published_rows == {"ghost": 1, "alpha": 3}
     assert [tuple(r) for r in sink.read_alias(spark, "ghost").collect()] == [
         ("10", '{"v": 10}')
     ]
+    assert sorted(
+        tuple(r) for r in sink.read_alias(spark, "alpha").collect()
+    ) == [("1", '{"v": 1}'), ("2", '{"v": 2}'), ("3", '{"v": 3}')]
+    for idx in ("alpha", "ghost"):
+        gen_path = sink.generation_path(sink.read_manifest()[idx])
+        assert spark.read.parquet(gen_path).columns == ["id", "document"]
+        assert not any(e.startswith("bucket=") for e in os.listdir(gen_path))
+    assert not os.path.exists(legacy_path)  # superseded, dropped at publish
 
 
 # -- ES retry/backoff parity (VERDICT r5 task 4) -------------------------------

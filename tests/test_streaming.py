@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from prefect_flow_arc_indexer_spark.streaming import jobs
+from tests.test_pipeline import BASE_ROWS, _docs
 
 
 def _write_cdc_file(path, rows):
@@ -752,3 +753,39 @@ def test_stream_doc_actions_with_es_stream_sink_carries_chunk(spark, tmp_path):
     q3 = jobs.stream_doc_actions(jobs.read_cdc_stream(spark, str(src)), es, ckpt)
     q3.awaitTermination(180)
     assert [(ids, c) for ids, c, _ in seen[3:]] == [("3", 450)]
+
+
+def test_es_stream_sink_carries_shrunken_chunk_across_batches(spark):
+    """T6 on the streaming path: a timeout in batch 0 shrinks the chunk
+    size, and batch 1 STARTS at the reduced size."""
+    from prefect_flow_arc_indexer_spark.operators.actions import doc_actions
+    from prefect_flow_arc_indexer_spark.pipeline.es_sink import (
+        EsSinkConfig,
+        EsStreamSink,
+    )
+
+    seen: list[int] = []
+    fail_once = {"armed": True}
+
+    def flaky_write(df, cfg):
+        seen.append(cfg.batch_entries)
+        if fail_once["armed"]:
+            fail_once["armed"] = False
+            raise TimeoutError("injected es.http.timeout")
+
+    es = EsStreamSink(
+        EsSinkConfig(nodes="example:9200", batch_entries=500),
+        write=flaky_write,
+        write_delete=lambda df, cfg: None,
+        sleep=lambda s: None,
+    )
+    batch = doc_actions(
+        _docs(spark, BASE_ROWS).where(F.col("index") == "alpha"),
+        timestamp=None,
+    )
+    es(batch, 0)
+    assert seen == [500, 450]  # injected timeout -> one -50 shrink
+    es(batch, 1)
+    assert seen[-1] == 450  # batch 1 starts at the carried-over size
+    assert es.cfg.batch_entries == 450
+    assert len(es.batches) == 2
