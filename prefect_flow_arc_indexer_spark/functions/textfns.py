@@ -3,6 +3,16 @@
 Every helper has a Spark form and a DuckDB-SQL form with identical semantics,
 so oracle queries stay exact. All Spark forms are built-in column expressions
 (codegen'd, no Python in the hot path).
+
+Lambda bodies (``transform``/``filter``) run interpreted, with no common-
+subexpression elimination, so anything a lambda reads that does not depend
+on the lambda variable is recomputed per element. :func:`word_ngrams`
+therefore takes the NAME of an already-projected token column, never an
+expression: the usual shape is
+``df.select("doc_id", tokens("text").alias("tok"))`` then
+``word_ngrams("tok", n)``, which tokenizes each document once.
+``scripts/explain_audit.py`` flags any plan that puts a column-reading
+expression inside a lambda body.
 """
 
 from __future__ import annotations
@@ -41,12 +51,22 @@ def dd_tokens(expr: str) -> str:
     )
 
 
-def word_ngrams(tok: Column, n: int) -> Column:
-    """Positional word n-grams of a token array; empty when len < n.
+def word_ngrams(tok: str, n: int) -> Column:
+    """Positional word n-grams of the token-array column named ``tok``;
+    empty when len < n.
 
-    Guarded with ``when`` because Spark's ``sequence(1, 0)`` is *descending*
-    ``[1, 0]``, not empty.
+    Only a column name is accepted: an inline expression such as
+    ``tokens(F.col("text"))`` would be re-evaluated 2·n times per n-gram
+    inside the lambda (see the module docstring). Guarded with ``when``
+    because Spark's ``sequence(1, 0)`` is *descending* ``[1, 0]``, not
+    empty.
     """
+    if not isinstance(tok, str):
+        raise TypeError(
+            "word_ngrams takes the name of a projected token column, e.g. "
+            "df.select(tokens('text').alias('tok')) then word_ngrams('tok', n)"
+        )
+    tok = F.col(tok)
     ng = F.transform(
         F.sequence(F.lit(1), F.size(tok) - F.lit(n - 1)),
         lambda i: F.concat_ws(

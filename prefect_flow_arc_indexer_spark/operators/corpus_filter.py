@@ -255,7 +255,7 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-doc distinct computed map-side — no full gram-stream shuffle
         # (the _hashed_shingles fix, VERDICT r9 task 4)
         F.explode(
-            F.array_distinct(word_ngrams(F.col("tok"), BOILER_N))
+            F.array_distinct(word_ngrams("tok", BOILER_N))
         ).alias("g"),
     )
     df = gs.groupBy("g").agg(F.count("*").alias("d"))

@@ -69,9 +69,8 @@ def q_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", fan_out=True).where(
         F.col("text").isNotNull()
     )
-    ng = docs.select(
-        "doc_id",
-        F.explode(word_ngrams(tokens(F.col("text")), NGRAM_N)).alias("g"),
+    ng = docs.select("doc_id", tokens("text").alias("tok")).select(
+        "doc_id", F.explode(word_ngrams("tok", NGRAM_N)).alias("g")
     )
     per_doc = ng.groupBy("g", "doc_id").agg(F.count(F.lit(1)).alias("occ"))
     return (

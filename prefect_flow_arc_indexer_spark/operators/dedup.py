@@ -478,7 +478,7 @@ def _hashed_shingles(docs: DataFrame) -> DataFrame:
             "doc_id",
             "source",
             F.explode(
-                F.array_distinct(word_ngrams(F.col("tok"), SHINGLE_N))
+                F.array_distinct(word_ngrams("tok", SHINGLE_N))
             ).alias("s"),
         )
         .withColumn("h", stable_hash(F.col("s")))
@@ -494,7 +494,7 @@ def _distinct_shingles(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", tokens(F.col("text")).alias("tok")).select(
         "doc_id",
         F.explode(
-            F.array_distinct(word_ngrams(F.col("tok"), SHINGLE_N))
+            F.array_distinct(word_ngrams("tok", SHINGLE_N))
         ).alias("s"),
     )
 
@@ -859,21 +859,22 @@ def _embedding_assignment(
     # nearest-anchor assignment: a shuffle-free fold over the broadcast
     # per-label centroid array — max of struct(rounded cos, -cell) is the
     # oracle's (cos DESC, cell ASC) ranking in one narrow projection
-    best = F.array_max(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(
-                    cosine_similarity(F.col("embedding"), c["centroid"]), 6
-                ).alias("s"),
-                (-c["cell"]).alias("neg_cell"),
-            ),
-        )
-    )
     from pyspark import StorageLevel
 
-    assigned = e.join(F.broadcast(cents), "label").select(
-        "vec_id", "label", "embedding", (-best["neg_cell"]).alias("cell")
+    from prefect_flow_arc_indexer_spark.operators.similarity import (
+        _argmax_cell,
+        _with_emb_norm,
+    )
+
+    assigned = (
+        _with_emb_norm(e)
+        .join(F.broadcast(cents), "label")
+        .select(
+            "vec_id",
+            "label",
+            "embedding",
+            _argmax_cell(F.col("cents")).alias("cell"),
+        )
     )
     if small:
         # lazy localCheckpoint: the first action materializes the
@@ -1913,7 +1914,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", tokens(F.col("text")).alias("tok"))
         .select(
             "source",
-            F.explode(word_ngrams(F.col("tok"), OVERLAP_GRAM)).alias("g"),
+            F.explode(word_ngrams("tok", OVERLAP_GRAM)).alias("g"),
         )
     )
     grouped = (

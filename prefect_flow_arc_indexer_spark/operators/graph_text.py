@@ -212,9 +212,10 @@ def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prefect_flow_arc_indexer_spark.functions.textfns import word_ngrams
 
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    bgs = docs.where(F.col("text").isNotNull()).select(
-        "doc_id",
-        F.explode(word_ngrams(tokens(F.col("text")), 2)).alias("b"),
+    bgs = (
+        docs.where(F.col("text").isNotNull())
+        .select("doc_id", tokens("text").alias("tok"))
+        .select("doc_id", F.explode(word_ngrams("tok", 2)).alias("b"))
     )
     model = (
         bgs.groupBy("b")
@@ -450,7 +451,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass (3 tokenization passes measured in the r11 setup profile).
     edges = (
         docs.where(F.col("text").isNotNull())
-        .select(F.explode(word_ngrams(tokens(F.col("text")), 2)).alias("b"))
+        .select(tokens("text").alias("tok"))
+        .select(F.explode(word_ngrams("tok", 2)).alias("b"))
         .select(
             F.substring_index("b", " ", 1).alias("src"),
             F.substring_index("b", " ", -1).alias("dst"),

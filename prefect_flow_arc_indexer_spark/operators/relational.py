@@ -398,7 +398,9 @@ def q_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partial agg, which AQE cannot split). r12 (guide §2.5): the salt "
     "width R is DERIVED from the data's measured skew in-plan — "
     "clamp(ceil(max rows per join key / target rows per reducer), 2, 32) "
-    "as a 1-row broadcast scalar — instead of a constant 8. A constant "
+    "collected once as a driver scalar and embedded as a literal in both "
+    "sides (one lineitem scan in the final plan) — instead of a constant "
+    "8. A constant "
     "width replicates the build side R-fold whether or not the skew "
     "exists (the r11 sf1 ratio flagged exactly that: 5.6x wall for 10x "
     "data from an 8x build fan-out on unskewed keys); deriving it sizes "
@@ -412,10 +414,11 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # salt splits it further; production tunes via env without replan
     target = int(os.environ.get("SPARK_GRAFT_SALT_TARGET_ROWS", "4"))
     li0 = load_table(spark, sf_dir, "lineitem")
-    # the skew pre-flight (q_skew_metrics shape) as an in-plan 1-row
-    # scalar: max rows per join key, map-side combined, broadcast into
-    # both sides — no eager driver action, no second plan
-    r_row = (
+    # the skew pre-flight (q_skew_metrics shape): max rows per join key,
+    # map-side combined, collected as one driver scalar and embedded as a
+    # literal in both sides — a 1-row subtree crossJoined into each side
+    # would be planned twice, and the final plan would scan lineitem 3x
+    r = (
         li0.groupBy("l_orderkey")
         .agg(F.count("*").alias("c"))
         .agg(
@@ -426,24 +429,22 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("int")
             .alias("r")
         )
+        .first()["r"]
     )
-    li = (
-        li0.select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .crossJoin(r_row)
-        .select(
-            "l_orderkey",
-            "l_extendedprice",
-            F.pmod(F.xxhash64("l_linenumber"), F.col("r"))
-            .cast("int")
-            .alias("salt"),
-        )
+    li = li0.select(
+        "l_orderkey",
+        "l_extendedprice",
+        F.pmod(F.xxhash64("l_linenumber"), F.lit(r)).cast("int").alias("salt"),
     )
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    o_rep = o.crossJoin(r_row).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.col("r") - 1))
-    )
+    # the replicas only pay off in a shuffled join; with r a literal the
+    # replicated side no longer looks large, so keep the planner from
+    # broadcasting it R-fold
+    o_rep = o.withColumn(
+        "salt", F.explode(F.sequence(F.lit(0), F.lit(r - 1)))
+    ).hint("merge")
     joined = li.join(
         o_rep,
         (F.col("o_orderkey") == F.col("l_orderkey"))

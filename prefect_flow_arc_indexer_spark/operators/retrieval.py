@@ -91,7 +91,7 @@ def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             # per-doc distinct computed map-side — no full gram-stream
             # shuffle (the _hashed_shingles fix, VERDICT r9 task 4)
             F.explode(
-                F.array_distinct(word_ngrams(F.col("tok"), RETR_GRAM))
+                F.array_distinct(word_ngrams("tok", RETR_GRAM))
             ).alias("g"),
         )
     )
@@ -202,18 +202,24 @@ SELECT query_id, neighbor_id, maxsim, rank FROM (
     "oracle is bit-exact.",
 )
 def q_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def subs(col):
+        # float -> double widening is exact, so slicing first equals
+        # casting first, and keeps every term of the body lambda-dependent
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(MAXSIM_SUB - 1)),
+            lambda s: F.slice(col, s * MAXSIM_DSUB + 1, MAXSIM_DSUB).cast(
+                "array<double>"
+            ),
+        )
+
+    # sub-vectors are projected once per row: built inside the query-side
+    # lambda below, each row's split would be redone per query sub-vector
     e = load_table(spark, sf_dir, "embeddings", fan_out=True).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("x")
+        "vec_id", subs(F.col("embedding")).alias("x")
     )
     q = e.where(F.col("vec_id") < MAXSIM_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("x").alias("qx")
     )
-
-    def subs(col):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(MAXSIM_SUB - 1)),
-            lambda s: F.slice(col, s * MAXSIM_DSUB + 1, MAXSIM_DSUB),
-        )
 
     def dot8(a, b):
         return F.aggregate(
@@ -225,10 +231,10 @@ def q_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxsim = F.round(
         F.aggregate(
             F.transform(
-                subs(F.col("qx")),
+                F.col("qx"),
                 lambda qi: F.array_max(
                     F.transform(
-                        subs(F.col("x")),
+                        F.col("x"),
                         lambda dj: F.round(dot8(qi, dj), 6),
                     )
                 ),

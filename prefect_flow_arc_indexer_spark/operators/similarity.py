@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from prefect_flow_arc_indexer_spark.functions.vectors import (
     cosine_similarity,
     dd_cosine_similarity,
+    dot,
+    norm,
 )
 from prefect_flow_arc_indexer_spark.plans.registry import register
 from prefect_flow_arc_indexer_spark.sources.parquet import (
@@ -209,24 +211,42 @@ def ivf_centroids(e: DataFrame) -> DataFrame:
     )
 
 
-def _argmax_cell(cents: Column, emb: Column) -> Column:
+def _with_emb_norm(df: DataFrame) -> DataFrame:
+    """``df`` plus ``_emb_d`` (its embedding as doubles) and ``_emb_norm``,
+    the per-row inputs :func:`_argmax_cell` reads. Project them BEFORE the
+    centroid cross join: inside the fold's lambda they would be recomputed
+    once per centroid."""
+    return df.select(
+        "*",
+        F.col("embedding").cast("array<double>").alias("_emb_d"),
+        norm(F.col("embedding")).alias("_emb_norm"),
+    )
+
+
+def _argmax_cell(cents: Column) -> Column:
     """Nearest-centroid id via a fold over the (tiny, broadcast) centroid
     array: max of struct(rounded cosine, -cell), so ties go to the smallest
     cell — the exact (cos_c DESC, cell ASC) order a ranking window would
     use, but computed in ONE narrow projection. The corpus is never
     shuffled: the window/groupBy argmax formulations both move every
     (vector x centroid) row through an exchange, which at 100 TB is k
-    copies of the corpus through the wire for what is per-row math."""
+    copies of the corpus through the wire for what is per-row math. Reads
+    the row's embedding through :func:`_with_emb_norm`'s columns, so the
+    cosine is ``cosine_similarity`` with its row-side norm hoisted."""
     best = F.array_max(
         F.transform(
             cents,
             lambda c: F.struct(
-                F.round(cosine_similarity(emb, c["centroid"]), 6).alias("s"),
+                F.round(
+                    dot(F.col("_emb_d"), c["centroid"])
+                    / (F.col("_emb_norm") * norm(c["centroid"])),
+                    6,
+                ).alias("s"),
                 (-c["cell"]).alias("neg_cell"),
             ),
         )
     )
-    return (-best["neg_cell"]).cast("int")
+    return -best["neg_cell"]
 
 
 def ivf_assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -243,12 +263,12 @@ def ivf_assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
         ).alias("cents")
     )
     return (
-        e.drop("label")
+        _with_emb_norm(e.drop("label"))
         .crossJoin(F.broadcast(cent))
         .select(
             "vec_id",
             "embedding",
-            _argmax_cell(F.col("cents"), F.col("embedding")).alias("cell"),
+            _argmax_cell(F.col("cents")).cast("int").alias("cell"),
         )
     )
 
@@ -1334,11 +1354,12 @@ def semdedup(e: DataFrame, k: int) -> DataFrame:
             ).alias("cents")
         )
         assigned = (
-            e.crossJoin(F.broadcast(anchors))
+            _with_emb_norm(e)
+            .crossJoin(F.broadcast(anchors))
             .select(
                 "vec_id",
                 "embedding",
-                _argmax_cell(F.col("cents"), F.col("embedding")).alias("cluster"),
+                _argmax_cell(F.col("cents")).cast("int").alias("cluster"),
             )
         )
     # r12 (guide §5): assigned feeds THREE branches (both pair sides and
@@ -2018,12 +2039,11 @@ def q_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cents")
     )
     conf = (
-        e.crossJoin(F.broadcast(cent))
+        _with_emb_norm(e)
+        .crossJoin(F.broadcast(cent))
         .select(
             F.col("label").alias("actual"),
-            _argmax_cell(F.col("cents"), F.col("embedding")).alias(
-                "predicted"
-            ),
+            _argmax_cell(F.col("cents")).cast("int").alias("predicted"),
         )
         .groupBy("actual", "predicted")
         .agg(F.count("*").alias("n"))

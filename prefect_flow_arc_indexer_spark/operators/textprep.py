@@ -440,10 +440,10 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 10s vs 2s at sf0.01, and it is the difference between shuffling the
     # corpus and shuffling nothing at 100 TB
     gram_sets = lambda df: df.select(  # noqa: E731
+        "doc_id", tokens("text").alias("tok")
+    ).select(
         "doc_id",
-        F.explode(
-            F.array_distinct(word_ngrams(tokens(F.col("text")), DECON_N))
-        ).alias("g"),
+        F.explode(F.array_distinct(word_ngrams("tok", DECON_N))).alias("g"),
     )
     # eval filter runs BEFORE gram-ification: only the tiny benchmark slice
     # pays tokenization twice; cross-doc duplicate grams collapse in the
@@ -535,11 +535,11 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def gram_sets(df: DataFrame) -> DataFrame:
-        return df.select(
+        return df.select("doc_id", tokens("text").alias("tok")).select(
             "doc_id",
-            F.explode(
-                F.array_distinct(word_ngrams(tokens(F.col("text")), DECON_N))
-            ).alias("g"),
+            F.explode(F.array_distinct(word_ngrams("tok", DECON_N))).alias(
+                "g"
+            ),
         )
 
     eval_docs = docs.where(F.col("doc_id") % DECON_EVAL_MOD == 0)

@@ -19,9 +19,10 @@ the parquet scan; the view is a select, never a materialization.
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 TABLES = (
     "region",
@@ -44,10 +45,17 @@ def load_table(
 ) -> DataFrame:
     """Load one star-schema table; normalizes events' nano timestamps.
 
-    events.parquet stores TIMESTAMP(NANOS); Spark reads it as long (via the
-    nanosAsLong conf applied in session.prepare_session) and we convert to a
-    microsecond TimestampType — the same truncation DuckDB applies, keeping
-    the oracle comparison exact.
+    The schema comes from the parquet footer, read on the driver with
+    pyarrow (:func:`footer_schema`), and is handed to ``spark.read.schema``,
+    so a load runs no Spark job; schema inference would run one footer job
+    per call. Paths pyarrow cannot open (directories, remote filesystems)
+    and column types the footer mapping does not cover fall back to Spark's
+    inference, which gives the same schema.
+
+    events.parquet may store TIMESTAMP(NANOS); Spark reads it as long (via
+    the nanosAsLong conf applied in session.prepare_session) and we convert
+    to a microsecond TimestampType — the same truncation DuckDB applies,
+    keeping the oracle comparison exact.
 
     ``fan_out=True`` is for operators whose per-row work dominates the scan
     (shingling, hashing, vector math): when the scan yields fewer partitions
@@ -58,7 +66,10 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer division: nano values (~1.7e18) exceed double's exact-int
         # range, so `ts / 1000` would drift by ±1us
@@ -76,6 +87,102 @@ def load_table(
     return df
 
 
+# session confs that change what parquet inference gives:
+# schema key -> (conf name, Spark's default)
+_INFERENCE_CONFS = {
+    "nanos_as_long": ("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    "infer_ntz": ("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
+    "binary_as_string": ("spark.sql.parquet.binaryAsString", "false"),
+}
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer(path: str):
+    """pyarrow ``FileMetaData`` of one local parquet file, or None where
+    pyarrow cannot open ``path`` (a directory, a remote filesystem)."""
+    try:
+        import pyarrow.parquet as pq
+
+        return pq.read_metadata(path)
+    except Exception:
+        return None
+
+
+def _leaf_type(col, conf: dict[str, bool]) -> T.DataType | None:
+    """Spark's inferred type for one primitive parquet column, after
+    ``ParquetToSparkSchemaConverter`` under the session's confs; None for
+    a type not mapped here."""
+    phys, lt = col.physical_type, json.loads(col.logical_type.to_json())
+    kind = lt["Type"]
+    if kind == "Decimal":
+        return T.DecimalType(col.precision, col.scale)
+    if phys == "BOOLEAN" and kind == "None":
+        return T.BooleanType()
+    if phys == "FLOAT" and kind == "None":
+        return T.FloatType()
+    if phys == "DOUBLE" and kind == "None":
+        return T.DoubleType()
+    if phys in ("INT32", "INT64") and kind in ("None", "Int"):
+        if kind == "Int" and not lt["isSigned"]:
+            return None
+        bits = lt.get("bitWidth", 32 if phys == "INT32" else 64)
+        return {
+            8: T.ByteType(),
+            16: T.ShortType(),
+            32: T.IntegerType(),
+            64: T.LongType(),
+        }[bits]
+    if phys == "INT32" and kind == "Date":
+        return T.DateType()
+    if phys == "INT64" and kind == "Timestamp":
+        if lt["timeUnit"] == "nanoseconds":
+            # without nanosAsLong inference refuses the column outright
+            return T.LongType() if conf["nanos_as_long"] else None
+        # a writer-local (isAdjustedToUTC=false) timestamp infers as NTZ
+        if lt["isAdjustedToUTC"] or not conf["infer_ntz"]:
+            return T.TimestampType()
+        return T.TimestampNTZType()
+    if phys == "BYTE_ARRAY" and kind == "String":
+        return T.StringType()
+    if phys == "BYTE_ARRAY" and kind == "None":
+        return T.StringType() if conf["binary_as_string"] else T.BinaryType()
+    if phys == "FIXED_LEN_BYTE_ARRAY" and kind == "None":
+        return T.BinaryType()
+    return None
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's parquet inference gives for the local file
+    ``path``, built from its footer with no Spark job; None where pyarrow
+    cannot open the file or a column is outside the mapped subset
+    (primitive columns and standard 3-level lists of them). Files Spark
+    wrote carry Spark's own schema in the footer; those are left to
+    inference too, which reads that schema back."""
+    md = _footer(path)
+    if md is None or _SPARK_ROW_METADATA in (md.metadata or {}):
+        return None
+    conf = {
+        key: spark.conf.get(name, default).lower() == "true"
+        for key, (name, default) in _INFERENCE_CONFS.items()
+    }
+    fields: dict[str, list] = {}
+    for i in range(len(md.schema)):
+        col = md.schema.column(i)
+        fields.setdefault(col.path.split(".")[0], []).append(col)
+    out = []
+    for name, leaves in fields.items():
+        parts = leaves[0].path.split(".")
+        dt = _leaf_type(leaves[0], conf) if len(leaves) == 1 else None
+        if dt is None:
+            return None
+        if parts[1:] in (["list", "element"], ["list", "item"]):
+            dt = T.ArrayType(dt, True)
+        elif len(parts) > 1:
+            return None
+        out.append(T.StructField(name, dt, True))
+    return T.StructType(out)
+
+
 def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Row count of one table from parquet FOOTER metadata — the cheap
     input to plan-selection gates (f91d8c8 pattern), where a Spark count
@@ -86,12 +193,8 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return spark.read.parquet(path).count()
+    md = _footer(path)
+    return md.num_rows if md is not None else spark.read.parquet(path).count()
 
 
 def index_documents(

@@ -12,13 +12,24 @@ for the scale-critical properties (run at any SF — plans don't change):
   task) unless the window is structurally bounded (the two-pass offset
   table of distrank: ordered by a spark_partition_id column, |range
   partitions| rows) or the query is allowlisted below with a reason why
-  its window input is values/vocab-bounded rather than corpus-sized.
+  its window input is values/vocab-bounded rather than corpus-sized;
+- lambda invariance: flags column-reading subexpressions inside a
+  higher-order function's lambda body that do not depend on the lambda
+  variable. Lambda bodies run interpreted with no common-subexpression
+  elimination, so such a subexpression is recomputed for every element
+  (``word_ngrams`` over an inline ``tokens(text)`` re-split the document
+  2·n times per n-gram). Project the value to a column first. Cached
+  relations are searched too, and so is every frame the builder itself
+  persists, checkpoints or runs (``build_and_capture``): q_pagerank's
+  tokenizing edge pass runs only inside its builder, and its returned plan
+  reads nothing but the last round's checkpoint.
 
 Usage: python scripts/explain_audit.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import functools
 import re
 import sys
 from pathlib import Path
@@ -75,6 +86,66 @@ ALLOWLIST_RATCHET = frozenset(
 
 RATCHET_VIOLATIONS = sorted(set(BOUNDED_GLOBAL_WINDOWS) - ALLOWLIST_RATCHET)
 
+# Queries whose lambda bodies hold a lambda-invariant column expression
+# that is cheap per element (an array length or a scalar cast, O(1) and
+# never a pass over a document or a vector). Every entry says which
+# expression and why it stays; a hit outside this list fails the audit.
+# Most are the in-row pair expansion flatten(transform(a, (x, i) ->
+# transform(slice(a, i + 2, size(a) - i - 1), ...))), whose size(a) reads
+# the array length once per outer element.
+_PAIR_SIZE = "size({}) in the in-row pair expansion: O(1) per element"
+INVARIANT_LAMBDAS: dict[str, str] = {
+    "q_band_sweep": _PAIR_SIZE.format("ids"),
+    "q_basket_rules": _PAIR_SIZE.format("ids"),
+    "q_cooccurrence": _PAIR_SIZE.format("terms"),
+    "q_dedup_cascade": _PAIR_SIZE.format("ids"),
+    "q_dedup_components": _PAIR_SIZE.format("ids"),
+    "q_dedup_incremental": _PAIR_SIZE.format("ids"),
+    "q_dedup_minhash": _PAIR_SIZE.format("ids"),
+    "q_dup_quality": _PAIR_SIZE.format("ids"),
+    "q_lsh_recall": _PAIR_SIZE.format("ids"),
+    "q_minhash_estimate": _PAIR_SIZE.format("ids"),
+    "q_minhash_verified": _PAIR_SIZE.format("ids"),
+    "q_neardup_apply": _PAIR_SIZE.format("ids"),
+    "q_neardup_capped": _PAIR_SIZE.format("ids"),
+    "q_pair_features": _PAIR_SIZE.format("ids"),
+    "q_simhash_capped": _PAIR_SIZE.format("ms"),
+    "q_source_overlap": _PAIR_SIZE.format("srcs"),
+    "q_span_mask": "cast(doc_id as string) and n_spans - 1 per span: "
+    "O(1) scalars beside the per-span hash they feed",
+    "q_split_leakage": _PAIR_SIZE.format("ids"),
+}
+
+# RATCHET: like ALLOWLIST_RATCHET, this frozen snapshot can only shrink; a
+# new hit is fixed by projecting the invariant value to a column before
+# the higher-order function, never by adding a line above.
+INVARIANT_LAMBDAS_RATCHET = frozenset(
+    {
+        "q_band_sweep",
+        "q_basket_rules",
+        "q_cooccurrence",
+        "q_dedup_cascade",
+        "q_dedup_components",
+        "q_dedup_incremental",
+        "q_dedup_minhash",
+        "q_dup_quality",
+        "q_lsh_recall",
+        "q_minhash_estimate",
+        "q_minhash_verified",
+        "q_neardup_apply",
+        "q_neardup_capped",
+        "q_pair_features",
+        "q_simhash_capped",
+        "q_source_overlap",
+        "q_span_mask",
+        "q_split_leakage",
+    }
+)
+
+INVARIANT_RATCHET_VIOLATIONS = sorted(
+    set(INVARIANT_LAMBDAS) - INVARIANT_LAMBDAS_RATCHET
+)
+
 
 def _iter_plan_nodes(node):
     """DFS over a physical-plan tree via py4j, descending through the AQE
@@ -91,6 +162,99 @@ def _iter_plan_nodes(node):
     ch = node.children()
     for i in range(ch.size()):
         yield from _iter_plan_nodes(ch.apply(i))
+
+
+def _iter_plan_nodes_and_caches(node):
+    """:func:`_iter_plan_nodes`, also descending into the plan each
+    InMemoryTableScan reads (the cached relation's physical plan)."""
+    for n in _iter_plan_nodes(node):
+        yield n
+        if n.getClass().getSimpleName() == "InMemoryTableScanExec":
+            yield from _iter_plan_nodes_and_caches(n.relation().cachedPlan())
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _invariant_subexprs(expr, in_lambda: bool, hits: list[str]):
+    """Post-order walk of one expression tree. Returns (free lambda
+    variable ids, reads a column) for ``expr``; appends to ``hits`` every
+    maximal non-leaf subexpression of a lambda body that reads a column
+    and has no free lambda variable."""
+    name = expr.getClass().getSimpleName()
+    if name == "NamedLambdaVariable":
+        return {expr.exprId().id()}, False
+    if name == "AttributeReference":
+        return set(), True
+    free, reads, inner = set(), False, []
+    body = in_lambda or name == "LambdaFunction"
+    for child in _seq(expr.children()):
+        f, r = _invariant_subexprs(child, body, inner)
+        free |= f
+        reads |= r
+    if name == "LambdaFunction":
+        # a nested lambda runs per element of its own array; its body,
+        # visited above, is where an invariant would be recomputed
+        free -= {a.exprId().id() for a in _seq(expr.arguments())}
+    if in_lambda and reads and not free and name != "LambdaFunction":
+        hits.append(expr.toString())
+    else:
+        hits.extend(inner)
+    return free, reads
+
+
+def lambda_invariants(*plan_roots) -> list[str]:
+    """Column-reading subexpressions of lambda bodies that no lambda
+    variable reaches, over each whole physical plan and every cached plan
+    it reads (see the module docstring)."""
+    hits: list[str] = []
+    for root in plan_roots:
+        for n in _iter_plan_nodes_and_caches(root):
+            for e in _seq(n.expressions()):
+                if "lambdafunction" in e.toString():
+                    _invariant_subexprs(e, False, hits)
+    return hits
+
+
+# DataFrame methods through which a builder materializes an intermediate
+# frame; its lineage is invisible in the returned plan afterwards
+_MATERIALIZERS = (
+    "persist",
+    "cache",
+    "localCheckpoint",
+    "checkpoint",
+    "collect",
+    "count",
+    "toPandas",
+    "toLocalIterator",
+)
+
+
+def build_and_capture(builder, spark, sf_dir: str):
+    """Run one query builder; return its frame and the executed plans of
+    that frame and of every frame the builder materialized on the way."""
+    cls = type(spark.range(0))
+    seen = []
+    originals = {name: cls.__dict__[name] for name in _MATERIALIZERS}
+
+    def recording(orig):
+        @functools.wraps(orig)
+        def method(self, *args, **kwargs):
+            seen.append(self)
+            return orig(self, *args, **kwargs)
+
+        return method
+
+    for name, orig in originals.items():
+        setattr(cls, name, recording(orig))
+    try:
+        df = builder(spark, sf_dir)
+    finally:
+        for name, orig in originals.items():
+            setattr(cls, name, orig)
+    frames = [df] + seen
+    return df, [f._jdf.queryExecution().executedPlan() for f in frames]
 
 
 _LIMIT_NODES = (
@@ -194,14 +358,23 @@ def main() -> None:
         print("RATCHET-VIOLATION: allowlist grew beyond the frozen "
               f"baseline: {RATCHET_VIOLATIONS} — fix the plan "
               "(top-k-first / partition key), do not allowlist")
+    print(f"lambda allowlist ({len(INVARIANT_LAMBDAS)} entries, "
+          f"ratchet {len(INVARIANT_LAMBDAS_RATCHET)}): "
+          + ", ".join(sorted(INVARIANT_LAMBDAS)))
+    if INVARIANT_RATCHET_VIOLATIONS:
+        flagged += len(INVARIANT_RATCHET_VIOLATIONS)
+        print("RATCHET-VIOLATION: lambda allowlist grew beyond the frozen "
+              f"baseline: {INVARIANT_RATCHET_VIOLATIONS} — project the "
+              "invariant value to a column, do not allowlist")
     for name, rq in sorted(qs.items()):
         if names and name not in names:
             continue
         try:
-            df = rq.builder(spark, sf_dir)
-            root = df._jdf.queryExecution().executedPlan()
+            df, roots = build_and_capture(rq.builder, spark, sf_dir)
+            root = roots[0]
             plan = root.toString()
             global_windows = unpartitioned_windows(root)
+            invariants = lambda_invariants(*roots)
         except Exception as e:  # a broken builder must not hide the rest
             flagged += 1
             print(f"{name:28s} <-- BUILD-ERROR: {e}")
@@ -214,6 +387,8 @@ def main() -> None:
             flags.append("CARTESIAN")
         if global_windows and name not in BOUNDED_GLOBAL_WINDOWS:
             flags.append(f"GLOBAL-WINDOW({len(global_windows)})")
+        if invariants and name not in INVARIANT_LAMBDAS:
+            flags.append(f"LAMBDA-INVARIANT({len(invariants)})")
         mark = " <-- " + ",".join(flags) if flags else ""
         flagged += bool(flags)
         print(
@@ -222,6 +397,8 @@ def main() -> None:
             f"smj={a['sortmerge_joins']} arrow={a['arrow_python']} "
             f"wscg={a['codegen_spans']}{mark}"
         )
+        for hit in invariants:
+            print(f"{'':28s}   lambda-invariant: {hit[:160]}")
     print(f"\nflagged: {flagged}")
     spark.stop()
 

@@ -15,6 +15,7 @@ from prefect_flow_arc_indexer_spark.operators.similarity import (
     _argmax_cell,
     _lloyd_partials_kernel,
     _pca_step_kernel,
+    _with_emb_norm,
 )
 from prefect_flow_arc_indexer_spark.sources.parquet import load_table
 
@@ -78,9 +79,9 @@ def test_assignment_round_matches_jvm_argmax(spark, emb):
     crow = spark.createDataFrame(
         [(cents,)], "cents array<struct<cell:int,centroid:array<double>>>"
     )
-    jvm_assigned = emb.crossJoin(F.broadcast(crow)).select(
+    jvm_assigned = _with_emb_norm(emb).crossJoin(F.broadcast(crow)).select(
         "vec_id",
-        _argmax_cell(F.col("cents"), F.col("embedding")).alias("label"),
+        _argmax_cell(F.col("cents")).cast("int").alias("label"),
         "embedding",
     )
     assert _norm_rows(_kernel_comp(emb, cents)) == _norm_rows(

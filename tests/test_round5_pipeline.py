@@ -208,6 +208,11 @@ def test_cli_es_nodes_mirrors_published_indexes(tmp_path, capsys, monkeypatch):
     monkeypatch.setattr(
         es_sink, "swap_alias", lambda cfg, a, g: swaps.append((a, g))
     )
+    # the reconcile's _count answers from the fake mirror: example:9200 is
+    # not a host the test may resolve
+    monkeypatch.setattr(
+        es_sink, "count_index", lambda cfg, index, refresh=True: calls[-1][1]
+    )
     rc = main(
         [
             "--source", "/root/testdata/sf0.001",
@@ -231,6 +236,7 @@ def test_cli_es_nodes_mirrors_published_indexes(tmp_path, capsys, monkeypatch):
     assert calls[0][2:] == (123, 7, 2)  # flags reached EsSinkConfig
     assert swaps == [("purchase", gen)]
     assert report["mirror_published"] == {"purchase": gen}
+    assert report["mirror_reconcile"] == {"purchase": True}
     # tombstone deletes are no longer shipped on full sync: the swap drops
     # the superseded physical index wholesale (they remain the incremental
     # path's job)

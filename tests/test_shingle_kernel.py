@@ -53,7 +53,7 @@ def _jvm_minhash(docs):
     exploded = docs.select(
         "doc_id", tokens(F.col("text")).alias("tok")
     ).select(
-        "doc_id", F.explode(word_ngrams(F.col("tok"), SHINGLE_N)).alias("s")
+        "doc_id", F.explode(word_ngrams("tok", SHINGLE_N)).alias("s")
     )
     h = exploded.select("doc_id", stable_hash(F.col("s")).alias("h"))
     return h.groupBy("doc_id").agg(
