@@ -18,12 +18,15 @@ Reference parameter -> CLI flag:
 - ``es_chunk_size``/``es_request_timeout``/``es_max_retries`` ->
   ``--es-chunk-size --es-timeout --es-retries``: when ``--es-nodes`` is
   given they build the :class:`EsSinkConfig` used to MIRROR the run to ES
-  via the REST ``_bulk`` path after publish, in one upsert job (plus one
-  delete job on an incremental run) across every index (``--sink-dir``
-  stays required — the manifest/watermark source of truth is local);
-  without ``--es-nodes`` they are unused
+  via the REST ``_bulk`` path after publish, in one job across every index
+  (on an incremental run it carries the upserts and the deletes alike);
+  ``--sink-dir`` stays required — the manifest/watermark source of truth
+  is local; without ``--es-nodes`` they are unused
 - flow retries (``flows/main_flow.py:722-723``) -> ``--retries
   --retry-delay`` (X4 retry wrapper around each write and publish)
+
+The watermark is stored last, once the mirror has landed: a run that fails
+anywhere, the mirror included, is replayed from the same watermark.
 
 The command prints one JSON line with the SyncReport fields so schedulers
 can parse the outcome — the moral equivalent of the reference's Prefect
@@ -37,7 +40,6 @@ import dataclasses
 import json
 import logging
 import sys
-from datetime import datetime
 
 from pyspark.sql import DataFrame
 
@@ -141,11 +143,10 @@ def main(argv: list[str] | None = None) -> int:
 
     wm_path = args.watermark_store or f"{args.sink_dir}/watermarks.json"
     watermarks = WatermarkStore(wm_path)
-    # captured BEFORE the run: the ES mirror re-derives the merged delta
-    # through the runner's own predicate (runner.changed)
+    # the ES mirror re-derives the merged delta through the runner's own
+    # predicate (runner.changed) from the watermark the run started from
     wm_prev = watermarks.get(args.pipeline_name)
     if args.full_sync:
-        run_started = datetime.now()
         report = full_sync(
             spark,
             docs,
@@ -154,10 +155,6 @@ def main(argv: list[str] | None = None) -> int:
             retries=args.retries,
             retry_delay_s=args.retry_delay,
         )
-        # the reference records last_modified after EITHER flow completes
-        # (save_last_run_config on-completion hook, flows/main_flow.py:603),
-        # so a full sync seeds the watermark for the next incremental run
-        watermarks.set(args.pipeline_name, run_started)
     else:
         report = incremental_sync(
             spark,
@@ -171,9 +168,9 @@ def main(argv: list[str] | None = None) -> int:
         )
     if args.es_nodes and report.written:
         # mirror the run to ES over the connector-less REST bulk path
-        # (reference streaming_bulk, flows/main_flow.py:366-395): ONE upsert
-        # job, plus ONE delete job on an incremental run, each row naming
-        # its target index in `_index`; 429s retry in place, then fail
+        # (reference streaming_bulk, flows/main_flow.py:366-395): ONE job,
+        # each row naming its target index in `_index` (and on an
+        # incremental run its op); 429s retry in place, then fail
         from functools import reduce
 
         from pyspark.sql import functions as F
@@ -226,24 +223,28 @@ def main(argv: list[str] | None = None) -> int:
                     report.mirror_published[index] = None
         else:
             # incremental: ship ONLY the merged delta through each alias
-            # (re-shipping whole aliases is the 100 TB scale bug) and delete
-            # its tombstones, or ES drifts from the manifest (ADVICE r5); a
-            # schema-drift rebuild's whole alias is re-shipped instead
-            delta = docs.where(
-                changed(wm_prev) & F.col("index").isin(list(report.written))
-            ).withColumn("_index", F.col("index"))
+            # (re-shipping whole aliases is the 100 TB scale bug), its
+            # tombstones as deletes, or ES drifts from the manifest (ADVICE
+            # r5); a schema-drift rebuild's whole alias is re-shipped
+            # instead of its upserts. One mixed job: each row's op is
+            # `delete` unless `is_deleted` is false.
             merged = [i for i in report.written if i not in report.rebuilt]
-            upserts = delta.where(
-                F.col("index").isin(merged) & ~F.col("is_deleted")
-            ).select("id", "document", "_index")
-            for index in report.rebuilt:
-                upserts = upserts.unionByName(alias_rows(index, index))
-            es_sink.write_upserts_rest(
-                upserts, es_cfg, source_column="document"
+            actions = docs.where(
+                changed(wm_prev)
+                & F.col("index").isin(list(report.written))
+                & (F.col("index").isin(merged) | F.col("is_deleted"))
+            ).select(
+                "id", "document", "is_deleted", F.col("index").alias("_index")
             )
-            es_sink.write_deletes(
-                delta.where(F.col("is_deleted")).select("id", "_index"),
-                es_cfg,
+            for index in report.rebuilt:
+                actions = actions.unionByName(
+                    alias_rows(index, index).withColumn(
+                        "is_deleted", F.lit(False)
+                    )
+                )
+            es_sink.write_upserts_rest(
+                actions, es_cfg, source_column="document",
+                deleted_column="is_deleted",
             )
         # post-mirror count reconcile (VERDICT r6 task 6), the reference's
         # warn-only X7 gate (flows/main_flow.py:560-575): ES must hold the
@@ -277,7 +278,10 @@ def main(argv: list[str] | None = None) -> int:
         for index in report.written:
             sink.retain(index, args.keep_generations)
 
-    print(json.dumps(dataclasses.asdict(report), sort_keys=True))
+    # T1, committed last: a failed mirror leaves the watermark where it
+    # was, so the next run re-ships the delta ES missed
+    watermarks.set(args.pipeline_name, report.watermark)
+    print(json.dumps(dataclasses.asdict(report), sort_keys=True, default=str))
     return 0
 
 

@@ -8,11 +8,15 @@ Every write goes over the ES REST API from the executors
 elasticsearch-spark connector jar is needed, and every transport is
 injectable so the module is unit-testable without a cluster. Each row names
 its target index in an ``_index`` column, so one job writes every index.
+Both writers share one shipping loop (:func:`_ship`) that takes each row's
+op from a column, so one job can also carry index AND delete actions, as
+the reference's single ``streaming_bulk`` action stream does (SURVEY P12).
 
 Semantics mapped from the reference:
 
 - upsert-by-id      -> :func:`write_upserts_rest` (``_op_type: index``)
-- deletes           -> :func:`write_deletes` (``_op_type: delete``)
+- deletes           -> :func:`write_deletes` (``_op_type: delete``), or
+  ``write_upserts_rest(..., deleted_column=...)`` for one mixed stream
 - bulk chunk 500    -> ``EsSinkConfig.batch_entries`` (es_chunk_size)
 - request timeout   -> ``EsSinkConfig.timeout_s`` (es_request_timeout 30s)
 - 429 retries       -> ``EsSinkConfig.retries`` with the reference's
@@ -32,7 +36,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, replace
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 @dataclass(frozen=True)
@@ -157,14 +161,15 @@ def make_retrying_post(cfg: EsSinkConfig, post=_post_bulk, sleep=time.sleep):
 def _ship(
     df: DataFrame,
     cfg: EsSinkConfig,
-    op: str,
+    op: Column,
     source_column: str | None,
     post,
     sleep,
 ) -> None:
     """The bulk writers' shared partition loop: each executor task ships
-    NDJSON ``{op: {"_index", "_id"}}`` lines (plus the row's document when
-    ``source_column`` is given) in ``batch_entries`` chunks."""
+    NDJSON ``{op: {"_index", "_id"}}`` lines in ``batch_entries`` chunks,
+    taking each row's op (``index`` or ``delete``) from ``op``; an
+    ``index`` line is followed by the row's ``source_column`` document."""
     url = f"{_node_url(cfg)}/_bulk"
     id_col, chunk, timeout_s = cfg.id_column, cfg.batch_entries, cfg.timeout_s
     # in-place 429 retry with the reference's 30->200s exponential backoff
@@ -175,9 +180,10 @@ def _ship(
 
         buf: list[bytes] = []
         for row in rows:
-            meta = {op: {"_index": row["_index"], "_id": str(row[id_col])}}
+            kind = row["_op"]
+            meta = {kind: {"_index": row["_index"], "_id": str(row[id_col])}}
             line = _json.dumps(meta).encode() + b"\n"
-            if source_column is not None:
+            if kind == "index":
                 src = row[source_column]
                 doc = src if isinstance(src, str) else _json.dumps(src)
                 line += doc.encode() + b"\n"
@@ -189,7 +195,7 @@ def _ship(
             post(url, b"".join(buf), timeout_s)
 
     cols = ["_index", id_col] + ([source_column] if source_column else [])
-    df.select(*cols).foreachPartition(_partition)
+    df.select(*cols, op.alias("_op")).foreachPartition(_partition)
 
 
 def write_upserts_rest(
@@ -198,13 +204,23 @@ def write_upserts_rest(
     post=_post_bulk,
     source_column: str = "_source",
     sleep=time.sleep,
+    deleted_column: str | None = None,
 ) -> None:
     """Bulk-upsert every row of ``df`` into the index its ``_index`` column
     names via the ES ``_bulk`` REST API, ``foreachPartition`` — the
     reference's own write path (``streaming_bulk`` with ``_op_type:
     index``, flows/main_flow.py:366-395). Idempotent by ``_id`` (a replayed
-    partition re-indexes the same documents)."""
-    _ship(df, cfg, "index", source_column, post, sleep)
+    partition re-indexes the same documents).
+
+    ``deleted_column`` names a boolean column that makes the job one mixed
+    action stream: a row ships as ``index`` only where it is false, and
+    otherwise as ``delete``, whatever its document holds, so a tombstone
+    is never indexed (the reference's ``streaming_bulk`` carries both ops,
+    flows/main_flow.py:366-395)."""
+    op = F.lit("index")
+    if deleted_column is not None:
+        op = F.when(~F.col(deleted_column), op).otherwise(F.lit("delete"))
+    _ship(df, cfg, op, source_column, post, sleep)
 
 
 def write_deletes(
@@ -214,12 +230,12 @@ def write_deletes(
     via the ES ``_bulk`` REST API, executed ``foreachPartition`` (each
     executor task ships its own NDJSON chunks — no driver collect).
 
-    Tombstones never go through the upsert writer, which would persist
-    deleted docs as null-_source upserts (ADVICE r1, medium); they take
-    the REST path the reference itself uses (``streaming_bulk``
-    ``_op_type: delete``, flows/main_flow.py:378-395).
+    Tombstones never ship as upserts, which would persist deleted docs as
+    null-_source documents (ADVICE r1, medium); they take the REST path the
+    reference itself uses (``streaming_bulk`` ``_op_type: delete``,
+    flows/main_flow.py:378-395).
     """
-    _ship(df, cfg, "delete", None, post, sleep)
+    _ship(df, cfg, F.lit("delete"), None, post, sleep)
 
 
 def count_index(cfg: EsSinkConfig, index: str, refresh: bool = True) -> int:

@@ -3,22 +3,33 @@
 
 - :func:`full_sync` (E1): one stats job lists the indexes and orders them
   smallest first -> one write job stages every index's fresh generation
-  -> one footer-count job audits the stage -> per index: atomic publish.
-- :func:`incremental_sync` (E2): the stats job also counts each index's
-  rows changed since the inclusive watermark (skip-if-zero, T4); one probe
-  compares every touched index's stored ``schema_name`` with the source's
-  and a drifted index is rebuilt instead of merged (T7, reference
-  ``flows/main_flow.py:62-86,674-693``); one staged write merges upserts
+  -> a driver-side audit sums the staged files' parquet footers -> per
+  index: atomic publish.
+- :func:`incremental_sync` (E2): the same stats job also counts each
+  index's rows changed since the inclusive watermark (skip-if-zero, T4) and
+  takes the source's drift probe, the ``schema_name`` of each index's
+  lowest-id live document; it is compared with the value each published
+  generation recorded in its ``_probe.json``, and a drifted index is
+  rebuilt instead of merged (T7, reference
+  ``flows/main_flow.py:62-86,674-693``). One staged write merges upserts
   and tombstone deletes into every touched index (T3), audited and
-  published as in a full sync; the watermark then advances (T1).
+  published as in a full sync.
 - both accept ``or_ids`` (E3): a caller-pinned, lowercased index subset that
   bypasses enumeration and orphan cleanup (reference flows/main_flow.py:
   633-640,652).
+- neither stores the watermark (T1): each returns the one to store in
+  ``SyncReport.watermark``, and the caller commits it once everything
+  downstream of the sink (the CLI's ES mirror) has landed.
 
 So a run costs a fixed number of Spark jobs however many indexes exist or
-are touched: the reference's per-index count, probe, write and reconcile
-are each one grouped job here, and only the renames and manifest flips of
-the publish stay per index. Every generation has one layout, the
+are touched: the reference's per-index count and probe are one grouped
+job here, its per-index writes one staged write whose ``Observation``
+records each generation's row count and probe value, its reconcile a
+footer sum that runs no job, and only the renames and manifest flips of
+the publish stay per index. A generation without a usable probe record
+(written by an earlier release, by hand or by ``compact``) has its rows
+read by the stats job instead, so the verdict never depends on the
+record being there. Every generation has one layout, the
 ``partitionBy("index")`` stage's directory of parquet files. X4 retries
 (reference ``flows/main_flow.py:722-723``): a failed write or publish
 rolls back what it half-wrote, sleeps and retries; only after exhaustion
@@ -31,6 +42,7 @@ batch ids UNION batch upserts`` (a Delta/Iceberg MERGE at scale).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -46,17 +58,22 @@ from pyspark.sql import (
     SparkSession,
     functions as F,
 )
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from prefect_flow_arc_indexer_spark.pipeline.sinks import (
     VersionedSink,
     generation_timestamp,
 )
+from prefect_flow_arc_indexer_spark.sources.parquet import _footer
 from prefect_flow_arc_indexer_spark.streaming.watermark import WatermarkStore
 
 # Reference JSONB probe path (flows/main_flow.py:69:
 # ``document->'schema_maintainer'->>'schema_name'``).
 SCHEMA_PATH = "$.schema_maintainer.schema_name"
+# A generation's drift-probe record: ``{"path": ..., "value": ...}``. The
+# leading underscore keeps it out of every Spark and pyarrow read of the
+# generation's parquet files.
+PROBE_FILE = "_probe.json"
 
 
 @dataclass
@@ -81,6 +98,9 @@ class SyncReport:
     mirror_published: dict[str, str | None] = field(default_factory=dict)
     # the audited row count of every generation the run published (X7)
     published_rows: dict[str, int] = field(default_factory=dict)
+    # T1: the watermark the run earned, for the caller to store once the
+    # run's downstream writes have landed
+    watermark: datetime | None = None
 
 
 def changed(watermark: datetime) -> Column:
@@ -89,23 +109,73 @@ def changed(watermark: datetime) -> Column:
     return F.col("updated_at") >= F.lit(watermark)
 
 
+def _probe(rows: Column, document: Column, id_: Column, path: str) -> Column:
+    """T7's probe value over the ``rows`` a predicate selects: the JSON
+    ``path`` of their lowest-id document. ``min_by`` skips the rows whose
+    ordering is null, so unselected rows drop out, and the path is parsed
+    once per group, not once per document."""
+    return F.get_json_object(
+        F.min_by(F.when(rows, document), F.when(rows, id_)), path
+    )
+
+
 def _index_stats(
-    docs: DataFrame, pinned: list[str] | None, watermark: datetime | None = None
-) -> dict[str, Row]:
-    """A1+A2+T4 in ONE grouped job that reads ``index``, ``id`` and
-    ``updated_at``, never ``document``: each non-null (or ``pinned``) index
-    with its row count ``n`` and, given a watermark, its ``changed`` count,
-    smallest first (reference flows/main_flow.py:121,153-169,317-343)."""
+    docs: DataFrame,
+    pinned: list[str] | None,
+    watermark: datetime | None = None,
+    path: str = SCHEMA_PATH,
+    aliases: DataFrame | None = None,
+) -> tuple[dict[str, Row], dict[str, str | None]]:
+    """A1+A2+T4 in ONE grouped job: each non-null (or ``pinned``) index with
+    its row count ``n``, smallest first (reference flows/main_flow.py:121,
+    153-169,317-343). Given a watermark, each row also carries its
+    ``changed`` count and ``probe``, the ``path`` value of the index's
+    lowest-id live document; only then is ``document`` read. ``aliases``
+    (published rows tagged by ``index``) enter the same job, and the second
+    dict holds the probe value of each alias that has rows."""
     rows = docs.where(F.col("index").isNotNull())
     if pinned:
         rows = rows.where(F.col("index").isin(pinned))
-    aggs = [F.count("id").alias("n")]
+    keys, aggs = ["index"], [F.count("id").alias("n")]
     if watermark is not None:
-        aggs.append(F.count_if(changed(watermark)).alias("changed"))
-    stats = rows.groupBy("index").agg(*aggs).collect()
+        aggs += [
+            F.count_if(changed(watermark)).alias("changed"),
+            _probe(~F.col("is_deleted"), F.col("document"), F.col("id"),
+                   path).alias("probe"),
+        ]
+    if aliases is not None:
+        keys.append("_alias")
+        rows = rows.withColumn("_alias", F.lit(False)).unionByName(
+            aliases.select(
+                "index", "id", "document",
+                F.lit(False).alias("is_deleted"), F.lit(True).alias("_alias"),
+            ),
+            allowMissingColumns=True,
+        )
+    stats, alias_probes = [], {}
+    for r in rows.groupBy(*keys).agg(*aggs).collect():
+        if aliases is not None and r["_alias"]:
+            alias_probes[r["index"]] = r["probe"]
+        else:
+            stats.append(r)
     return {
         r["index"]: r for r in sorted(stats, key=lambda r: (r["n"], r["index"]))
-    }
+    }, alias_probes
+
+
+def _recorded_probe(
+    sink: VersionedSink, generation: str, path: str
+) -> dict | None:
+    """The probe record ``generation`` was published with, or None when it
+    has none, it cannot be read, or it was taken at another ``path``."""
+    try:
+        with open(os.path.join(sink.generation_path(generation), PROBE_FILE)) as f:
+            record = json.load(f)
+    except (OSError, ValueError):
+        return None
+    if not isinstance(record, dict) or record.get("path") != path:
+        return None
+    return record
 
 
 def _run_with_retries(
@@ -168,30 +238,6 @@ def _aliases(
     ])
 
 
-def _drifted(
-    spark: SparkSession, docs: DataFrame, sink: VersionedSink,
-    indexes: list[str], schema: StructType, path: str,
-) -> list[str]:
-    """T7 probe in ONE action: the ``indexes`` whose alias and live source
-    rows disagree on the JSON ``path`` value of their lowest-id document
-    (``min_by``: the path is parsed once per side per index), the
-    arbitrary-doc probe the reference makes (flows/main_flow.py:37-86)."""
-    if not indexes:
-        return []
-    live = docs.where(F.col("index").isin(indexes) & ~F.col("is_deleted"))
-    both = live.select("index", "id", "document", F.lit("src").alias("side"))
-    both = both.unionByName(
-        _aliases(spark, sink, indexes, schema).withColumn("side", F.lit("sink"))
-    )
-    names = {
-        (r["side"], r["index"]): r["name"]
-        for r in both.groupBy("side", "index").agg(
-            F.get_json_object(F.min_by("document", "id"), path).alias("name")
-        ).collect()
-    }
-    return [i for i in indexes if names.get(("sink", i)) != names.get(("src", i))]
-
-
 def _unescape_partition_value(s: str) -> str:
     """Decode Spark's partition-dir escaping (ExternalCatalogUtils.
     escapePathName: unsafe chars written as %XX, uppercase hex). Only %XX
@@ -231,6 +277,21 @@ def one_pass_live(docs: DataFrame, indexes: list[str]) -> DataFrame:
     return _stage_rows(live).hint("rebalance", "index")
 
 
+def _staged_rows(part_dir: str) -> int | None:
+    """The row count of one staged partition directory, summed from its
+    parquet footers on the driver (no Spark job); None when a file's footer
+    cannot be read."""
+    total = 0
+    for name in os.listdir(part_dir):
+        if name.startswith(("_", ".")):  # the files Spark's reader skips
+            continue
+        md = _footer(os.path.join(part_dir, name))
+        if md is None:
+            return None
+        total += md.num_rows
+    return total
+
+
 def _stage_audit_publish(
     spark: SparkSession,
     sink: VersionedSink,
@@ -239,18 +300,21 @@ def _stage_audit_publish(
     ts: str,
     report: SyncReport,
     retry,
+    path: str = SCHEMA_PATH,
 ) -> None:
     """Write-audit-publish for every index of ``frame`` (``_stage_rows``
-    layout) in a fixed number of Spark jobs:
+    layout) in ONE Spark job:
 
     - ONE ``partitionBy`` write stages ``frame`` under ``_stage_<ts>``; an
-      ``Observation`` on it counts each index's rows (no extra scan);
-    - ONE footer-count job audits the stage, read with the known schema
-      and ``index`` as a string (inference would read index ``007`` as
-      ``7``); a short index aborts before anything is published;
+      ``Observation`` on it counts each index's rows and takes its T7
+      probe value at ``path`` (no extra scan);
+    - the audit sums ``num_rows`` over the footers of every staged parquet
+      file on the driver; a short index, or a footer that cannot be read,
+      aborts before anything is published;
     - per index, in ``timestamps`` order, the staged dir is renamed into
-      place as generation ``{index}_{timestamps[index]}`` and published;
-      ``report.written`` and ``report.published_rows`` take its audit count.
+      place as generation ``{index}_{timestamps[index]}``, given its probe
+      record (:data:`PROBE_FILE`) and published; ``report.written`` and
+      ``report.published_rows`` take its audit count.
 
     The write and each publish run under ``retry`` (a bound
     :func:`_run_with_retries`): a failed write removes the stage, a failed
@@ -261,20 +325,26 @@ def _stage_audit_publish(
     stage_gen = sink.generation_name("_stage", ts)
     stage = sink.generation_path(stage_gen)
     expected: dict[str, int] = {}
+    probes: dict[str, str | None] = {}
 
     def write_stage() -> None:
         # pyspark refuses to reuse an Observation (REUSE_OBSERVATION): each
         # attempt observes through a fresh one, named by a random UUID
         obs = Observation()
+        aggs = []
+        for n, i in enumerate(indexes):
+            mine = F.col("index") == i
+            aggs += [
+                F.count_if(mine).alias(f"c_{n}"),
+                _probe(mine, F.col("document"), F.col("id"), path)
+                .alias(f"p_{n}"),
+            ]
         sink.write_generation(
-            frame.observe(obs, *(
-                F.count_if(F.col("index") == i).alias(f"c_{n}")
-                for n, i in enumerate(indexes)
-            )),
-            "_stage", ts, partition_by=["index"],
+            frame.observe(obs, *aggs), "_stage", ts, partition_by=["index"]
         )
-        counts = obs.get  # blocks until the write job finishes
-        expected.update((i, counts[f"c_{n}"]) for n, i in enumerate(indexes))
+        got = obs.get  # blocks until the write job finishes
+        for n, i in enumerate(indexes):
+            expected[i], probes[i] = got[f"c_{n}"], got[f"p_{n}"]
 
     try:
         retry(indexes, write_stage, lambda: sink.drop_generation(stage_gen))
@@ -286,24 +356,10 @@ def _stage_audit_publish(
             for entry in os.listdir(stage)
             if entry.startswith("index=")
         }
-        audited: dict[str, int] = {}
-        if staged_dirs:
-            # a new StructType: ``.add`` would append to ``schema``'s own
-            # field list, which the all-tombstone branch below writes with
-            audit_schema = StructType(
-                [*schema.fields, StructField("index", StringType())]
-            )
-            # the dirs, not the '_stage' root Spark warns is hidden
-            audited = {
-                r["index"]: r["count"]
-                for r in spark.read.schema(audit_schema)
-                .option("basePath", stage)
-                .parquet(*staged_dirs.values())
-                .groupBy("index").count().collect()
-            }
+        audited = {i: _staged_rows(d) for i, d in staged_dirs.items()}
         short = {i: (n, audited.get(i, 0)) for i, n in expected.items()
                  if audited.get(i, 0) != n}
-        if short:  # lost files or concurrent truncation: abort, publish none
+        if short:  # lost or truncated files: abort, publish none
             report.rolled_back.extend(indexes)
             raise RuntimeError(f"one-pass audit failed (expected, staged): {short}")
         for index in indexes:
@@ -332,6 +388,8 @@ def _stage_audit_publish(
                         spark.createDataFrame([], schema), index,
                         timestamps[index],
                     )
+                with open(os.path.join(gen_path, PROBE_FILE), "w") as f:
+                    json.dump({"path": path, "value": probes[index]}, f)
                 report.reconcile_ok[index] = True
                 sink.publish(index, gen)
                 report.published_rows[index] = want
@@ -363,17 +421,23 @@ def full_sync(
 
     One stats job lists and sizes the indexes; :func:`one_pass_live` (a
     single fact-table scan) feeds :func:`_stage_audit_publish`, which
-    stages, audits and publishes every index smallest first.
+    stages, audits and publishes every index smallest first. The run's
+    start is the watermark it earns (``report.watermark``): the reference
+    records ``last_modified`` after either flow (``save_last_run_config``,
+    flows/main_flow.py:603), so a full sync seeds the next incremental run.
     """
     report = SyncReport()
+    run_started = now or datetime.now()
+    report.watermark = run_started
     pinned = [x.lower() for x in or_ids] if or_ids else None  # P8, :640
-    report.indexes = list(_index_stats(docs, pinned))
+    stats, _ = _index_stats(docs, pinned)
+    report.indexes = list(stats)
     if not pinned:
         # X8: orphan cleanup only runs on unpinned full syncs
         report.dropped_orphans = sink.cleanup_orphans(report.indexes)
     if not report.indexes:
         return report
-    ts = generation_timestamp(now)
+    ts = generation_timestamp(run_started)
     _stage_audit_publish(
         spark, sink, one_pass_live(docs, report.indexes),
         dict.fromkeys(report.indexes, ts), ts, report,
@@ -399,12 +463,17 @@ def incremental_sync(
     """E2: CDC merge since the inclusive watermark, tombstones propagated;
     schema drift forces a full per-index rebuild (T7).
 
-    Every rebuilt index (no alias yet, or drifted) and every merged one
-    goes through ONE :func:`_stage_audit_publish` whose frame is the
-    merged aliases' rows ``LEFT ANTI JOIN`` the delta's ``(index, id)``
-    plus the source's live rows of rebuilt indexes and of the delta. A
-    failed staged write publishes none of them and leaves the watermark,
-    so the next run replays the delta (safe: idempotent by id). A merged
+    A touched, published index has drifted when the source's probe value
+    (from the stats job) differs from the one its generation recorded; a
+    generation without a record at ``schema_path`` has its rows probed in
+    the stats job instead. Every rebuilt index (no alias yet, or drifted)
+    and every merged one goes through ONE :func:`_stage_audit_publish`
+    whose frame is the merged aliases' rows ``LEFT ANTI JOIN`` the delta's
+    ``(index, id)`` plus the source's live rows of rebuilt indexes and of
+    the delta. A failed staged write publishes none of them. The store is
+    only read: the caller stores ``report.watermark``, the run's start, once
+    the run's downstream writes have landed, so a run that fails anywhere
+    is replayed from the same watermark (safe: idempotent by id). A merged
     index is rewritten whole: O(index) I/O per run, not O(delta)."""
     report = SyncReport()
     wm = watermarks.get(pipeline_name)
@@ -412,17 +481,31 @@ def incremental_sync(
         raise ValueError(
             "no watermark recorded; run full_sync first or seed the store"
         )
+    # T1: the *run start* becomes the next watermark (rows updated while the
+    # run was in flight re-deliver next time; safe by idempotence)
     run_started = now or datetime.now()
+    report.watermark = run_started
     pinned = [x.lower() for x in or_ids] if or_ids else None
-    stats = _index_stats(docs, pinned, wm)
+    schema = docs.select("id", "document").schema
+    manifest = sink.read_manifest()
+    recorded = {
+        i: _recorded_probe(sink, gen, schema_path)
+        for i, gen in manifest.items() if not pinned or i in pinned
+    }
+    unrecorded = [i for i, r in recorded.items() if r is None]
+    stats, alias_probes = _index_stats(
+        docs, pinned, wm, schema_path,
+        _aliases(spark, sink, unrecorded, schema) if unrecorded else None,
+    )
     report.indexes = pinned or list(stats)
     touched = {i: r["changed"] for i, r in stats.items() if r["changed"]}
     report.skipped = [i for i in report.indexes if i not in touched]
 
-    schema = docs.select("id", "document").schema
-    manifest = sink.read_manifest()
     published = [i for i in touched if i in manifest]
-    report.rebuilt = _drifted(spark, docs, sink, published, schema, schema_path)
+    # an alias with no rows probes as None, like an index with no live rows
+    probes = {i: alias_probes.get(i) if r is None else r["value"]
+              for i, r in recorded.items()}
+    report.rebuilt = [i for i in published if probes[i] != stats[i]["probe"]]
     merged = [i for i in published if i not in report.rebuilt]
     rebuild = [i for i in touched if i not in merged]
     ts = generation_timestamp(run_started)
@@ -452,10 +535,7 @@ def incremental_sync(
             ts, report,
             partial(_run_with_retries, report=report, retries=retries,
                     retry_delay_s=retry_delay_s, sleep=sleep),
+            schema_path,
         )
         report.written.update({i: touched[i] for i in merged})
-
-    # T1: the *run start* becomes the next watermark (rows updated while the
-    # run was in flight re-deliver next time; safe by idempotence)
-    watermarks.set(pipeline_name, run_started)
     return report

@@ -1,52 +1,11 @@
-"""Observation metrics (SURVEY A7) and the custom Python DataSource."""
+"""The custom Python DataSource (``sources/pyds.py``)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from prefect_flow_arc_indexer_spark.operators.actions import doc_actions
-from prefect_flow_arc_indexer_spark.pipeline.metrics import (
-    observe_actions,
-    observe_rowcount,
-)
-from prefect_flow_arc_indexer_spark.sources.parquet import index_documents
 from prefect_flow_arc_indexer_spark.sources.pyds import register_cdc_feed
-from tests.conftest import SF_DIR
-
-
-def test_observe_actions_counts_match_direct_counts(spark):
-    actions = doc_actions(index_documents(spark, SF_DIR), timestamp=None)
-    observed, obs = observe_actions(actions)
-    total = observed.count()  # the action that materializes the metrics
-    m = obs.get
-    assert m["n_actions"] == total
-    assert m["n_upserts"] == actions.where(F.col("_op_type") == "index").count()
-    assert m["n_deletes"] == actions.where(F.col("_op_type") == "delete").count()
-    assert m["n_upserts"] + m["n_deletes"] == m["n_actions"]
-    assert m["n_errors"] == 0  # well-formed fixture: no NULL ids/payloads
-
-
-def test_observe_actions_flags_malformed_rows(spark):
-    bad = spark.createDataFrame(
-        [
-            ("a", None, "index", '{"v":1}'),   # NULL id
-            ("a", "2", "index", None),          # upsert without payload
-            ("a", "3", "delete", None),         # delete without payload: fine
-            ("a", "4", "index", '{"v":4}'),
-        ],
-        "_index string, _id string, _op_type string, _source string",
-    )
-    observed, obs = observe_actions(bad)
-    observed.count()
-    assert obs.get["n_errors"] == 2
-
-
-def test_observe_rowcount_skip_gate(spark):
-    df = index_documents(spark, SF_DIR).where(F.col("index") == "no_such")
-    observed, obs = observe_rowcount(df)
-    observed.write.format("noop").mode("overwrite").save()
-    assert obs.get["n_rows"] == 0  # T4 skip-empty gate, no extra count() job
 
 
 def test_cdc_feed_deterministic_and_partitioned(spark):

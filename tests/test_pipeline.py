@@ -111,7 +111,10 @@ def test_incremental_merge_upsert_and_delete(spark, sink, tmp_path):
     state = {r.id: r.document for r in sink.read_alias(spark, "alpha").collect()}
     assert state == {"2": '{"v": 22}', "4": '{"v": 4}'}
     assert "beta" in report.skipped  # nothing past the watermark
-    assert wm.get("default") == datetime(2024, 2, 2)
+    # the run's start is the watermark it earned; storing it is the
+    # caller's last step, so the store still holds the one the run read
+    assert report.watermark == datetime(2024, 2, 2)
+    assert wm.get("default") == datetime(2024, 1, 10)
 
 
 def test_incremental_watermark_is_inclusive(spark, sink, tmp_path):
@@ -517,11 +520,14 @@ SIX = ["i0", "i1", "i2", "i3", "i4", "i5"]
 
 
 def test_sync_job_count_does_not_grow_with_indexes(spark, tmp_path):
-    """Counting, enumerating, probing, writing and auditing are each one
-    grouped job over every index, so a full sync over 3 indexes runs as
-    many Spark jobs as one over 6, and an incremental sync touching 2
-    indexes as many as one touching 5: the runners add no per-index count
-    jobs."""
+    """Counting, enumerating and probing are one grouped job over every
+    index, writing is one staged write, and the audit reads parquet footers
+    on the driver, so a full sync over 3 indexes runs as many Spark jobs as
+    one over 6, and an incremental sync touching 2 indexes as many as one
+    touching 5: the runners add no per-index jobs. Under AQE each shuffle
+    stage is a job of its own: a full sync is the stats job's two and the
+    rebalanced write's two; an incremental sync adds the broadcast of the
+    delta's keys."""
     full_jobs = []
     for n in (3, 6):
         docs = _parquet_docs(spark, tmp_path, f"full{n}", _index_rows(SIX[:n]))
@@ -530,7 +536,7 @@ def test_sync_job_count_does_not_grow_with_indexes(spark, tmp_path):
             spark, docs, sink, now=datetime(2024, 2, 1)
         )))
         assert sorted(sink.read_manifest()) == SIX[:n]
-    assert full_jobs[0] == full_jobs[1]
+    assert full_jobs == [4, 4]
 
     incr_jobs = []
     base = _index_rows(SIX)
@@ -562,7 +568,7 @@ def test_sync_job_count_does_not_grow_with_indexes(spark, tmp_path):
             i: 2 if i == "i0" else 3 for i in SIX[:n]
         }
         assert report.rebuilt == []
-    assert incr_jobs[0] == incr_jobs[1]
+    assert incr_jobs == [5, 5]
 
 
 def test_incremental_staged_write_retries_then_rolls_back(
@@ -572,7 +578,8 @@ def test_incremental_staged_write_retries_then_rolls_back(
     stage and retries; once retries are exhausted every touched index is
     recorded as rolled back, the manifest is byte-identical, no stage is
     left behind and the watermark does not move, so the next run replays
-    the delta."""
+    the delta. The runner never stores the watermark: a successful run
+    returns the one it earned."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     import prefect_flow_arc_indexer_spark.pipeline.runner as runner_mod
@@ -613,7 +620,8 @@ def test_incremental_staged_write_retries_then_rolls_back(
     assert report.written == {"alpha": 1, "beta": 1}
     assert report.published_rows == {"alpha": 3, "beta": 2}
     assert not _stage_dirs(sinks[0])
-    assert marks[0].get("default") == datetime(2024, 2, 2)
+    assert report.watermark == datetime(2024, 2, 2)
+    assert marks[0].get("default") == datetime(2024, 1, 10)
 
     reports = []
 
@@ -726,6 +734,199 @@ def test_drift_probe_reads_live_rows_and_both_sides(spark, tmp_path):
     assert report.written == {"alpha": 3}
     state = {r.id: r.document for r in sink.read_alias(spark, "alpha").collect()}
     assert state == {"1": org_a, "2": org_a, "3": org_a}
+
+
+def _damage_stage(monkeypatch, damage):
+    """After the staged write lands, and before the audit reads it, call
+    ``damage`` on the path of one staged parquet file."""
+    original = VersionedSink.write_generation
+
+    def write_generation(self, df, alias, timestamp, partition_by=()):
+        gen = original(self, df, alias, timestamp, partition_by)
+        if alias == "_stage":
+            root = self.generation_path(gen)
+            damage(next(
+                os.path.join(d, f) for d, _, fs in sorted(os.walk(root))
+                for f in sorted(fs) if f.endswith(".parquet")
+            ))
+        return gen
+
+    monkeypatch.setattr(VersionedSink, "write_generation", write_generation)
+
+
+def _truncate(path):
+    with open(path, "rb") as f:
+        head = f.read(16)
+    with open(path, "wb") as f:
+        f.write(head)
+
+
+@pytest.mark.parametrize("damage", [os.remove, _truncate],
+                         ids=["deleted", "truncated"])
+def test_audit_fails_on_lost_or_unreadable_staged_file(
+    spark, tmp_path, monkeypatch, damage
+):
+    """The audit sums the staged files' parquet footers: a staged file
+    deleted, or truncated so that its footer cannot be read, between the
+    write and the audit makes the run raise before anything is published,
+    on a full sync and on an incremental one, and no stage is left."""
+    import prefect_flow_arc_indexer_spark.pipeline.runner as runner_mod
+
+    reports = []
+
+    class SpyReport(SyncReport):
+        def __init__(self):
+            super().__init__()
+            reports.append(self)
+
+    monkeypatch.setattr(runner_mod, "SyncReport", SpyReport)
+    full = VersionedSink(str(tmp_path / "full"))
+    incr = VersionedSink(str(tmp_path / "incr"))
+    full_sync(spark, _docs(spark, BASE_ROWS), incr, now=datetime(2024, 2, 1))
+    with open(os.path.join(incr.base_dir, "manifest.json"), "rb") as f:
+        manifest = f.read()
+    gens = incr.list_generations()
+    wm = WatermarkStore(str(tmp_path / "wm.json"))
+    wm.set("default", datetime(2024, 1, 10))
+    changed = BASE_ROWS + [
+        ("alpha", "4", '{"v": 4}', False, "2024-01-15 00:00:00"),
+        ("beta", "11", '{"v": 11}', False, "2024-01-15 00:00:00"),
+    ]
+
+    _damage_stage(monkeypatch, damage)
+    reports.clear()
+    with pytest.raises(RuntimeError, match="audit failed"):
+        full_sync(spark, _docs(spark, BASE_ROWS), full, now=datetime(2024, 2, 1))
+    assert sorted(reports[0].rolled_back) == ["alpha", "beta"]
+    assert reports[0].written == {} and reports[0].published_rows == {}
+    assert full.read_manifest() == {}
+    assert full.list_generations() == []
+
+    reports.clear()
+    with pytest.raises(RuntimeError, match="audit failed"):
+        incremental_sync(
+            spark, _docs(spark, changed), incr, wm, now=datetime(2024, 2, 2)
+        )
+    assert sorted(reports[0].rolled_back) == ["alpha", "beta"]
+    assert reports[0].written == {}
+    with open(os.path.join(incr.base_dir, "manifest.json"), "rb") as f:
+        assert f.read() == manifest
+    assert incr.list_generations() == gens
+
+
+def _stats_plans(spark, monkeypatch) -> list[list[str]]:
+    """The file locations each query ``runner._index_stats`` runs scans,
+    one list per query, read from its executed plan in Spark's SQL status
+    store as each call returns."""
+    import prefect_flow_arc_indexer_spark.pipeline.runner as runner_mod
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    plans: list[list[str]] = []
+    original = runner_mod._index_stats
+    conf = "spark.sql.maxMetadataStringLength"
+
+    def executions():
+        # the store keeps only the newest executions, so a long-lived
+        # session is told apart by execution id, not by position
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        runs = store.executionsList()
+        return [runs.apply(n) for n in range(runs.size())]
+
+    def spy(*args, **kwargs):
+        seen = max((e.executionId() for e in executions()), default=-1)
+        cap = spark.conf.get(conf)
+        spark.conf.set(conf, "100000")  # whole paths in the plan text
+        try:
+            out = original(*args, **kwargs)
+        finally:
+            spark.conf.set(conf, cap)
+        for run in executions():
+            if run.executionId() > seen:
+                plans.append(sorted(
+                    line for line in run.physicalPlanDescription().splitlines()
+                    if line.startswith("Location:")
+                ))
+        return out
+
+    monkeypatch.setattr(runner_mod, "_index_stats", spy)
+    return plans
+
+
+def test_drift_probe_reads_recorded_value_not_the_alias(
+    spark, tmp_path, monkeypatch
+):
+    """Each published generation records its probe value in
+    ``_probe.json``; the next incremental run compares the source with that
+    record and its stats job reads no published alias. A hand-published
+    generation has no record, so its rows enter the stats job."""
+    org_a = '{"schema_maintainer": {"schema_name": "Org A"}}'
+    base = [(i, str(n), org_a, False, "2024-01-01 00:00:00")
+            for n, i in enumerate(["alpha", "alpha", "beta"])]
+    sink = VersionedSink(str(tmp_path / "sink"))
+    full_sync(spark, _docs(spark, base), sink, now=datetime(2024, 2, 1))
+    for index, gen in sink.read_manifest().items():
+        with open(os.path.join(sink.generation_path(gen), "_probe.json")) as f:
+            assert json.load(f) == {
+                "path": "$.schema_maintainer.schema_name", "value": "Org A",
+            }, index
+    wm = WatermarkStore(str(tmp_path / "wm.json"))
+    wm.set("default", datetime(2024, 1, 10))
+    rows = base + [("alpha", "5", org_a, False, "2024-01-15 00:00:00"),
+                   ("beta", "6", org_a, False, "2024-01-15 00:00:00")]
+    docs = _parquet_docs(spark, tmp_path, "src", rows)
+    plans = _stats_plans(spark, monkeypatch)
+
+    report = incremental_sync(spark, docs, sink, wm, now=datetime(2024, 2, 2))
+    assert report.rebuilt == [] and report.written == {"alpha": 1, "beta": 1}
+    assert len(plans) == 1 and len(plans[0]) == 1  # the source alone
+    assert str(tmp_path / "src") in plans[0][0]
+
+    # the record, not the alias's rows, is what the source is compared with
+    gen = sink.generation_path(sink.read_manifest()["alpha"])
+    with open(os.path.join(gen, "_probe.json"), "w") as f:
+        json.dump({"path": "$.schema_maintainer.schema_name",
+                   "value": "Org Z"}, f)
+    plans.clear()
+    report = incremental_sync(spark, docs, sink, wm, now=datetime(2024, 2, 3))
+    assert report.rebuilt == ["alpha"]
+    assert len(plans[0]) == 1 and sink.base_dir not in plans[0][0]
+
+    # a generation published without a record is read by the same job
+    stale = spark.createDataFrame([("0", org_a)], "id string, document string")
+    sink.publish(
+        "beta", sink.write_generation(stale, "beta", "2024-02-04t00.00.00")
+    )
+    plans.clear()
+    report = incremental_sync(spark, docs, sink, wm, now=datetime(2024, 2, 5))
+    assert report.rebuilt == []
+    assert len(plans) == 1 and len(plans[0]) == 2
+    assert [loc for loc in plans[0] if sink.base_dir in loc] == [
+        f"Location: InMemoryFileIndex "
+        f"[file:{sink.generation_path('beta_2024-02-04t00.00.00')}]"
+    ]
+
+
+def test_probe_recorded_under_another_path_is_ignored(spark, tmp_path):
+    """A record taken at another ``schema_path`` says nothing about this
+    one: the run reads the alias instead, and the generation it publishes
+    records the new path."""
+    doc = '{"schema_maintainer": {"schema_name": "Org A"}, "kind": "x"}'
+    rows = [("alpha", "1", doc, False, "2024-01-01 00:00:00")]
+    sink = VersionedSink(str(tmp_path / "sink"))
+    full_sync(spark, _docs(spark, rows), sink, now=datetime(2024, 2, 1))
+    wm = WatermarkStore(str(tmp_path / "wm.json"))
+    wm.set("default", datetime(2024, 1, 10))
+    rows.append(("alpha", "2", doc, False, "2024-01-15 00:00:00"))
+    # trusted, the "Org A" recorded at the default path would differ from
+    # the source's "x" and force a rebuild
+    report = incremental_sync(
+        spark, _docs(spark, rows), sink, wm, now=datetime(2024, 2, 2),
+        schema_path="$.kind",
+    )
+    assert report.rebuilt == [] and report.written == {"alpha": 1}
+    gen = sink.generation_path(sink.read_manifest()["alpha"])
+    with open(os.path.join(gen, "_probe.json")) as f:
+        assert json.load(f) == {"path": "$.kind", "value": "x"}
 
 
 def test_adaptive_bulk_shrink_steps_down(spark):

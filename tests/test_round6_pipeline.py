@@ -27,6 +27,7 @@ class _RecordingEs(http.server.BaseHTTPRequestHandler):
 
     ops: list[tuple[str, str, str]] = []  # (op, index, id) — class-level
     docs: dict[str, set[str]] = {}  # index -> live ids — class-level
+    bodies: dict[str, dict[str, str]] = {}  # index -> id -> document
     aliases: dict[str, str] = {}  # alias -> physical index — class-level
     settings: list[tuple[str, dict]] = []  # PUT _settings calls — class-level
     fail_bulk = False  # answer every _bulk with a non-retryable item error
@@ -61,10 +62,13 @@ class _RecordingEs(http.server.BaseHTTPRequestHandler):
             index, _id = meta[op]["_index"], meta[op]["_id"]
             type(self).ops.append((op, index, _id))
             store = type(self).docs.setdefault(self._resolve(index), set())
+            bodies = type(self).bodies.setdefault(self._resolve(index), {})
             if op == "delete":
                 store.discard(_id)
+                bodies.pop(_id, None)
             else:
                 store.add(_id)
+                bodies[_id] = lines[i + 1]
             i += 2 if op == "index" else 1  # index meta is followed by a doc
         self._reply({"errors": False, "items": []})
 
@@ -97,6 +101,7 @@ class _RecordingEs(http.server.BaseHTTPRequestHandler):
     def do_DELETE(self):
         for index in self.path.strip("/").split(","):
             type(self).docs.pop(index, None)
+            type(self).bodies.pop(index, None)
         self._reply({"acknowledged": True})
 
     def _reply(self, payload: dict):
@@ -115,6 +120,7 @@ class _RecordingEs(http.server.BaseHTTPRequestHandler):
 def es_stub():
     _RecordingEs.ops = []
     _RecordingEs.docs = {}
+    _RecordingEs.bodies = {}
     _RecordingEs.aliases = {}
     _RecordingEs.settings = []
     _RecordingEs.fail_bulk = False
@@ -254,18 +260,21 @@ def test_mirror_reconcile_mismatch_warns_only(spark, tmp_path, capsys, es_stub):
     assert report["mirror_reconcile"] == {"alpha": False}  # ES holds 4, alias 3
 
 
-def _count_mirror_calls(monkeypatch) -> dict[str, int]:
-    """Count the CLI mirror's bulk writer calls through wrappers that still
-    ship to the stub."""
+def _count_mirror_calls(spark, monkeypatch) -> dict[str, int]:
+    """Count the CLI mirror's bulk writer calls, and the Spark jobs they
+    run, through wrappers that still ship to the stub."""
     import prefect_flow_arc_indexer_spark.pipeline.es_sink as es_sink
+    from tests.test_pipeline import _jobs_run
 
-    calls = {"write_upserts_rest": 0, "write_deletes": 0}
-    for name in calls:
+    calls = {"write_upserts_rest": 0, "write_deletes": 0, "jobs": 0}
+    for name in ("write_upserts_rest", "write_deletes"):
         original = getattr(es_sink, name)
 
         def counted(*args, _name=name, _original=original, **kwargs):
             calls[_name] += 1
-            return _original(*args, **kwargs)
+            calls["jobs"] += _jobs_run(
+                spark, lambda: _original(*args, **kwargs)
+            )
 
         monkeypatch.setattr(es_sink, name, counted)
     return calls
@@ -274,14 +283,15 @@ def _count_mirror_calls(monkeypatch) -> dict[str, int]:
 def test_cli_mirror_one_pass_across_indexes(
     spark, tmp_path, capsys, es_stub, monkeypatch
 ):
-    """Three indexes mirror in ONE upsert job per run (plus one delete job
-    on an incremental run), and every document still lands in its own
-    index: the full sync's in its alias's generation, the incremental
-    delta's through its alias, a schema-drift rebuild's whole alias too."""
+    """Three indexes mirror in ONE Spark job per run, the incremental one
+    carrying upserts and deletes alike, and every document still lands in
+    its own index: the full sync's in its alias's generation, the
+    incremental delta's through its alias, a schema-drift rebuild's whole
+    alias too."""
     from prefect_flow_arc_indexer_spark.__main__ import main
 
     nodes, ops = es_stub
-    calls = _count_mirror_calls(monkeypatch)
+    calls = _count_mirror_calls(spark, monkeypatch)
     src = str(tmp_path / "src")
     t0, t1 = datetime(2024, 1, 1, 12, 0, 0), datetime(2030, 1, 1)
     v1 = '{"schema_maintainer": {"schema_name": "v1"}}'
@@ -309,7 +319,7 @@ def test_cli_mirror_one_pass_across_indexes(
         ("index", gens["gamma"], "5"), ("index", gens["gamma"], "6"),
     ])
     assert _RecordingEs.aliases == gens
-    assert calls == {"write_upserts_rest": 1, "write_deletes": 0}
+    assert calls == {"write_upserts_rest": 1, "write_deletes": 0, "jobs": 1}
     assert report["mirror_reconcile"] == {
         "alpha": True, "beta": True, "gamma": True,
     }
@@ -334,7 +344,7 @@ def test_cli_mirror_one_pass_across_indexes(
         ("index", "gamma", "5"), ("index", "gamma", "6"),
         ("index", "gamma", "8"),
     ])
-    assert calls == {"write_upserts_rest": 2, "write_deletes": 1}
+    assert calls == {"write_upserts_rest": 2, "write_deletes": 0, "jobs": 2}
     assert report["mirror_reconcile"] == {
         "alpha": True, "beta": True, "gamma": True,
     }
@@ -370,6 +380,112 @@ def test_cli_full_sync_mirror_failure_swaps_no_alias(
         main(argv)
     assert _RecordingEs.aliases == before
     assert _RecordingEs.settings == settings_before  # no swap even began
+
+
+def _digests(pairs) -> dict[str, str]:
+    import hashlib
+
+    return {i: hashlib.sha1(d.encode()).hexdigest() for i, d in pairs}
+
+
+def _mirror_matches_sink(spark, sink_dir: str) -> None:
+    """Every alias's documents in the stub equal the sink's published rows,
+    compared by digest, not by count."""
+    sink = VersionedSink(sink_dir)
+    for alias in sink.read_manifest():
+        held = _RecordingEs.bodies.get(_RecordingEs.aliases.get(alias, alias), {})
+        assert _digests(held.items()) == _digests(
+            (r.id, r.document) for r in sink.read_alias(spark, alias).collect()
+        ), alias
+
+
+@pytest.mark.parametrize("failed_run", ["incremental", "full"])
+def test_failed_mirror_keeps_watermark_and_rerun_converges(
+    spark, tmp_path, capsys, es_stub, failed_run
+):
+    """The watermark is stored only once the mirror has landed: a run
+    whose mirror fails leaves it where it was, so a healthy incremental
+    re-run ships the update that ES missed, even one stamped before the
+    failed run started."""
+    from prefect_flow_arc_indexer_spark.__main__ import main
+
+    nodes, _ops = es_stub
+    src, sink_dir = str(tmp_path / "src"), str(tmp_path / "sink")
+    t0 = datetime(2024, 1, 1, 12, 0, 0)
+    base = [("alpha", 1, '{"v": 1}', t0), ("alpha", 2, '{"v": 2}', t0),
+            ("beta", 3, '{"v": 3}', t0)]
+    _write_events(spark, f"{src}/events.parquet", base)
+    argv = ["--source", src, "--sink-dir", sink_dir, "--es-nodes", nodes]
+    assert main([*argv, "--full-sync"]) == 0
+    capsys.readouterr()
+    marks = WatermarkStore(f"{sink_dir}/watermarks.json")
+    wm = marks.get("default")
+    _mirror_matches_sink(spark, sink_dir)
+
+    # an update stamped after the stored watermark, before the failed run
+    _write_events(spark, f"{src}/events.parquet", [
+        base[0], ("alpha", 2, '{"v": 22}', datetime.now()), base[2],
+    ])
+    _RecordingEs.fail_bulk = True
+    with pytest.raises(Exception):
+        main([*argv, "--full-sync"] if failed_run == "full" else argv)
+    assert marks.get("default") == wm
+    with pytest.raises(AssertionError):
+        _mirror_matches_sink(spark, sink_dir)  # the sink moved, ES did not
+
+    _RecordingEs.fail_bulk = False
+    assert main(argv) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["written"] == {"alpha": 1}
+    assert report["mirror_reconcile"] == {"alpha": True}
+    assert marks.get("default") > wm
+    assert str(marks.get("default")) == report["watermark"]
+    _mirror_matches_sink(spark, sink_dir)
+
+
+def test_mixed_stream_ships_tombstones_as_deletes(spark, tmp_path):
+    """With ``deleted_column`` one job ships index and delete actions: a
+    tombstone goes out as ``delete`` with no document line, even when its
+    document is not null."""
+    from prefect_flow_arc_indexer_spark.pipeline.es_sink import (
+        EsSinkConfig,
+        write_upserts_rest,
+    )
+
+    rows = spark.createDataFrame(
+        [("a", "1", '{"v": 1}', False), ("a", "2", '{"v": 2}', True),
+         ("b", "3", '{"v": 3}', False), ("b", "4", None, True)],
+        "_index string, id string, document string, is_deleted boolean",
+    ).coalesce(1)
+    cap = tmp_path / "bulk"
+    cap.mkdir()
+
+    def post(url, body, timeout_s, _cap=str(cap)):
+        import os
+        import uuid
+
+        with open(os.path.join(_cap, uuid.uuid4().hex), "wb") as f:
+            f.write(body)
+        return 200
+
+    write_upserts_rest(
+        rows, EsSinkConfig(nodes="es:9200", batch_entries=3), post=post,
+        source_column="document", deleted_column="is_deleted",
+    )
+    lines = [ln for p in sorted(cap.iterdir())
+             for ln in p.read_text().splitlines()]
+    actions, docs = [], []
+    while lines:
+        meta = json.loads(lines.pop(0))
+        op, target = next(iter(meta.items()))
+        actions.append((op, target["_index"], target["_id"]))
+        if op == "index":
+            docs.append(lines.pop(0))
+    assert sorted(actions) == [
+        ("delete", "a", "2"), ("delete", "b", "4"),
+        ("index", "a", "1"), ("index", "b", "3"),
+    ]
+    assert sorted(docs) == ['{"v": 1}', '{"v": 3}']
 
 
 def test_count_index_refresh_then_count(es_stub):
