@@ -10,7 +10,7 @@ Layout
 - ``functions``  — cross-engine-stable column expressions (hashing, text, vectors)
 - ``operators``  — the SURVEY §2 operator inventory + extensions, one module each
 - ``plans``      — query registry: name -> (Spark builder, DuckDB oracle SQL)
-- ``streaming``  — incremental/CDC semantics and Structured Streaming variants
+- ``streaming``  — the watermark store of the incremental sync
 - ``pipeline``   — full-sync / incremental drivers, versioned sink, atomic publish
 - ``multimodal`` — binary-column plumbing (decode stubs, mapInPandas feature extract)
 """

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from prefect_flow_arc_indexer_spark.functions.pairs import in_row_pairs
 from prefect_flow_arc_indexer_spark.plans.registry import register
 from prefect_flow_arc_indexer_spark.sources.parquet import load_table
 
@@ -622,13 +623,10 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ids"))
         .where(F.size("ids") > 1)
     )
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), "
-        "y -> struct(x AS part_a, y AS part_b))))"
-    )
     pairs = (
-        baskets.select(F.explode(pair_expr).alias("p"))
+        baskets.select(
+            F.explode(in_row_pairs("ids", "part_a", "part_b")).alias("p")
+        )
         .groupBy(F.col("p.part_a").alias("part_a"), F.col("p.part_b").alias("part_b"))
         .agg(F.count("*").alias("support"))
         .where(F.col("support") >= BASKET_MIN_SUPPORT)

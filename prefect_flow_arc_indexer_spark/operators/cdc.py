@@ -425,17 +425,17 @@ _register_reembed_plan()
 
 
 # --------------------------------------------------------------------------
-# stream == batch parity (driver-gate exposure for streaming/jobs.py,
-# VERDICT r9 task 5)
+# stream == batch parity: the CDC merge drained through Structured
+# Streaming (VERDICT r9 task 5)
 # --------------------------------------------------------------------------
 _PARITY_CHUNKS = 4
 
 
 def _register_stream_batch_parity():
     """Drain the CDC merge THROUGH Structured Streaming and gate the result
-    on q_cdc_merge's exact oracle — the driver-visible proof that the
-    streaming half computes the same answer as the batch half (previously
-    only pytest's stream-equals-batch checks said so)."""
+    on q_cdc_merge's exact oracle — the driver-visible proof that a
+    micro-batch fold of the feed computes the same answer as the batch
+    merge."""
     # force q_cdc_merge's registration before dereferencing it, so this
     # module stays independently importable instead of relying on
     # _OPERATOR_MODULES ordering (the _register_quality_ensemble pattern;

@@ -37,6 +37,7 @@ from prefect_flow_arc_indexer_spark.functions.hashing import (
     dd_stable_hash,
     stable_hash,
 )
+from prefect_flow_arc_indexer_spark.functions.pairs import in_row_pairs
 from prefect_flow_arc_indexer_spark.functions.textfns import (
     STOPWORDS,
     dd_tokens,
@@ -552,13 +553,10 @@ def q_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count("*").alias("df"))
     )
-    pair_expr = F.expr(
-        "flatten(transform(terms, (x, i) -> "
-        "transform(slice(terms, i + 2, size(terms) - i - 1), "
-        "y -> struct(x AS term_a, y AS term_b))))"
-    )
     pairs = (
-        per_doc.select(F.explode(pair_expr).alias("p"))
+        per_doc.select(
+            F.explode(in_row_pairs("terms", "term_a", "term_b")).alias("p")
+        )
         .groupBy("p.term_a", "p.term_b")
         .agg(F.count("*").alias("n_pair"))
         .where(F.col("n_pair") >= COOCCUR_MIN_PAIRS)

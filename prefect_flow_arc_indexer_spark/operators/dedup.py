@@ -42,6 +42,7 @@ from prefect_flow_arc_indexer_spark.functions.hashing import (
     dd_stable_hash,
     stable_hash,
 )
+from prefect_flow_arc_indexer_spark.functions.pairs import in_row_pairs
 from prefect_flow_arc_indexer_spark.functions.shingle_kernel import (
     minhash_signatures_arrow,
     simhash_arrow,
@@ -150,13 +151,10 @@ def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
         .where(F.size("ids") > 1)
     )
     # all ordered pairs (ids[i], ids[j]) with i < j, fully JVM-side
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), "
-        "y -> struct(x AS doc_a, y AS doc_b))))"
-    )
     return (
-        grouped.select(F.explode(pair_expr).alias("p"))
+        grouped.select(
+            F.explode(in_row_pairs("ids", "doc_a", "doc_b")).alias("p")
+        )
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
@@ -267,13 +265,10 @@ def lsh_candidate_pairs_capped(
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .where(F.size("ids") > 1)
     )
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), "
-        "y -> struct(x AS doc_a, y AS doc_b))))"
-    )
     pairs = (
-        grouped.select(F.explode(pair_expr).alias("p"))
+        grouped.select(
+            F.explode(in_row_pairs("ids", "doc_a", "doc_b")).alias("p")
+        )
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
@@ -1782,16 +1777,15 @@ def q_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.size("ms") > 1)
     )
-    pair_expr = F.expr(
-        "flatten(transform(ms, (x, i) -> "
-        "transform(slice(ms, i + 2, size(ms) - i - 1), "
-        "y -> struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        "x.simhash AS sha, y.simhash AS shb))))"
-    )
     hamming = F.bit_count(F.col("sha").bitwiseXOR(F.col("shb"))).cast("bigint")
     out = (
-        grouped.select(F.explode(pair_expr).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.sha", "p.shb")
+        grouped.select(F.explode(in_row_pairs("ms", "x", "y")).alias("p"))
+        .select(
+            F.col("p.x.doc_id").alias("doc_a"),
+            F.col("p.y.doc_id").alias("doc_b"),
+            F.col("p.x.simhash").alias("sha"),
+            F.col("p.y.simhash").alias("shb"),
+        )
         .where(hamming <= SIMHASH_HAMMING_MAX)
         .select("doc_a", "doc_b", hamming.alias("hamming"))
         .distinct()
@@ -1922,13 +1916,10 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
         .where(F.size("srcs") > 1)
     )
-    pair_expr = F.expr(
-        "flatten(transform(srcs, (x, i) -> "
-        "transform(slice(srcs, i + 2, size(srcs) - i - 1), "
-        "y -> struct(x AS source_a, y AS source_b))))"
-    )
     return (
-        grouped.select(F.explode(pair_expr).alias("p"))
+        grouped.select(
+            F.explode(in_row_pairs("srcs", "source_a", "source_b")).alias("p")
+        )
         .select("p.source_a", "p.source_b")
         .groupBy("source_a", "source_b")
         .agg(F.count("*").alias("shared_5grams"))
@@ -2556,13 +2547,10 @@ sig AS (
                 .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
                 .where(F.size("ids") > 1)
             )
-            pair_expr = F.expr(
-                "flatten(transform(ids, (x, i) -> "
-                "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                "y -> struct(x AS da, y AS db))))"
-            )
             n_cand = (
-                grouped.select(F.explode(pair_expr).alias("p"))
+                grouped.select(
+                    F.explode(in_row_pairs("ids", "da", "db")).alias("p")
+                )
                 .select("p.da", "p.db")
                 .distinct()
                 .agg(F.count("*").alias("n_candidates"))

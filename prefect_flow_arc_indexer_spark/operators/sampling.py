@@ -111,11 +111,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stratified_sample(docs: DataFrame, pct: int = SAMPLE_PCT) -> DataFrame:
-    """The reusable sample itself (rows kept), for pipeline composition."""
-    return docs.where(split_bucket(F.col("doc_id"), SAMPLE_SALT) < pct)
-
-
 # --------------------------------------------------------------------------
 # weighted sampling: integer-exact systematic (size-proportional) draw
 # --------------------------------------------------------------------------

@@ -9,8 +9,7 @@ these operators add the event-time window surface it lacks).
   after its predecessor MERGES into the session (Spark treats the session
   end ``last_event + gap`` as inclusive for the next event; verified by
   test_session_window_gap_semantics).
-- `q_events_hourly`: tumbling 1-hour windows per event type (watermarked
-  windowed agg in the streaming variant — see ``streaming/``).
+- `q_events_hourly`: tumbling 1-hour windows per event type.
 
 Money-style double sums go through DECIMAL(18,2) so partial-aggregation
 order can't produce float drift between engines.
@@ -81,8 +80,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
   FROM events
  GROUP BY event_type, date_trunc('hour', ts)
 """,
-    doc="tumbling 1-hour event-time windows per event type (batch form of "
-    "the watermarked streaming agg in streaming/jobs.py)",
+    doc="tumbling 1-hour event-time windows per event type",
 )
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -162,8 +160,8 @@ HOPS_PER_WINDOW = HOP_WIDTH_US // HOP_SLIDE_US  # 4
     "windows. Spark's window(ts, width, slide) expands the assignment "
     "scan-side (a 4x row multiplier BEFORE one shuffle on (window, type)); "
     "the oracle replicates the epoch-aligned window math with a range() "
-    "cross join. Batch form of the slide-width streaming agg; tumbling "
-    "(q_events_hourly) is the slide == width special case.",
+    "cross join. Tumbling (q_events_hourly) is the slide == width "
+    "special case.",
 )
 def q_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

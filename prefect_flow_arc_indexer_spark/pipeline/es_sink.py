@@ -21,12 +21,9 @@ Semantics mapped from the reference:
 - request timeout   -> ``EsSinkConfig.timeout_s`` (es_request_timeout 30s)
 - 429 retries       -> ``EsSinkConfig.retries`` with the reference's
   exponential backoff (:func:`make_retrying_post`)
-- chunk shrink      -> :func:`write_adaptive`, through
-  :func:`apply_actions_batch` and :class:`EsStreamSink` only
-- action streams    -> :func:`apply_actions_batch` applies upserts first,
-  then deletes — safe under replay because both are idempotent by id, and
-  a delete-then-recreate inside one batch is resolved upstream by the
-  last-writer-wins dedup in ``streaming.jobs``.
+- chunk shrink      -> not reproduced: the chunk stays at
+  ``batch_entries`` and a chunk whose 429 retries are exhausted fails the
+  job, so a re-run replays it (idempotent by id)
 - alias changeover  -> :func:`swap_alias`; count reconcile ->
   :func:`count_index`.
 """
@@ -34,7 +31,7 @@ Semantics mapped from the reference:
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -61,7 +58,7 @@ def _node_url(cfg: EsSinkConfig) -> str:
 class BulkItemError(RuntimeError):
     """ES ``_bulk`` returned HTTP 200 with per-item failures
     (``"errors": true`` in the body — e.g. es_rejected_execution_exception).
-    Raised so callers and :func:`write_adaptive`'s backpressure shrink see
+    Raised so callers and :func:`make_retrying_post`'s 429 retry see
     item-level rejections, exactly as the reference's ``streaming_bulk``
     raises on item errors (flows/main_flow.py:366-395; ADVICE r4).
 
@@ -140,9 +137,9 @@ def make_retrying_post(cfg: EsSinkConfig, post=_post_bulk, sleep=time.sleep):
     — safe because every op is idempotent by ``_id``, the same guarantee
     ``streaming_bulk`` leans on.  Non-retryable item failures (mapping
     errors, 4xx other than 429) raise immediately; exhausted retries
-    re-raise the last error: the CLI mirror fails the run, while under
-    :func:`apply_actions_batch` :func:`write_adaptive`'s chunk shrink (the
-    reference's OUTER loop) takes over."""
+    re-raise the last error, which fails the task and so the mirror job.
+    The reference's outer loop, which shrinks the chunk and replays the
+    stream, is not reproduced: the chunk size is fixed per run."""
     delays = backoff_schedule(cfg)
 
     def _retrying(url: str, body: bytes, timeout_s: int) -> int:
@@ -369,128 +366,3 @@ def swap_alias(
             request=request,
         )
     return old
-
-
-def shrink_chunk(entries: int) -> int:
-    """T6: the reference's backpressure step-down (flows/main_flow.py:
-    443-451): -50 while >50, then -10 while >10, then -1, floor 1."""
-    if entries > 50:
-        return entries - 50
-    if entries > 10:
-        return entries - 10
-    if entries > 1:
-        return entries - 1
-    return 1
-
-
-def write_adaptive(
-    df: DataFrame,
-    cfg: EsSinkConfig,
-    write=write_upserts_rest,
-    backoff_s: float = 120.0,
-    sleep=time.sleep,
-) -> EsSinkConfig:
-    """T6 adaptive bulk sizing (reference ``flows/main_flow.py:439-451``):
-    retry a failed bulk write with a smaller ``batch_entries`` chunk —
-    sleep, shrink per :func:`shrink_chunk`, re-attempt. The write is
-    idempotent by id (upsert/delete), so a replay after a partial batch is
-    safe — the same guarantee the reference leans on when it rewinds its
-    server-side cursor to the last committed batch. Gives up only once a
-    1-entry batch fails. Returns the config that succeeded, so a caller
-    streaming many batches keeps the adapted size (as the reference does)."""
-    current = cfg
-    while True:
-        try:
-            write(df, current)
-            return current
-        except Exception:
-            if current.batch_entries <= 1:
-                raise
-            sleep(backoff_s)
-            current = replace(
-                current, batch_entries=shrink_chunk(current.batch_entries)
-            )
-
-
-def apply_actions_batch(
-    actions: DataFrame,
-    cfg: EsSinkConfig,
-    write=write_upserts_rest,
-    write_delete=write_deletes,
-    adaptive: bool = False,
-    sleep=time.sleep,
-    out_cfg: list | None = None,
-) -> dict[str, int]:
-    """Two-phase apply of a doc-action DataFrame (``_op_type`` index|delete,
-    each row targeting its own ``_index``): one upsert write, then one
-    delete write, each across every index and each through its OWN writer,
-    so a tombstone can never reach the upsert writer (see
-    :func:`write_deletes`). A phase with no rows is skipped. Returns the
-    row count per ``"{op}:{index}"``, taken by one aggregation. Both
-    writers are injectable so tests (and the local pipeline) can capture
-    the per-phase frames without an ES cluster. With ``adaptive=True`` each
-    phase goes through :func:`write_adaptive` (T6), and a chunk size that
-    had to shrink in the upsert phase CARRIES OVER to the delete phase —
-    the reference keeps the reduced ``es_chunk_size`` for the remainder of
-    its stream (flows/main_flow.py:443-451), on the theory that an ES
-    cluster under pressure stays under pressure. When ``out_cfg`` (an
-    empty list) is passed, the config that last succeeded is appended to
-    it so callers batching many micro-batches (:class:`EsStreamSink`) can
-    carry the adapted size forward."""
-    counts = {
-        f"{r['_op_type']}:{r['_index']}": r["count"]
-        for r in actions.where(F.col("_op_type").isin("index", "delete"))
-        .groupBy("_op_type", "_index")
-        .count()
-        .collect()
-    }
-    current = cfg
-    for op, writer in (("index", write), ("delete", write_delete)):
-        if not any(key.startswith(f"{op}:") for key in counts):
-            continue
-        frame = actions.where(F.col("_op_type") == op)
-        if adaptive:
-            current = write_adaptive(frame, current, write=writer, sleep=sleep)
-        else:
-            writer(frame, current)
-    if out_cfg is not None:
-        out_cfg.append(current)
-    return counts
-
-
-class EsStreamSink:
-    """T6 for the STREAMING path: an ``apply_batch`` callable for
-    :func:`~prefect_flow_arc_indexer_spark.streaming.jobs.
-    stream_doc_actions` that applies each micro-batch through
-    :func:`apply_actions_batch` with ``adaptive=True`` and CARRIES the
-    shrunken chunk size across micro-batches — a stream that hit ES
-    backpressure in batch N starts batch N+1 at the reduced
-    ``batch_entries``, exactly the reference's behavior for the
-    remainder of its cursor stream (flows/main_flow.py:443-451)."""
-
-    def __init__(
-        self,
-        cfg: EsSinkConfig,
-        write=write_upserts_rest,
-        write_delete=write_deletes,
-        sleep=time.sleep,
-    ) -> None:
-        self.cfg = cfg
-        self._write = write
-        self._write_delete = write_delete
-        self._sleep = sleep
-        self.batches: list[dict[str, int]] = []  # per-batch apply counts
-
-    def __call__(self, actions: DataFrame, batch_id: int) -> None:
-        holder: list[EsSinkConfig] = []
-        counts = apply_actions_batch(
-            actions,
-            self.cfg,
-            write=self._write,
-            write_delete=self._write_delete,
-            adaptive=True,
-            sleep=self._sleep,
-            out_cfg=holder,
-        )
-        self.cfg = holder[0]
-        self.batches.append(counts)

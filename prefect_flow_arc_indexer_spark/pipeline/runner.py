@@ -211,12 +211,12 @@ def _collision_free_ts(
     sink: VersionedSink, index: str, ts: str, run_started: datetime
 ) -> str:
     """Same-second generation-name collision guard (the hazard ``compact``
-    and ``stream_incremental_sink`` already dodge): if this run's timestamp
-    reproduces the PUBLISHED generation name of ``index`` — publish followed
-    by an incremental run within one second — ``write_generation``'s
-    overwrite would clobber the directory the lazy merge plan is reading
-    from, and a retry rollback would delete live published data. Bump the
-    timestamp forward one second until the name is free (ADVICE r4)."""
+    already dodges): if this run's timestamp reproduces the PUBLISHED
+    generation name of ``index`` — publish followed by an incremental run
+    within one second — ``write_generation``'s overwrite would clobber the
+    directory the lazy merge plan is reading from, and a retry rollback
+    would delete live published data. Bump the timestamp forward one second
+    until the name is free (ADVICE r4)."""
     published = sink.read_manifest().get(index)
     bump = 0
     while sink.generation_name(index, ts) == published:

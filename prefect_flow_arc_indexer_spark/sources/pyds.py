@@ -30,7 +30,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
 )
 
@@ -60,12 +59,6 @@ class CdcFeedDataSource(DataSource):
 
     def reader(self, schema) -> "CdcFeedReader":
         return CdcFeedReader(
-            rows=int(self.options.get("rows", 1000)),
-            partitions=int(self.options.get("partitions", 4)),
-        )
-
-    def streamReader(self, schema) -> "CdcFeedStreamReader":
-        return CdcFeedStreamReader(
             rows=int(self.options.get("rows", 1000)),
             partitions=int(self.options.get("partitions", 4)),
         )
@@ -101,67 +94,3 @@ class CdcFeedReader(DataSourceReader):
 def register_cdc_feed(spark: SparkSession) -> None:
     """Idempotent registration of the ``cdc_feed`` format on a session."""
     spark.dataSource.register(CdcFeedDataSource)
-
-
-# --------------------------------------------------------------------------
-# streaming half: the same feed as a micro-batch CDC source with offsets
-# --------------------------------------------------------------------------
-STREAM_BATCH_ROWS = 100  # rows the feed "arrives" per latestOffset() poll
-
-
-class CdcFeedStreamReader(DataSourceStreamReader):
-    """Partition-parallel micro-batch reader over the same deterministic
-    feed: the offset is simply the exclusive upper row index, so each
-    micro-batch covers [start.row, end.row) split into contiguous ranges —
-    the moral equivalent of the reference's ``updated_at >= last_modified``
-    incremental pull (SURVEY §2 S2/T1/T2) with the watermark persisted by
-    Spark's checkpoint instead of Prefect's run config.
-
-    Scale contract: ``partitions(start, end)`` carves the offset range into
-    ``n_parts`` independent read tasks (executor-side, Arrow-batched);
-    ``latestOffset`` advances by STREAM_BATCH_ROWS per poll up to ``rows``,
-    so AvailableNow drains the feed in bounded micro-batches and a
-    continuous trigger tails it. ``commit`` is a no-op because the feed is
-    a pure function of row index — replays are idempotent end to end.
-    """
-
-    def __init__(self, rows: int, partitions: int):
-        if rows < 0 or partitions < 1:
-            raise ValueError("rows must be >= 0 and partitions >= 1")
-        self.rows = rows
-        self.n_parts = partitions
-
-    def initialOffset(self) -> dict:
-        return {"row": 0}
-
-    def latestOffset(self) -> dict:
-        # a real wrapper would poll the upstream cursor/HWM here
-        return {"row": self.rows}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = int(start["row"]), int(end["row"])
-        span = hi - lo
-        if span <= 0:
-            return [InputPartition((lo, lo))]
-        per = -(-span // self.n_parts)
-        return [
-            InputPartition((p_lo, min(p_lo + per, hi)))
-            for p_lo in range(lo, hi, per)
-        ]
-
-    def read(self, partition: InputPartition):
-        lo, hi = partition.value
-        for i in range(lo, hi):
-            key = _h(f"row{i}")
-            idx = _INDEXES[key % len(_INDEXES)]
-            yield (
-                idx,
-                str(i),
-                f'{{"k":"v{key % 100}","row":{i}}}',
-                key % 13 == 0,
-                _EPOCH + timedelta(minutes=i),
-            )
-
-    def commit(self, end: dict) -> None:
-        # nothing to acknowledge: the feed is a pure function of row index
-        pass

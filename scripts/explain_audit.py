@@ -90,57 +90,15 @@ RATCHET_VIOLATIONS = sorted(set(BOUNDED_GLOBAL_WINDOWS) - ALLOWLIST_RATCHET)
 # that is cheap per element (an array length or a scalar cast, O(1) and
 # never a pass over a document or a vector). Every entry says which
 # expression and why it stays; a hit outside this list fails the audit.
-# Most are the in-row pair expansion flatten(transform(a, (x, i) ->
-# transform(slice(a, i + 2, size(a) - i - 1), ...))), whose size(a) reads
-# the array length once per outer element.
-_PAIR_SIZE = "size({}) in the in-row pair expansion: O(1) per element"
 INVARIANT_LAMBDAS: dict[str, str] = {
-    "q_band_sweep": _PAIR_SIZE.format("ids"),
-    "q_basket_rules": _PAIR_SIZE.format("ids"),
-    "q_cooccurrence": _PAIR_SIZE.format("terms"),
-    "q_dedup_cascade": _PAIR_SIZE.format("ids"),
-    "q_dedup_components": _PAIR_SIZE.format("ids"),
-    "q_dedup_incremental": _PAIR_SIZE.format("ids"),
-    "q_dedup_minhash": _PAIR_SIZE.format("ids"),
-    "q_dup_quality": _PAIR_SIZE.format("ids"),
-    "q_lsh_recall": _PAIR_SIZE.format("ids"),
-    "q_minhash_estimate": _PAIR_SIZE.format("ids"),
-    "q_minhash_verified": _PAIR_SIZE.format("ids"),
-    "q_neardup_apply": _PAIR_SIZE.format("ids"),
-    "q_neardup_capped": _PAIR_SIZE.format("ids"),
-    "q_pair_features": _PAIR_SIZE.format("ids"),
-    "q_simhash_capped": _PAIR_SIZE.format("ms"),
-    "q_source_overlap": _PAIR_SIZE.format("srcs"),
     "q_span_mask": "cast(doc_id as string) and n_spans - 1 per span: "
     "O(1) scalars beside the per-span hash they feed",
-    "q_split_leakage": _PAIR_SIZE.format("ids"),
 }
 
 # RATCHET: like ALLOWLIST_RATCHET, this frozen snapshot can only shrink; a
 # new hit is fixed by projecting the invariant value to a column before
 # the higher-order function, never by adding a line above.
-INVARIANT_LAMBDAS_RATCHET = frozenset(
-    {
-        "q_band_sweep",
-        "q_basket_rules",
-        "q_cooccurrence",
-        "q_dedup_cascade",
-        "q_dedup_components",
-        "q_dedup_incremental",
-        "q_dedup_minhash",
-        "q_dup_quality",
-        "q_lsh_recall",
-        "q_minhash_estimate",
-        "q_minhash_verified",
-        "q_neardup_apply",
-        "q_neardup_capped",
-        "q_pair_features",
-        "q_simhash_capped",
-        "q_source_overlap",
-        "q_span_mask",
-        "q_split_leakage",
-    }
-)
+INVARIANT_LAMBDAS_RATCHET = frozenset({"q_span_mask"})
 
 INVARIANT_RATCHET_VIOLATIONS = sorted(
     set(INVARIANT_LAMBDAS) - INVARIANT_LAMBDAS_RATCHET

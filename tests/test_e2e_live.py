@@ -2,11 +2,13 @@
 
 Runs the reference's full_sync + incremental_sync dataflow against REAL
 services (reference test_instance.sh:1-24; network path
-flows/main_flow.py:413-422): a Spark JDBC scan of Postgres feeds action
-routing, the ES ``_bulk`` REST writers ship from executor tasks, the
+flows/main_flow.py:413-422): a Spark JDBC scan of Postgres feeds the
+ES ``_bulk`` REST writer shipping from executor tasks, the
 count-reconcile gate reads ``_count``, publish restores serving settings
-and flips the alias atomically, and the incremental pass applies an
-update + an insert + a tombstone through the same two-phase writer.
+and flips the alias atomically, and the incremental pass ships an update,
+an insert and a tombstone in one mixed ``_bulk`` job
+(``write_upserts_rest(..., deleted_column="is_deleted")``), the CLI's own
+mirror path.
 
 Gated on the environment scripts/e2e_live.sh exports after bringing up
 docker/e2e-compose.yml — on machines without a Docker daemon every test
@@ -74,9 +76,7 @@ def live():
 def _es_cfg():
     from prefect_flow_arc_indexer_spark.pipeline.es_sink import EsSinkConfig
 
-    return EsSinkConfig(
-        nodes=ES, id_column="_id", batch_entries=7, timeout_s=30
-    )
+    return EsSinkConfig(nodes=ES, batch_entries=7, timeout_s=30)
 
 
 def _jdbc_cfg(**kw):
@@ -135,13 +135,10 @@ def _delete_index(pattern: str) -> None:
 def test_full_then_incremental_sync_against_live_services(live):
     from pyspark.sql import functions as F
 
-    from prefect_flow_arc_indexer_spark.operators.actions import doc_actions
     from prefect_flow_arc_indexer_spark.pipeline.es_sink import (
-        apply_actions_batch,
         count_index,
         get_alias_indexes,
         swap_alias,
-        write_deletes,
         write_upserts_rest,
     )
     from prefect_flow_arc_indexer_spark.sources.jdbc import read_jdbc
@@ -156,12 +153,13 @@ def test_full_then_incremental_sync_against_live_services(live):
     # ---- full sync: JDBC scan -> generation write -> reconcile -> swap --
     docs = read_jdbc(live, _jdbc_cfg()).where(F.col("index") == ALIAS)
     gen = f"{ALIAS}_gen1"
-    actions = doc_actions(docs, "gen1")  # drops tombstones, targets gen1
-    counts = apply_actions_batch(
-        actions, cfg, write=write_upserts_rest, write_delete=write_deletes
+    live_docs = docs.where(~F.col("is_deleted"))
+    write_upserts_rest(
+        live_docs.select("id", "document", F.lit(gen).alias("_index")),
+        cfg,
+        source_column="document",
     )
-    live_rows = docs.where(~F.col("is_deleted")).count()
-    assert counts[f"index:{gen}"] == live_rows
+    live_rows = live_docs.count()
     # X7 count-reconcile against the real _count endpoint
     assert count_index(cfg, gen) == live_rows
     # X6 atomic publish: settings restore + alias flip on the real cluster
@@ -173,7 +171,7 @@ def test_full_then_incremental_sync_against_live_services(live):
     )[gen]["settings"]["index"]
     assert settings["refresh_interval"] == "30s"
 
-    # ---- incremental: update + insert + tombstone, applied via alias ----
+    # ---- incremental: update + insert + tombstone, one mixed job --------
     watermark = "2024-01-15 00:00:00"
     later = "2024-01-16 00:00:00"
     batch = [
@@ -187,12 +185,15 @@ def test_full_then_incremental_sync_against_live_services(live):
         & (F.col("updated_at") >= F.lit(watermark).cast("timestamp"))
     )
     assert incr.count() == len(batch)  # the watermark predicate pushed down
-    incr_actions = doc_actions(incr, None)  # route via the alias
-    counts2 = apply_actions_batch(
-        incr_actions, cfg, write=write_upserts_rest, write_delete=write_deletes
+    # routed through the alias, as the CLI's incremental mirror does
+    write_upserts_rest(
+        incr.select(
+            "id", "document", "is_deleted", F.col("index").alias("_index")
+        ),
+        cfg,
+        source_column="document",
+        deleted_column="is_deleted",
     )
-    assert counts2[f"index:{ALIAS}"] == 2
-    assert counts2[f"delete:{ALIAS}"] == 1
     # T3 delete propagation + upsert visibility on the real cluster
     assert count_index(cfg, ALIAS) == live_rows + 1 - 1
     got = json.loads(

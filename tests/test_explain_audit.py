@@ -10,7 +10,7 @@ Lambda invariance: the audit flags column-reading subexpressions of a
 lambda body that no lambda variable reaches. The detector fires on the
 former ``word_ngrams`` over an inline ``tokens(text)``, stays quiet on the
 projected form, searches cached relations, and finds the five n-gram
-queries clean.
+queries and the in-row pair expansion clean.
 """
 
 from __future__ import annotations
@@ -209,6 +209,22 @@ def test_ngram_queries_have_no_lambda_invariant(spark, name):
 
     _, roots = build_and_capture(all_queries()[name].builder, spark, SF_DIR)
     assert lambda_invariants(*roots) == []
+
+
+def test_in_row_pairs_lengths_0_1_2_n(spark):
+    """Every pair i < j in array order, nothing for fewer than two
+    elements, and a lambda body the audit finds clean."""
+    from itertools import combinations
+
+    from prefect_flow_arc_indexer_spark.functions.pairs import in_row_pairs
+
+    arrays = [[], [7], [7, 3], list(range(9))]
+    df = spark.createDataFrame(
+        list(enumerate(arrays)), "k int, arr array<int>"
+    ).select("k", in_row_pairs("arr", "a", "b").alias("p"))
+    got = {r.k: [(p.a, p.b) for p in r.p] for r in df.collect()}
+    assert got == {k: list(combinations(a, 2)) for k, a in enumerate(arrays)}
+    assert _invariants_of(df) == []
 
 
 def test_lambda_allowlist_ratchet_and_reasons():

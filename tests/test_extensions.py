@@ -95,17 +95,6 @@ def test_train_split_proportions_and_determinism(spark):
     assert abs(frac["test"] - 0.1) < 0.06
 
 
-def test_stratified_sample_subset_and_rate(spark):
-    from prefect_flow_arc_indexer_spark.operators import sampling
-    from prefect_flow_arc_indexer_spark.sources.parquet import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    kept = sampling.stratified_sample(docs)
-    assert kept.count() < docs.count()
-    # sample ids are a subset of the corpus ids
-    assert kept.join(docs, "doc_id", "left_anti").count() == 0
-
-
 def test_connected_components_labels_transitive_closure(spark):
     """A chain 1-2-3 plus an island 4-5 must yield components {1,2,3}, {4,5};
     min-id labeling means comp ids are 1 and 4. A path graph also exercises

@@ -76,36 +76,3 @@ def test_full_sync_from_python_datasource(spark, tmp_path):
         sink.read_alias(spark, idx).count() for idx in report.indexes
     )
     assert read_back == want
-
-
-def test_cdc_feed_stream_drains_to_batch_equivalence(spark, tmp_path):
-    """AvailableNow over the streaming reader must deliver EXACTLY the
-    batch reader's rows (same schema, same values), across multiple
-    micro-batches with offsets persisted in the checkpoint."""
-    register_cdc_feed(spark)
-    rows, parts = 250, 3
-    batch = sorted(
-        tuple(r)
-        for r in spark.read.format("cdc_feed")
-        .option("rows", rows)
-        .option("partitions", parts)
-        .load()
-        .collect()
-    )
-    q = (
-        spark.readStream.format("cdc_feed")
-        .option("rows", rows)
-        .option("partitions", parts)
-        .load()
-        .writeStream.format("memory")
-        .queryName("cdc_feed_stream_sink")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        tuple(r) for r in spark.sql("SELECT * FROM cdc_feed_stream_sink").collect()
-    )
-    assert got == batch
-    assert len(got) == rows

@@ -165,44 +165,6 @@ def test_watermark_store_roundtrip(tmp_path):
     assert json.load(open(tmp_path / "wm.json"))["p"].startswith("2024-03-01")
 
 
-def test_es_sink_two_phase_apply(spark):
-    """The action apply is two-phase: one upsert write over every index,
-    then one delete write; each row keeps its target index."""
-    from prefect_flow_arc_indexer_spark.pipeline.es_sink import (
-        EsSinkConfig,
-        apply_actions_batch,
-    )
-
-    cfg = EsSinkConfig(nodes="es:9200", id_column="_id")
-    actions = spark.createDataFrame(
-        [
-            ("idx_a", "1", "index", '{"v":1}'),
-            ("idx_a", "2", "delete", None),
-            ("idx_b", "3", "index", '{"v":3}'),
-        ],
-        "_index string, _id string, _op_type string, _source string",
-    )
-    upsert_calls, delete_calls = [], []
-    order = []
-    apply_actions_batch(
-        actions,
-        cfg,
-        write=lambda df, c: (
-            upsert_calls.append(sorted((r["_index"], r["_id"]) for r in df.collect())),
-            order.append("index"),
-        ),
-        write_delete=lambda df, c: (
-            delete_calls.append(sorted((r["_index"], r["_id"]) for r in df.collect())),
-            order.append("delete"),
-        ),
-    )
-    # deletes go through the DELETE writer only — never the upsert path —
-    # and strictly after all upserts
-    assert upsert_calls == [[("idx_a", "1"), ("idx_b", "3")]]
-    assert delete_calls == [[("idx_a", "2")]]
-    assert order == ["index", "delete"]
-
-
 def test_traced_entry_points_keep_their_names():
     """``perfbench/sync.py:_wrap`` patches these functions and sink methods
     by name to trace the sync benchmark's layers; a rename would break only the traced run,
@@ -929,52 +891,6 @@ def test_probe_recorded_under_another_path_is_ignored(spark, tmp_path):
         assert json.load(f) == {"path": "$.kind", "value": "x"}
 
 
-def test_adaptive_bulk_shrink_steps_down(spark):
-    """T6 (reference flows/main_flow.py:439-451): on bulk failure the chunk
-    size steps down 500 -> 450 -> ... (-50 while >50, -10 while >10, -1)
-    with a sleep between attempts, and the adapted config is returned."""
-    from prefect_flow_arc_indexer_spark.pipeline.es_sink import (
-        EsSinkConfig,
-        shrink_chunk,
-        write_adaptive,
-    )
-
-    # the exact reference step schedule
-    sizes = [500]
-    while sizes[-1] > 1:
-        sizes.append(shrink_chunk(sizes[-1]))
-    assert sizes[:3] == [500, 450, 400]
-    assert sizes[-6:] == [50, 40, 30, 20, 10, 9] or 1 in sizes
-    assert sizes[-1] == 1 and all(a > b for a, b in zip(sizes, sizes[1:]))
-
-    df = spark.createDataFrame([("1",)], "_id string")
-    attempts, slept = [], []
-
-    def flaky_write(frame, cfg):
-        attempts.append(cfg.batch_entries)
-        if cfg.batch_entries > 400:  # ES times out on big bulks
-            raise TimeoutError("bulk timeout")
-
-    cfg = EsSinkConfig(nodes="es:9200", id_column="_id")
-    adapted = write_adaptive(
-        df, cfg, write=flaky_write, backoff_s=120.0, sleep=slept.append
-    )
-    assert attempts == [500, 450, 400]
-    assert slept == [120.0, 120.0]
-    assert adapted.batch_entries == 400  # caller keeps the adapted size
-
-    def always_fail(frame, cfg):
-        raise TimeoutError("down hard")
-
-    with pytest.raises(TimeoutError):
-        write_adaptive(
-            df,
-            EsSinkConfig(nodes="es:9200", batch_entries=2),
-            write=always_fail,
-            sleep=slept.append,
-        )
-
-
 def test_read_files_formats_agree(spark, tmp_path):
     """The same table staged as parquet/json/csv reads back identically
     through the unified reader (explicit schema, FAILFAST)."""
@@ -1180,49 +1096,6 @@ def test_es_rest_delete_over_real_http(spark):
     ]
     assert all(a["delete"]["_index"] == "idx_http" for a in actions)
     assert max(len(p["body"].strip().split("\n")) for p in posts) <= 3
-
-
-def test_apply_actions_batch_adaptive_carries_chunk_size(spark):
-    """T6 end-to-end through the two-phase apply: a timeout in the upsert
-    phase shrinks the chunk and the SHRUNK size is used for the delete
-    phase (the reference keeps the reduced es_chunk_size for the rest of
-    the stream)."""
-    from prefect_flow_arc_indexer_spark.pipeline.es_sink import (
-        EsSinkConfig,
-        apply_actions_batch,
-    )
-
-    actions = spark.createDataFrame(
-        [
-            ("idx_a", "1", "index", "{}"),
-            ("idx_b", "2", "index", "{}"),
-            ("idx_a", "3", "delete", None),
-        ],
-        "_index string, _id string, _op_type string, _source string",
-    )
-    seen = []
-    fails = {"n": 0}
-
-    def flaky(frame, cfg):
-        idx = sorted({r["_index"] for r in frame.collect()})
-        seen.append((idx, cfg.batch_entries))
-        if cfg.batch_entries > 450 and fails["n"] == 0:
-            fails["n"] += 1
-            raise TimeoutError("bulk timeout")
-
-    counts = apply_actions_batch(
-        actions,
-        EsSinkConfig(nodes="es:9200"),
-        write=flaky,
-        write_delete=flaky,
-        adaptive=True,
-        sleep=lambda s: None,
-    )
-    # upsert phase: 500 fails -> retried at 450; the delete phase stays at 450
-    assert seen == [
-        (["idx_a", "idx_b"], 500), (["idx_a", "idx_b"], 450), (["idx_a"], 450),
-    ]
-    assert counts == {"index:idx_a": 1, "index:idx_b": 1, "delete:idx_a": 1}
 
 
 def test_es_rest_upsert_over_real_http(spark):

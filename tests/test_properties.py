@@ -324,31 +324,6 @@ def test_hilbert_kernel_matches_scalar_reference():
         assert r["hkey"] == hilbert_d(int(r["x"]), int(r["y"]))
 
 
-@given(start=st.integers(min_value=1, max_value=2000))
-@settings(max_examples=50, deadline=None)
-def test_shrink_chunk_schedule_property(start):
-    """From any start, the T6 step-down is strictly decreasing, floors at
-    1, and follows the reference's -50/-10/-1 bands."""
-    from prefect_flow_arc_indexer_spark.pipeline.es_sink import shrink_chunk
-
-    cur = start
-    for _ in range(10_000):
-        nxt = shrink_chunk(cur)
-        assert 1 <= nxt
-        if cur == 1:
-            assert nxt == 1
-            break
-        assert nxt < cur
-        if cur > 50:
-            assert nxt == cur - 50
-        elif cur > 10:
-            assert nxt == cur - 10
-        else:
-            assert nxt == cur - 1
-        cur = nxt
-    assert cur == 1
-
-
 @given(
     sessions=st.lists(
         st.tuples(st.integers(0, 10**6), st.integers(0, 10**5)),

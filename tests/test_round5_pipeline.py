@@ -14,7 +14,6 @@ from prefect_flow_arc_indexer_spark.pipeline.es_sink import (
     BulkItemError,
     EsSinkConfig,
     _check_bulk_response,
-    write_adaptive,
     write_deletes,
 )
 from prefect_flow_arc_indexer_spark.pipeline.runner import (
@@ -59,24 +58,6 @@ def test_bulk_body_ok_and_non_json_pass():
     _check_bulk_response(b'{"errors": false, "items": []}')
     _check_bulk_response(b"")  # proxies may return empty 200 bodies
     _check_bulk_response(b"not json")
-
-
-def test_item_rejections_trigger_adaptive_shrink(spark):
-    """HTTP 200 + errors:true must reach write_adaptive as a failure so the
-    backpressure step-down fires — previously rejected docs were silently
-    dropped."""
-    attempts: list[int] = []
-
-    def flaky_write(df, cfg):
-        attempts.append(cfg.batch_entries)
-        if len(attempts) < 3:
-            raise BulkItemError("bulk response reported item failures")
-
-    cfg = EsSinkConfig(nodes="example:9200", batch_entries=120)
-    df = spark.range(5)
-    out = write_adaptive(df, cfg, write=flaky_write, sleep=lambda s: None)
-    assert attempts == [120, 70, 20]  # -50 then -50 (the reference schedule)
-    assert out.batch_entries == 20
 
 
 def test_rest_path_raises_on_item_rejections_over_http(spark):
@@ -262,19 +243,14 @@ def test_one_pass_publishes_empty_generation_for_all_tombstone_index(
     gen = one.generation_path(one.read_manifest()["gamma"])
     assert spark.read.parquet(gen).columns == ["id", "document"]
 
-    from prefect_flow_arc_indexer_spark.streaming import jobs
-    from tests.test_streaming import _write_cdc_file
-
-    src = tmp_path / "cdc"
-    src.mkdir()
-    _write_cdc_file(src / "b0.json", [{
-        "index": "gamma", "id": "31", "document": '{"v": 31}',
-        "is_deleted": "false", "updated_at": "2024-02-02 00:00:00",
-    }])
-    jobs.stream_incremental_sink(
-        jobs.read_cdc_stream(spark, str(src)), spark, one,
-        str(tmp_path / "ckpt"),
-    ).awaitTermination(180)
+    # the next incremental run merges into the empty generation
+    marks = WatermarkStore(str(tmp_path / "wm.json"))
+    marks.set("default", report.watermark)
+    later = rows + [("gamma", "31", '{"v": 31}', False, "2024-02-02 00:00:00")]
+    incr = incremental_sync(
+        spark, _docs(spark, later), one, marks, now=datetime(2024, 3, 1)
+    )
+    assert incr.written == {"gamma": 1} and incr.rebuilt == []
     assert [tuple(r) for r in one.read_alias(spark, "gamma").collect()] == [
         ("31", '{"v": 31}')
     ]

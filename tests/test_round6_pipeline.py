@@ -807,35 +807,29 @@ def test_retrying_post_exhausts_then_raises_and_nonretryable_is_immediate():
     assert slept == []
 
 
-def test_429_retry_interplays_with_adaptive_shrink():
-    """The two loops compose exactly like the reference: the INNER 429
-    schedule (30->200s) exhausts first, then the OUTER write_adaptive
-    shrink (sleep 120, chunk -50) re-attempts the whole write."""
+def test_retrying_post_schedule_restarts_on_each_call():
+    """Each call runs the whole 429 schedule afresh: an exhausted schedule
+    fails the chunk (and so the task), and a replay of that chunk starts
+    again from the first delay."""
     from prefect_flow_arc_indexer_spark.pipeline.es_sink import (
+        BulkItemError,
         EsSinkConfig,
         make_retrying_post,
-        write_adaptive,
     )
 
-    inner_sleeps: list[float] = []
-    outer_sleeps: list[float] = []
-    attempts: list[int] = []
-    post = _reject_429(3)  # two full inner rounds of 2 retries fail; 4th ok
-
-    def write(df, cfg):
-        attempts.append(cfg.batch_entries)
-        make_retrying_post(cfg, post=post, sleep=inner_sleeps.append)(
-            "u", b"", cfg.timeout_s
-        )
-
-    cfg = EsSinkConfig(nodes="x", batch_entries=120, retries=1)
-    out = write_adaptive(None, cfg, write=write, sleep=outer_sleeps.append)
-    # attempt 1: post fails, 1 inner retry (30s) fails -> outer shrink;
-    # attempt 2: post fails (3rd failure), inner retry succeeds
-    assert attempts == [120, 70]
-    assert inner_sleeps == [30.0, 30.0]
-    assert outer_sleeps == [120.0]
-    assert out.batch_entries == 70
+    slept: list[float] = []
+    post = _reject_429(3)
+    retrying = make_retrying_post(
+        EsSinkConfig(nodes="x", retries=1), post=post, sleep=slept.append
+    )
+    # call 1: the post fails, its one retry (30s) fails -> re-raise
+    with pytest.raises(BulkItemError):
+        retrying("u", b"", 30)
+    assert slept == [30.0]
+    # call 2: the post fails (3rd failure), the retry lands
+    assert retrying("u", b"", 30) == 200
+    assert slept == [30.0, 30.0]
+    assert post.calls["n"] == 4
 
 
 def test_rest_429s_retry_over_real_http(spark, es_stub):
