@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from prefect_flow_arc_indexer_spark.functions.frames import local_frame
 from prefect_flow_arc_indexer_spark.plans.registry import register
 from prefect_flow_arc_indexer_spark.sources.parquet import load_table
 
@@ -517,7 +518,7 @@ def _register_stream_batch_parity():
             )
             q.awaitTermination()
             if not current:  # empty feed
-                return spark.createDataFrame([], schema)
+                return local_frame(spark, [], schema)
             # the eager checkpoint materializes the snapshot BEFORE the
             # finally-block deletes the temp state parquet; the release
             # handle is the caller's (the q_pagerank/q_golden_record

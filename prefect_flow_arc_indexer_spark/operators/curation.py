@@ -24,7 +24,7 @@ training:
   engine-stable global centroid.
 - ``q_coreset_kcenter`` — greedy k-center (farthest-first traversal,
   Gonzalez'85) coreset selection: the classic 2-approximation diversity
-  sampler used for data pruning; k corpus scans, O(1) lineage per round.
+  sampler used for data pruning; k rounds of one Arrow kernel each.
 
 All hash-bearing outputs use the engine-stable 28-bit md5 hash
 (`functions.hashing`) so DuckDB replays them bit-for-bit.
@@ -44,6 +44,11 @@ from prefect_flow_arc_indexer_spark.functions.vectors import (
 )
 from prefect_flow_arc_indexer_spark.functions.caching import (
     CheckpointRelease,
+)
+from prefect_flow_arc_indexer_spark.functions.frames import local_frame
+from prefect_flow_arc_indexer_spark.functions.rounds import (
+    arrow_rounds,
+    list_matrix,
 )
 from prefect_flow_arc_indexer_spark.plans.registry import register
 from prefect_flow_arc_indexer_spark.sources.parquet import load_table
@@ -578,17 +583,92 @@ def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 CORESET_K = 8
 
 
+_FARTHEST_SCHEMA = "vec_id long, d2u long, x array<double>"
+_LONG_MAX_AS_DOUBLE = 2.0**63
+
+
+def _farthest_kernel(cents):
+    """mapInArrow factory for one farthest-first round over (vec_id, x):
+    emit ONE candidate row per task, the row maximizing (d2u, -vec_id),
+    where d2u = round(d2 * QUANT) and d2 is the squared L2 distance to the
+    nearest of ``cents``. With no centres d2u is 0, so the candidate is the
+    smallest vec_id: the seed. A bit-exact replica of the JVM expression
+    ``round(aggregate(transform(cents, c -> aggregate(zip_with(x, c,
+    (a - b) * (a - b)), 0.0, +)), +inf, least) * QUANT)`` cast to bigint:
+
+    - each centre's sum is the left-to-right double fold (``np.cumsum``;
+      0.0 + d1 == d1 for a square);
+    - ``least`` folds the centres in list order from +inf, and Spark
+      orders NaN above every double, so a NaN distance never wins
+      (``np.fmin``, not ``np.min``);
+    - HALF_UP rounding is the Catalyst replica, and the ANSI cast to
+      bigint raises on a value above 2^63, as Spark does (a row whose
+      every distance is NaN keeps the +inf start; 2^63 itself saturates
+      to Long.MAX_VALUE).
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    from prefect_flow_arc_indexer_spark.functions.rounding import (
+        spark_round_half_up_long,
+    )
+
+    cmat = [np.asarray(c, dtype=np.float64) for c in cents]
+
+    def d2u_of(x):
+        if not cmat:
+            return np.zeros(len(x), dtype=np.int64)
+        d2 = np.full(len(x), np.inf)
+        for c in cmat:
+            sq = (x - c) * (x - c)
+            fold = np.cumsum(sq, axis=1)[:, -1] if sq.shape[1] else 0.0
+            d2 = np.fmin(d2, fold)
+        y = d2 * QUANT
+        if (y > _LONG_MAX_AS_DOUBLE).any():
+            raise ArithmeticError(
+                "CAST_OVERFLOW: a squared distance in 1e-6 units does not "
+                "fit a bigint"
+            )
+        top = y >= _LONG_MAX_AS_DOUBLE
+        out = spark_round_half_up_long(np.where(top, 0.0, y))
+        out[top] = np.iinfo(np.int64).max
+        return out
+
+    def run(it):
+        best = None
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            ids = np.asarray(batch.column(0).to_pylist(), dtype=np.int64)
+            x = list_matrix(batch.column(1))
+            d2u = d2u_of(x)
+            ties = np.flatnonzero(d2u == d2u.max())
+            i = ties[np.argmin(ids[ties])]
+            key = (int(d2u[i]), -int(ids[i]))
+            if best is None or key > best[0]:
+                best = (key, batch.slice(i, 1).column(1))
+        if best is None:
+            return
+        (d2u, neg_id), x = best
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([-neg_id], pa.int64()), pa.array([d2u], pa.int64()), x],
+            ["vec_id", "d2u", "x"],
+        )
+
+    return run
+
+
 @register(
     "q_coreset_kcenter",
     # Full DuckDB replay of the greedy loop (r7 — was rows-only): a
     # recursive CTE carries the selected-center list; each step replicates
-    # Spark's arithmetic EXACTLY — per-center squared-L2 as a LEFT FOLD in
-    # array order (list_reduce matches F.aggregate's (0.0+d1)+d2+... since
-    # 0.0+d1 == d1), least() across centers in list order, THEN one
-    # round(*1e6) to integer micro-units, argmax broken ties-to-smaller-id
-    # via ORDER BY d2u DESC, vec_id ASC LIMIT 1 (Spark: max_by on
-    # struct(d2u, -vec_id)). Exactness is additionally pinned by the
-    # pure-Python replay test in tests/test_curation.py.
+    # the kernel's arithmetic EXACTLY — per-center squared-L2 as a LEFT
+    # FOLD in array order (list_reduce matches np.cumsum), least() across
+    # centers in list order, THEN one round(*1e6) to integer micro-units,
+    # argmax broken ties-to-smaller-id via ORDER BY d2u DESC, vec_id ASC
+    # LIMIT 1 (the kernel: max of (d2u, -vec_id)). Exactness is
+    # additionally pinned by the pure-Python replay test in
+    # tests/test_curation.py and the JVM-fold fuzz in tests/test_rounds.py.
     oracle=f"""WITH RECURSIVE e AS (
   SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings
 ),
@@ -622,81 +702,40 @@ SELECT round, vec_id, radius_d2_micro FROM steps
     "Gonzalez'85 2-approximation): seed = min vec_id, each round adds the "
     "point farthest from the selected set and records the covering radius "
     "— the diversity sampler behind data-pruning/active-learning "
-    "selection. Per round: the <=k selected vectors ship as ONE broadcast "
-    "local relation, distance-to-set is a row-local fold over that tiny "
-    "array, and the argmax is a map-side-combinable max_by — a corpus "
-    "scan per round with O(1) lineage (no growing plan), exactly the "
-    "k-scan cost the algorithm's sequential dependency forces. Radii are "
-    "squared-L2 in 1e-6 units (exact integers) so ties and replay are "
+    "selection. Per round, one Arrow kernel (a bit-exact replica of the "
+    "JVM distance-to-set fold) emits one farthest candidate per task and "
+    "the driver keeps the max; the rounds run through "
+    "functions.rounds.arrow_rounds, on the driver when the corpus fits the "
+    "broadcast threshold, else as one shuffle-free job per round. Radii "
+    "are squared-L2 in 1e-6 units (exact integers) so ties and replay are "
     "deterministic.",
 )
 def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        load_table(spark, sf_dir, "embeddings", fan_out=True)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("x"))
-        .persist()
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("x")
     )
-    try:
-        # one job fetches the seed id AND its vector (min_by on the unique
-        # key) — the id-then-lookup form paid a second scan per call
-        seed, seed_vec = e.agg(
-            F.min("vec_id"), F.expr("min_by(x, vec_id)")
-        ).first()
-        if seed is None:  # empty corpus — oracle's recursive CTE yields 0 rows
-            return spark.createDataFrame(
-                [], "round int, vec_id bigint, radius_d2_micro bigint"
-            )
-        selected: list[tuple[int, list[float]]] = [(int(seed), list(seed_vec))]
-        out_rows: list[tuple[int, int, int]] = [(0, int(seed), 0)]
-
-        for rnd in range(1, CORESET_K):
-            # r11: the selected set ships as an in-plan ARRAY LITERAL, not
-            # a one-row aux relation — the per-round BroadcastExchange +
-            # BroadcastNestedLoopJoin stage disappears and the round is a
-            # bare scan+aggregate (measured 0.53 -> 0.31 s/round at
-            # sf0.1). Values are the same driver-held doubles either way,
-            # and the center count grows every round, so the aux form's
-            # one advantage (stable codegen across rounds) never applied
-            # here.
-            cents = F.array(
-                *[F.array(*[F.lit(float(x)) for x in v]) for _, v in selected]
-            )
-            # squared L2 to the nearest selected center, in exact 1e-6 units
-            d2 = F.aggregate(
-                F.transform(
-                    cents,
-                    lambda c: F.aggregate(
-                        F.zip_with(
-                            F.col("x"), c, lambda a, b: (a - b) * (a - b)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    ),
-                ),
-                F.lit(float("inf")),
-                lambda acc, v: F.least(acc, v),
-            )
-            scored = e.select(
-                "vec_id",
-                "x",
-                F.round(d2 * QUANT).cast("bigint").alias("d2u"),
-            )
-            # one aggregation returns the argmax id, its radius AND its
-            # vector (max_by on the same unique ordering struct) — no
-            # second lookup job per round
-            far = scored.agg(
-                F.expr("max_by(vec_id, struct(d2u, -vec_id))").alias("vid"),
-                F.max("d2u").alias("radius"),
-                F.expr("max_by(x, struct(d2u, -vec_id))").alias("vx"),
-            ).first()
-            selected.append((int(far["vid"]), list(far["vx"])))
-            out_rows.append((rnd, int(far["vid"]), int(far["radius"])))
-    finally:
-        e.unpersist()
-
-    return spark.createDataFrame(
-        out_rows, "round int, vec_id bigint, radius_d2_micro bigint"
+    return local_frame(
+        spark,
+        _kcenter_rounds(e, CORESET_K),
+        "round int, vec_id bigint, radius_d2_micro bigint",
     )
+
+
+def _kcenter_rounds(e: DataFrame, k: int) -> list[tuple[int, int, int]]:
+    """(round, vec_id, radius) of ``k`` farthest-first rounds over
+    ``(vec_id, x)``; no rows for an empty ``e``."""
+    out: list[tuple[int, int, int]] = []
+    cents: list[list[float]] = []
+    with arrow_rounds(e) as run:
+        for rnd in range(k):
+            # round 0 has no centres, so its farthest row is the seed
+            part = run(_farthest_kernel(cents), _FARTHEST_SCHEMA).to_pylist()
+            if not part:
+                break
+            far = max(part, key=lambda r: (r["d2u"], -r["vec_id"]))
+            cents.append(far["x"])
+            out.append((rnd, far["vec_id"], far["d2u"]))
+    return out
 
 
 # --------------------------------------------------------------------------

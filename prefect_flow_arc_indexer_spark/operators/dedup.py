@@ -36,6 +36,7 @@ from prefect_flow_arc_indexer_spark.functions.caching import (
     CheckpointRelease,
     release_frame,
 )
+from prefect_flow_arc_indexer_spark.functions.frames import local_frame
 from prefect_flow_arc_indexer_spark.functions.hashing import (
     HASH_PRIME,
     MINHASH_COEFFS,
@@ -303,9 +304,7 @@ def near_dedup_keepers(
     # release below without recomputing MinHash — collect+recreate rather
     # than localCheckpoint, which would strand its blocks for the session
     # (df.unpersist is a no-op on checkpoints; see functions/caching.py)
-    census = census.sparkSession.createDataFrame(
-        census.collect(), census.schema
-    )
+    census = local_frame(census.sparkSession, census.collect(), census.schema)
     dropped = census.count()
     if dropped:
         logging.getLogger(__name__).warning(
@@ -850,7 +849,7 @@ def _embedding_assignment(
     # Below the gate the collect's extra job costs more than the in-plan
     # recompute it avoids, so the small path keeps cents lazy.
     if not small:
-        cents = spark.createDataFrame(cents.collect(), cents.schema)
+        cents = local_frame(spark, cents.collect(), cents.schema)
     # nearest-anchor assignment: a shuffle-free fold over the broadcast
     # per-label centroid array — max of struct(rounded cos, -cell) is the
     # oracle's (cos DESC, cell ASC) ranking in one narrow projection
@@ -1170,7 +1169,7 @@ def connected_components(
         # release discipline is unchanged: release_local_checkpoint /
         # CheckpointRelease no-op safely on it (caching.py checks the
         # storage level), and upstream caches can be freed immediately.
-        return spark.createDataFrame(rows, ddl)
+        return local_frame(spark, rows, ddl)
     both = (
         directed.union(
             directed.select(

@@ -26,6 +26,7 @@ from prefect_flow_arc_indexer_spark.functions.caching import (
     CheckpointRelease,
     release_local_checkpoint,
 )
+from prefect_flow_arc_indexer_spark.functions.frames import local_frame
 from prefect_flow_arc_indexer_spark.functions.textfns import dd_tokens, tokens
 from prefect_flow_arc_indexer_spark.operators.corpus_quality import _TOKS_CTE
 from prefect_flow_arc_indexer_spark.plans.registry import register
@@ -303,9 +304,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cum"),
     )
     total = counts.agg(F.sum("cnt").alias("total"))
-    sizes = spark.createDataFrame(
-        [(s,) for s in VOCAB_SIZES], "vocab_size int"
-    )
+    sizes = local_frame(spark, [(s,) for s in VOCAB_SIZES], "vocab_size int")
     at = (
         ranked.join(F.broadcast(sizes), F.col("rnk") <= F.col("vocab_size"))
         .groupBy("vocab_size")
@@ -489,8 +488,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # without the guard the q/n literal divides by zero under ANSI.
             # Checked BEFORE rank is checkpointed so the early return
             # cannot strand checkpoint blocks (ADVICE r10).
-            return spark.createDataFrame(
-                [], "rank_pos int, term string, pagerank double"
+            return local_frame(
+                spark, [], "rank_pos int, term string, pagerank double"
             )
         # the rank vector is |vocab| rows of (term, bool, long) — small
         # enough to broadcast for any realistic vocabulary, which turns

@@ -23,6 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from prefect_flow_arc_indexer_spark.functions.frames import local_frame
+from prefect_flow_arc_indexer_spark.functions.rounds import (
+    arrow_rounds,
+    list_matrix,
+    sum_by,
+)
 from prefect_flow_arc_indexer_spark.functions.vectors import (
     cosine_similarity,
     dd_cosine_similarity,
@@ -439,8 +445,10 @@ def q_knn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not q_rows:
         # empty corpus/query set: np.array([]) is 1-D, so the axis-1
         # normalization below would crash instead of returning no neighbors
-        return e.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
+        return local_frame(
+            e.sparkSession,
+            [],
+            "query_id long, neighbor_id long, cos_sim double, rank int",
         )
     q_ids = np.array([r["vec_id"] for r in q_rows])
     q_mat = np.array([r["embedding"] for r in q_rows], dtype="float64")
@@ -547,7 +555,7 @@ def _lloyd_partials_kernel(cents):
         acc_s: dict = {}
         acc_n: dict = {}
         for batch in it:
-            emb = np.array(batch.column(1).to_pylist(), dtype=np.float64)
+            emb = list_matrix(batch.column(1))
             if emb.size == 0:
                 continue
             if cents is None:
@@ -555,9 +563,13 @@ def _lloyd_partials_kernel(cents):
                     batch.column(0).to_pylist(), dtype=np.int64
                 )
             else:
-                dots = np.cumsum(emb[:, None, :] * cmat[None, :, :], axis=2)[
-                    :, :, -1
-                ]
+                # the same left-to-right fold, one dimension at a time:
+                # never builds the (rows, k, d) product (5x faster at 20k
+                # rows, bit-identical to np.cumsum's sequential adds)
+                et = emb.T
+                dots = np.multiply.outer(et[0], cmat[:, 0])
+                for j in range(1, len(et)):
+                    dots += np.multiply.outer(et[j], cmat[:, j])
                 en = np.sqrt(np.cumsum(emb * emb, axis=1)[:, -1])
                 cos = dots / (en[:, None] * cnorm[None, :])
                 r6 = spark_round_half_up(cos.ravel(), 6).reshape(cos.shape)
@@ -614,80 +626,48 @@ def _lloyd_partials_kernel(cents):
     # convergence remain pytest-asserted.
     oracle=_dd_kmeans_sql(),
     doc="iterative algorithm surface: k-means via Lloyd iterations — "
-    "per iteration, assign is a broadcast of the centroid set folded "
-    "per-vector in a shuffle-free projection (argmax cosine) and "
-    "re-estimation is one (label, pos) shuffle over the cached corpus. "
-    "r11: the fixed-count Lloyd chain runs as ONE lazy plan whose "
-    "per-round centroid sets are 1-row broadcast subtrees (the oracle's "
-    "unrolled-CTE shape); only the final k x d integer component sums "
-    "reach the driver — 4 per-round driver round-trips (each a fresh "
-    "plan build + codegen) collapse into one executed plan, identical "
-    "arithmetic. Output: per-cluster size and a quantized centroid "
-    "checksum.",
+    "per round, one Arrow kernel assigns each vector to its nearest "
+    "centroid (argmax rounded cosine, ties to the smaller cell) and emits "
+    "per-task quantized integer component sums, reduced exactly on the "
+    "driver into the next k x d centroids. The rounds run through "
+    "functions.rounds.arrow_rounds: on the driver when the corpus fits the "
+    "broadcast threshold, else one shuffle-free Arrow job per round; a "
+    "last round over the final centroids is the membership census. "
+    "Output: per-cluster size and a quantized centroid checksum.",
 )
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings", fan_out=True).select(
-        "vec_id", "label", "embedding"
-    )
-    e = e.persist()
+    e = load_table(spark, sf_dir, "embeddings").select("label", "embedding")
 
-    def collect_comp(cents):
-        """One executed round: cached corpus -> Arrow partials -> tiny
-        (cell, pos) sum -> k x d rows on the driver."""
-        comp = e.select("label", "embedding").mapInArrow(
-            _lloyd_partials_kernel(cents),
-            "cell int, pos int, s long, n long",
-        )
-        return (
-            comp.groupBy("cell", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-
-    def cents_of(rows):
-        """Cell-ascending [(cell, centroid)]: exactly the cents_row
-        arithmetic — double(s)/n per dimension (s < 2^53, so the int ->
-        double cast and the division are the same IEEE ops)."""
+    def cents_of(comp):
+        """Cell-ascending [(cell, centroid)]: double(s)/n per dimension
+        (s < 2^53, so the int -> double cast and the division are the same
+        IEEE ops as the oracle's)."""
         sums: dict[int, dict[int, int]] = {}
         cnt: dict[int, int] = {}
-        for r in rows:
-            sums.setdefault(int(r["cell"]), {})[int(r["pos"])] = int(r["s"])
-            cnt[int(r["cell"])] = int(r["n"])
+        for r in comp.to_pylist():
+            sums.setdefault(r["cell"], {})[r["pos"]] = r["s"]
+            cnt[r["cell"]] = r["n"]
         return [
             (c, [float(sums[c][p]) / cnt[c] for p in range(EMB_DIM)])
             for c in sorted(sums)
         ]
 
-    try:
-        # r12 (guide §4.2 + §1.2): each Lloyd round is a FLAT executed
-        # plan — cached corpus -> one Arrow kernel (assignment + map-side
-        # quantized partial sums) -> a k x d-row aggregation -> a k x d
-        # driver collect. The r11 single lazy chain had trivial execution
-        # (re-collect 0.09 s) but paid ~2.7 s of Python plan construction
-        # + Catalyst analysis/codegen for the 3-round nested tree
-        # (posexplode + argmax fold + collect_list per round); the flat
-        # rounds are shape-identical, so codegen caches across rounds.
-        # Per-round driver state is k x d integers — the MLlib KMeans
-        # shape; the round barrier is inherent to Lloyd either way.
-        # Arithmetic is unchanged and bit-exact (see kernel docstring);
-        # pinned by the kernel-vs-JVM-chain parity test and the oracle.
-        rows = collect_comp(None)
-        for _ in range(KMEANS_ITERS - 1):
-            rows = collect_comp(cents_of(rows))
-        rows = collect_comp(cents_of(rows))
-        cent_rows = cents_of(rows)
-        # the final membership census IS the per-cell count of one more
-        # assignment round over cent_rows — the same kernel produces it
-        # (n rides the partials at pos 0), replacing the separate
-        # _assign_cells job whose literal-centroid argmax re-paid the
-        # expression codegen the kernel rounds avoid
-        final_rows = collect_comp(cent_rows)
-        n_members = {
-            int(r["cell"]): int(r["n"]) for r in final_rows if r["pos"] == 0
-        }
-    finally:
-        e.unpersist()
-    return spark.createDataFrame(
+    # Each Lloyd round is one kernel pass (assignment + quantized partial
+    # sums, bit-exact, see the kernel docstring) reduced exactly on the
+    # driver; round 0 sums by the rows' labels. The last pass over the
+    # final centroids is the membership census: n rides every partial.
+    cents = None
+    with arrow_rounds(e) as run:
+        for _ in range(KMEANS_ITERS + 2):
+            part = run(
+                _lloyd_partials_kernel(cents),
+                "cell int, pos int, s long, n long",
+            )
+            comp = sum_by(part, ["cell", "pos"], ["s", "n"])
+            cent_rows, cents = cents, cents_of(comp)
+    n_members = {r["cell"]: r["n"] for r in comp.to_pylist() if r["pos"] == 0}
+    return local_frame(
+        spark,
         sorted(
             (
                 int(lbl),
@@ -1023,6 +1003,43 @@ SELECT CAST(i - 1 AS INTEGER) AS component_idx,
     )
 
 
+def _pca_mean_kernel():
+    """mapInArrow kernel for the mean round over (x): emit ONE partial
+    batch per task of the per-dimension sums of HALF_UP round(y * PCA_QIN)
+    (the Catalyst replica) and the row count n, the oracle's quantized
+    mean inputs."""
+    import numpy as np
+    import pyarrow as pa
+
+    from prefect_flow_arc_indexer_spark.functions.rounding import (
+        spark_round_half_up_long,
+    )
+
+    def run(it):
+        acc, n = None, 0
+        for batch in it:
+            x = list_matrix(batch.column(0))
+            if x.size == 0:
+                continue
+            part = spark_round_half_up_long((x * PCA_QIN).ravel()).reshape(
+                x.shape
+            ).sum(axis=0)
+            acc = part if acc is None else acc + part
+            n += len(x)
+        if acc is None:
+            return
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.arange(acc.size, dtype=np.int32)),
+                pa.array(acc.astype(np.int64)),
+                pa.array(np.full(acc.size, n, dtype=np.int64)),
+            ],
+            ["pos", "s", "n"],
+        )
+
+    return run
+
+
 def _pca_step_kernel(v, m):
     """mapInArrow factory for one power-iteration round over (x): center,
     dot with the direction vector, quantize, and emit ONE partial batch
@@ -1043,7 +1060,7 @@ def _pca_step_kernel(v, m):
         ma = np.array(m, dtype=np.float64)
         acc = None
         for batch in it:
-            x = np.array(batch.column(0).to_pylist(), dtype=np.float64)
+            x = list_matrix(batch.column(0))
             if x.size == 0:
                 continue
             c = x - ma[None, :]
@@ -1072,83 +1089,63 @@ def _pca_step_kernel(v, m):
     doc="iterative linear-algebra surface: top principal component of the "
     "centered embedding cloud via power iteration on the covariance "
     "operator — each round computes v <- normalize(sum_x x (x . v)) "
-    "WITHOUT materializing the d x d covariance: one shuffle-free "
-    "projection (dot product per row, array scale) and one array-fold "
-    "aggregate (zip_with running vector sum), so the per-round cost is a "
-    "corpus scan + a d-width reduction, never d^2 state. r11: the "
-    "fixed-count power rounds chain as ONE lazy plan — each round's "
-    "direction vector is a 1-row broadcast subtree with the "
-    "normalization in-plan (the oracle's v{t} CTE chain); only the last "
-    "un-normalized step vector reaches the driver. Round 9: the mean and each step's "
-    "d-width reduction sum PRE-ROUNDED integer contributions (PCA_QIN / "
-    "PCA_QSTEP units), so every corpus-wide aggregate is exact and "
-    "order-independent — upgrading the query from rows-only to an exact "
-    "unrolled-CTE oracle; norm/normalize/Rayleigh run over the d-vector "
-    "in pinned dimension order on both engines. Output: the component "
-    "quantized to "
+    "WITHOUT materializing the d x d covariance, so the per-round cost is "
+    "a corpus pass + a d-width reduction, never d^2 state. The mean and "
+    "each step sum PRE-ROUNDED integer contributions (PCA_QIN / PCA_QSTEP "
+    "units), so every corpus-wide aggregate is exact and order-independent "
+    "and the oracle is an exact unrolled-CTE replay; norm/normalize/"
+    "Rayleigh run over the d-vector in pinned dimension order on both "
+    "engines. The rounds run through functions.rounds.arrow_rounds: on the "
+    "driver when the corpus fits the broadcast threshold, else one "
+    "shuffle-free Arrow job per round. Output: the component quantized to "
     "1e-6 plus the Rayleigh-quotient eigenvalue estimate, sign-normalized "
     "(first nonzero coordinate positive) for run-to-run stability.",
 )
 def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    e = load_table(spark, sf_dir, "embeddings", fan_out=True).select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("x")
     )
-    e = e.persist()
-
-    try:
-        # ONE corpus pass yields n and the quantized mean sums together
-        # (r11 — previously a count plus a separate mean collect).
-        mean_rows = (
-            e.select(F.posexplode("x").alias("pos", "y"))
-            .groupBy("pos")
-            .agg(
-                F.sum(
-                    F.round(F.col("y") * F.lit(PCA_QIN)).cast("long")
-                ).alias("s"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        )
-        n = int(mean_rows[0]["n"]) if mean_rows else 0
+    with arrow_rounds(e) as run:
+        # one round yields n and the quantized mean sums together
+        mean_rows = sum_by(
+            run(_pca_mean_kernel(), "pos int, s long, n long"),
+            ["pos"],
+            ["s", "n"],
+        ).to_pylist()
+        n = mean_rows[0]["n"] if mean_rows else 0
         if n == 0:
             # empty corpus: the oracle's `WHERE n > 0` guard yields zero
             # rows; without this the mean division below hits ANSI 22012
-            return spark.createDataFrame(
-                [], "component_idx int, loading double, eigenvalue double"
+            return local_frame(
+                spark,
+                [],
+                "component_idx int, loading double, eigenvalue double",
             )
         mean = [0.0] * EMB_DIM
         for r in mean_rows:
             mean[r["pos"]] = float(r["s"]) / PCA_QIN / n
 
-        # r12 (guide §4.2 + §1.2): each power round is a FLAT executed
-        # plan — cached corpus -> one Arrow kernel (center + dot +
-        # quantized partial sums) -> a d-row aggregation -> a d-value
-        # driver collect. The r11 single lazy chain had trivial execution
-        # but paid the Python plan construction + Catalyst analysis of
-        # the 3-round nested tree per call (the q_kmeans measurement);
-        # the flat rounds are shape-identical, so codegen caches across
-        # rounds, and per-round driver state is d doubles. Arithmetic is
-        # unchanged and bit-exact: the between-round normalization is the
-        # identical left-to-right fold + correctly-rounded sqrt the
-        # in-plan form used (JVM sqrt == math.sqrt), zero-guarded the
-        # same way; pinned by the oracle's exact unrolled-CTE replay.
-        def step_collect(vec):
-            part = e.mapInArrow(
-                _pca_step_kernel(vec, mean), "pos int, sq long"
+        def step(vec):
+            """One power round: the exact d-vector sum_x c (c . v) in
+            PCA_QSTEP units, as doubles."""
+            sq = sum_by(
+                run(_pca_step_kernel(vec, mean), "pos int, sq long"),
+                ["pos"],
+                ["sq"],
             )
-            rows = (
-                part.groupBy("pos").agg(F.sum("sq").alias("sq")).collect()
-            )
-            sq = [0] * EMB_DIM
-            for r in rows:
-                sq[int(r["pos"])] = int(r["sq"])
-            return [float(x) / PCA_QSTEP for x in sq]
+            out = [0.0] * EMB_DIM
+            for r in sq.to_pylist():
+                out[r["pos"]] = float(r["sq"]) / PCA_QSTEP
+            return out
 
+        # The between-round normalization is the oracle's left-to-right
+        # fold plus a correctly rounded sqrt (JVM sqrt == math.sqrt),
+        # zero-guarded the same way.
         v_cur = [1.0 if i == 0 else 0.0 for i in range(EMB_DIM)]
         for _ in range(PCA_ITERS - 1):
-            s_t = step_collect(v_cur)
+            s_t = step(v_cur)
             acc = 0.0
             for y in s_t:
                 acc += y * y
@@ -1156,27 +1153,25 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             if nrm == 0.0:
                 nrm = 1.0
             v_cur = [y / nrm for y in s_t]
-        s = step_collect(v_cur)
-        # math.sqrt (correctly rounded), NOT **0.5 (libm pow): the
-        # oracle's sqrt() must see the same double
-        norm = math.sqrt(sum(x * x for x in s)) or 1.0
-        v = [x / norm for x in s]
-        # Rayleigh quotient lambda = v' C v = ||C v|| at the fixpoint;
-        # norm of the last un-normalized step over n gives the eigenvalue
-        eigenvalue = norm / n
-        # sign normalization: first nonzero coordinate positive
-        for x in v:
-            if abs(x) > 1e-12:
-                if x < 0:
-                    v = [-y for y in v]
-                break
-    finally:
-        e.unpersist()
+        s = step(v_cur)
+    # math.sqrt (correctly rounded), NOT **0.5 (libm pow): the oracle's
+    # sqrt() must see the same double
+    norm = math.sqrt(sum(x * x for x in s)) or 1.0
+    v = [x / norm for x in s]
+    # Rayleigh quotient lambda = v' C v = ||C v|| at the fixpoint; norm of
+    # the last un-normalized step over n gives the eigenvalue
+    eigenvalue = norm / n
+    # sign normalization: first nonzero coordinate positive
+    for x in v:
+        if abs(x) > 1e-12:
+            if x < 0:
+                v = [-y for y in v]
+            break
     rows = [
         (i, round(v[i], 6), round(eigenvalue, 6)) for i in range(EMB_DIM)
     ]
-    return spark.createDataFrame(
-        rows, "component_idx int, loading double, eigenvalue double"
+    return local_frame(
+        spark, rows, "component_idx int, loading double, eigenvalue double"
     )
 
 

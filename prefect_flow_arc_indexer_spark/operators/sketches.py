@@ -31,6 +31,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from prefect_flow_arc_indexer_spark.functions.frames import local_frame
 from prefect_flow_arc_indexer_spark.functions.textfns import (
     dd_tokens,
     tokens,
@@ -261,7 +262,7 @@ def q_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_rows = [
         (tok, d, cm_cell(tok, d)) for tok in CM_PROBES for d in range(CM_DEPTH)
     ]
-    probes = spark.createDataFrame(probe_rows, "token string, d int, w int")
+    probes = local_frame(spark, probe_rows, "token string, d int, w int")
     est = (
         probes.join(F.broadcast(merged), ["d", "w"], "left")
         .groupBy("token")

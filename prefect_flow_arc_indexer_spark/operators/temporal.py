@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from prefect_flow_arc_indexer_spark.functions.frames import local_frame
 from prefect_flow_arc_indexer_spark.plans.registry import register
 from prefect_flow_arc_indexer_spark.sources.parquet import load_table
 
@@ -377,7 +378,7 @@ def q_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("cents", F.lit(0)).alias("y"),
         )
     )
-    lags = spark.createDataFrame([(L,) for L in ACF_LAGS], "lag_d int")
+    lags = local_frame(spark, [(L,) for L in ACF_LAGS], "lag_d int")
     # Spark's lag() needs a literal offset; on a DENSE integer spine the
     # per-lag shift is the equi-join t_prev = t - lag_d (rows with
     # t - lag_d < 1 drop out — exactly the oracle's y_lag IS NOT NULL)

@@ -28,6 +28,7 @@ from prefect_flow_arc_indexer_spark.functions.textfns import (
     word_ngrams,
 )
 from prefect_flow_arc_indexer_spark.functions.caching import CheckpointRelease
+from prefect_flow_arc_indexer_spark.functions.frames import local_frame
 from prefect_flow_arc_indexer_spark.plans.registry import register
 from prefect_flow_arc_indexer_spark.sources.parquet import (
     load_table,
@@ -737,8 +738,8 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             (cnt, pat.sub(f" {a + b}", f" {syms} ").strip())
             for cnt, syms in rows
         ]
-    return spark.createDataFrame(
-        merges, "rank int, pair string, merged string, support bigint"
+    return local_frame(
+        spark, merges, "rank int, pair string, merged string, support bigint"
     )
 
 

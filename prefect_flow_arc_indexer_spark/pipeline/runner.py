@@ -60,6 +60,7 @@ from pyspark.sql import (
 )
 from pyspark.sql.types import StructType
 
+from prefect_flow_arc_indexer_spark.functions.frames import local_frame
 from prefect_flow_arc_indexer_spark.pipeline.sinks import (
     VersionedSink,
     generation_timestamp,
@@ -385,7 +386,7 @@ def _stage_audit_publish(
                     # an all-tombstone index stages no partition: publish
                     # an empty generation
                     sink.write_generation(
-                        spark.createDataFrame([], schema), index,
+                        local_frame(spark, [], schema), index,
                         timestamps[index],
                     )
                 with open(os.path.join(gen_path, PROBE_FILE), "w") as f:

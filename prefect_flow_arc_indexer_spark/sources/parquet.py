@@ -58,11 +58,11 @@ def load_table(
     keeping the oracle comparison exact.
 
     ``fan_out=True`` is for operators whose per-row work dominates the scan
-    (shingling, hashing, vector math): when the scan yields fewer partitions
-    than the cluster has cores (the test files are single-row-group, so they
-    read as ONE task), redistribute rows first. The guard makes it a no-op
-    at production scale, where a 100 TB scan already has ~1e5 partitions —
-    no gratuitous shuffle lands in the big-data path.
+    (shingling, hashing, vector math): when fewer tasks than the cluster has
+    cores read the rows (the test files are single-row-group, so they read
+    as ONE task; see :func:`_splits`), redistribute rows first. The guard
+    makes it a no-op at production scale, where a 100 TB scan already has
+    ~1e5 partitions — no gratuitous shuffle lands in the big-data path.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -82,9 +82,17 @@ def load_table(
         df = df.withColumn("ts", F.to_timestamp("ts"))
     if fan_out:
         par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
+        if _splits(df, path) < par:
             df = df.repartition(par)
     return df
+
+
+def _splits(df: DataFrame, path: str) -> int:
+    """How many tasks read ``df``'s rows: the row-group count of a local
+    file (a split without a row-group midpoint reads nothing), so the
+    decision plans no scan; for other paths, the scan's partition count."""
+    md = _footer(path)
+    return md.num_row_groups if md is not None else df.rdd.getNumPartitions()
 
 
 # session confs that change what parquet inference gives:

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 from pathlib import Path
@@ -48,6 +49,30 @@ def frame_signature(cols: list[str], rows: list[tuple]) -> tuple[int, list[str],
     return len(rows), sorted(cols), h
 
 
+_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def duckdb_memory_limit() -> str:
+    """DuckDB's ``memory_limit`` for a process that also holds the Spark
+    driver: the memory left after the driver heap
+    (``SPARK_GRAFT_DRIVER_MEM``, as ``session.py`` sizes it) and 2 GiB for
+    the JVM's off-heap use, the Python workers and this process's own
+    objects; at least 2 GiB. DuckDB's default, 80% of the machine, plus an
+    8 GB heap does not fit a 15 GB machine. Above the limit DuckDB spills
+    to disk, but the recursive-CTE oracles (q_pagerank) fail below about
+    4 GiB of accounted memory even where they peak under 1 GB of RSS."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            total = min(total, int(f.read()))
+    except (OSError, ValueError):  # no cgroup v2 limit ("max") here
+        pass
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g").strip().lower()
+    heap_bytes = int(heap.rstrip("kmgt")) * _UNITS[heap.lstrip("0123456789")]
+    free = total - heap_bytes - (2 << 30)
+    return f"{max(2 << 30, free) >> 20}MB"
+
+
 def main() -> int:
     args = sys.argv[1:]
     json_path = None
@@ -70,7 +95,7 @@ def main() -> int:
     results: dict[str, dict] = {}
 
     spark = get_spark("selfcheck")
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": duckdb_memory_limit()})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"

@@ -12,17 +12,26 @@ from __future__ import annotations
 from tests.conftest import SF_DIR
 
 
-def _run_with_parallelism(spark, name, n_shuffle):
+def _run_with_parallelism(spark, name, n_shuffle, distributed=False):
+    """``distributed`` sets the broadcast threshold to -1, so the
+    functions.rounds builders run each round as a Spark job over a frame
+    fanned out to ``n_shuffle`` partitions instead of on the driver, where
+    the parallelism would not reach them."""
     from prefect_flow_arc_indexer_spark.plans import all_queries
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
+    confs = {"spark.sql.shuffle.partitions": str(n_shuffle)}
+    if distributed:
+        confs["spark.sql.autoBroadcastJoinThreshold"] = "-1"
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         return sorted(
             map(tuple, all_queries()[name].builder(spark, SF_DIR).collect())
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def test_pagerank_identical_across_parallelism(spark):
@@ -33,7 +42,7 @@ def test_pagerank_identical_across_parallelism(spark):
 
 
 def test_pca_power_identical_across_parallelism(spark):
-    a = _run_with_parallelism(spark, "q_pca_power", 1)
-    b = _run_with_parallelism(spark, "q_pca_power", 17)
+    a = _run_with_parallelism(spark, "q_pca_power", 1, distributed=True)
+    b = _run_with_parallelism(spark, "q_pca_power", 17, distributed=True)
     assert a == b
     assert len(a) == 64
