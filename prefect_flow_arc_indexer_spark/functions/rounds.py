@@ -17,7 +17,13 @@ decides once per frame where those rounds run:
 
 The kernels' reductions are integer sums or total-order argmaxes, so the
 placement, the partition count and the batch split cannot change a result.
-A threshold of ``-1`` forces the distributed placement.
+A threshold of ``-1`` forces the distributed placement. Raising the
+threshold for joins also raises the size of frame these builders collect.
+
+k-means and PCA run every round through :func:`arrow_rounds`; the k-center
+coreset does only when :func:`fits_driver` holds, and otherwise keeps its
+JVM fold (``curation._kcenter_fold_rounds``), which beats a Python job per
+round there.
 """
 
 from __future__ import annotations
@@ -35,7 +41,7 @@ def _arrow_schema(ddl: str) -> pa.Schema:
     return to_arrow_schema(T.StructType.fromDDL(ddl))
 
 
-def _fits_driver(frame: DataFrame) -> bool:
+def fits_driver(frame: DataFrame) -> bool:
     """True when ``frame``'s optimized-plan size estimate is within the
     session's broadcast threshold. Reads plan statistics only: no job."""
     qe = frame._jdf.queryExecution()
@@ -51,7 +57,7 @@ def arrow_rounds(
     """Yield ``run(kernel, schema)``: one round of the ``mapInArrow``
     kernel ``kernel`` over ``frame``, returning every partial batch it
     yields as one ``pyarrow.Table`` of the DDL ``schema``."""
-    if _fits_driver(frame):
+    if fits_driver(frame):
         batches = frame.toArrow().to_batches()
 
         def run(kernel, schema: str) -> pa.Table:

@@ -88,11 +88,33 @@ def load_table(
 
 
 def _splits(df: DataFrame, path: str) -> int:
-    """How many tasks read ``df``'s rows: the row-group count of a local
-    file (a split without a row-group midpoint reads nothing), so the
-    decision plans no scan; for other paths, the scan's partition count."""
+    """At most how many tasks read ``df``'s rows. For a local file this
+    comes from the footer and the file size, so the decision plans no scan:
+    Spark cuts the file into byte splits (:func:`_byte_splits`) and only a
+    split that holds a row group's midpoint reads rows, so no more tasks
+    read rows than there are row groups or splits. For other paths, the
+    scan's partition count."""
     md = _footer(path)
-    return md.num_row_groups if md is not None else df.rdd.getNumPartitions()
+    if md is None:
+        return df.rdd.getNumPartitions()
+    size = os.path.getsize(path)
+    return min(md.num_row_groups, _byte_splits(df.sparkSession, size))
+
+
+def _byte_splits(spark: SparkSession, size: int) -> int:
+    """How many splits Spark's file scan cuts one ``size``-byte file into:
+    ``FilePartition.maxSplitBytes`` for a one-file scan, which also packs
+    each split into its own partition."""
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    cores = (
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    per_core = (size + open_cost) // int(cores)
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, per_core))
+    return -(-size // split)
 
 
 # session confs that change what parquet inference gives:

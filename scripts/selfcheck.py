@@ -13,6 +13,7 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -49,28 +50,47 @@ def frame_signature(cols: list[str], rows: list[tuple]) -> tuple[int, list[str],
     return len(rows), sorted(cols), h
 
 
-_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+# JavaUtils.byteStringAs suffixes; a bare number is MiB for
+# spark.driver.memory, which SPARK_GRAFT_DRIVER_MEM sets (session.py)
+_UNITS = {"": 1 << 20, "b": 1} | {
+    u + b: 1 << (10 * i) for i, u in enumerate("kmgtp", 1) for b in ("", "b")
+}
+
+# q_pagerank's recursive-CTE oracle fails at a 3950 MB limit (3.6 GiB
+# accounted) and passes at 5300 MB, though it peaks under 1 GB of RSS
+# without a limit; no cap goes below this
+_ORACLE_FLOOR = 6 << 30
 
 
-def duckdb_memory_limit() -> str:
-    """DuckDB's ``memory_limit`` for a process that also holds the Spark
-    driver: the memory left after the driver heap
-    (``SPARK_GRAFT_DRIVER_MEM``, as ``session.py`` sizes it) and 2 GiB for
-    the JVM's off-heap use, the Python workers and this process's own
-    objects; at least 2 GiB. DuckDB's default, 80% of the machine, plus an
-    8 GB heap does not fit a 15 GB machine. Above the limit DuckDB spills
-    to disk, but the recursive-CTE oracles (q_pagerank) fail below about
-    4 GiB of accounted memory even where they peak under 1 GB of RSS."""
+def machine_memory() -> int:
+    """Physical memory in bytes, or the cgroup v2 limit when lower."""
     total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     try:
         with open("/sys/fs/cgroup/memory.max") as f:
             total = min(total, int(f.read()))
     except (OSError, ValueError):  # no cgroup v2 limit ("max") here
         pass
-    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g").strip().lower()
-    heap_bytes = int(heap.rstrip("kmgt")) * _UNITS[heap.lstrip("0123456789")]
-    free = total - heap_bytes - (2 << 30)
-    return f"{max(2 << 30, free) >> 20}MB"
+    return total
+
+
+def duckdb_memory_limit(total: int, heap: str) -> str | None:
+    """DuckDB's ``memory_limit`` beside a Spark driver with heap ``heap``
+    on a machine of ``total`` bytes, or None to keep DuckDB's default of
+    80% of memory.
+
+    The default stands when it fits beside the heap and 2 GiB for the
+    JVM's off-heap use, the Python workers and this process's own objects.
+    It does not on a 15 GB machine with the 8 GB default heap, where an
+    sf1 sweep was killed; there the limit is the memory left after both,
+    but at least ``_ORACLE_FLOOR``. Above the limit DuckDB spills to disk.
+    A heap value Spark would not parse keeps the default.
+    """
+    m = re.fullmatch(r"(\d+)([a-z]*)", heap.strip().lower())
+    if m is None or m.group(2) not in _UNITS:
+        return None
+    left = total - int(m.group(1)) * _UNITS[m.group(2)] - (2 << 30)
+    cap = max(_ORACLE_FLOOR, left)
+    return None if cap >= total * 0.8 else f"{cap >> 20}MB"
 
 
 def main() -> int:
@@ -95,7 +115,10 @@ def main() -> int:
     results: dict[str, dict] = {}
 
     spark = get_spark("selfcheck")
-    con = duckdb.connect(config={"memory_limit": duckdb_memory_limit()})
+    limit = duckdb_memory_limit(
+        machine_memory(), os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    )
+    con = duckdb.connect(config={"memory_limit": limit} if limit else {})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"

@@ -1,7 +1,8 @@
 """The round primitive (``functions/rounds.py``) and the builders that run on
 it: placement parity against each other and the DuckDB oracle, job counts,
-the k-center kernel against the JVM fold it replaced, driver-built local
-relations, and the fan-out decision of ``load_table``."""
+the k-center kernel against the JVM fold it keeps above the broadcast
+threshold, driver-built local relations, and the fan-out decision of
+``load_table``."""
 
 from __future__ import annotations
 
@@ -60,18 +61,13 @@ def _bits(rows):
 
 
 def _rounds():
-    from prefect_flow_arc_indexer_spark.operators.curation import CORESET_K
     from prefect_flow_arc_indexer_spark.operators.similarity import (
         KMEANS_ITERS,
         PCA_ITERS,
     )
 
     # k-means: label round, KMEANS_ITERS Lloyd rounds, the census round
-    return {
-        "q_kmeans": KMEANS_ITERS + 2,
-        "q_pca_power": PCA_ITERS + 1,
-        "q_coreset_kcenter": CORESET_K,
-    }
+    return {"q_kmeans": KMEANS_ITERS + 2, "q_pca_power": PCA_ITERS + 1}
 
 
 ROUND_BUILDERS = ("q_kmeans", "q_pca_power", "q_coreset_kcenter")
@@ -104,7 +100,7 @@ def test_driver_placement_runs_one_job(spark, name):
     assert len(jobs) == 1
 
 
-@pytest.mark.parametrize("name", ROUND_BUILDERS)
+@pytest.mark.parametrize("name", ("q_kmeans", "q_pca_power"))
 def test_distributed_placement_runs_one_shuffle_free_job_per_round(
     spark, name
 ):
@@ -120,6 +116,22 @@ def test_distributed_placement_runs_one_shuffle_free_job_per_round(
     assert len(jobs) == _rounds()[name]
     tracker = spark.sparkContext.statusTracker()
     assert all(len(tracker.getJobInfo(j).stageIds) == 1 for j in jobs)
+
+
+def test_kcenter_keeps_the_jvm_fold_above_the_threshold(spark, monkeypatch):
+    """Above the threshold a Python job per round is slower than the JVM
+    fold, so the k-center rounds never reach the distributed placement."""
+    from prefect_flow_arc_indexer_spark.operators import curation
+
+    def python_rounds(e, k):
+        raise AssertionError("Python k-center rounds above the threshold")
+
+    monkeypatch.setattr(curation, "_kcenter_rounds", python_rounds)
+    with placement(spark, DISTRIBUTED):
+        df = curation.q_coreset_kcenter(spark, SF_DIR)
+    assert df.count() == curation.CORESET_K
+    with placement(spark, DRIVER), pytest.raises(AssertionError):
+        curation.q_coreset_kcenter(spark, SF_DIR)
 
 
 def test_distributed_placement_fans_out_to_the_shuffle_width(spark):
@@ -217,51 +229,8 @@ def test_list_matrix_rejects_null_and_ragged_rows(rows):
 
 
 # --------------------------------------------------------------------------
-# k-center kernel vs the JVM fold it replaced
+# k-center kernel vs the JVM fold it runs beside
 # --------------------------------------------------------------------------
-def _jvm_kcenter(e, k):
-    """The replaced builder loop, kept as the reference: the selected set
-    ships as an array literal, distance-to-set is a JVM fold, and the
-    argmax is max_by on struct(d2u, -vec_id)."""
-    from prefect_flow_arc_indexer_spark.operators.curation import QUANT
-
-    seed, seed_vec = e.agg(F.min("vec_id"), F.expr("min_by(x, vec_id)")).first()
-    if seed is None:
-        return []
-    selected = [list(seed_vec)]
-    out = [(0, int(seed), 0)]
-    for rnd in range(1, k):
-        cents = F.array(
-            *[F.array(*[F.lit(float(x)) for x in v]) for v in selected]
-        )
-        d2 = F.aggregate(
-            F.transform(
-                cents,
-                lambda c: F.aggregate(
-                    F.zip_with(F.col("x"), c, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-            ),
-            F.lit(float("inf")),
-            lambda acc, v: F.least(acc, v),
-        )
-        far = (
-            e.select(
-                "vec_id", "x", F.round(d2 * QUANT).cast("bigint").alias("d2u")
-            )
-            .agg(
-                F.expr("max_by(vec_id, struct(d2u, -vec_id))").alias("vid"),
-                F.max("d2u").alias("radius"),
-                F.expr("max_by(x, struct(d2u, -vec_id))").alias("vx"),
-            )
-            .first()
-        )
-        selected.append(list(far["vx"]))
-        out.append((rnd, int(far["vid"]), int(far["radius"])))
-    return out
-
-
 def _outcome(fn):
     try:
         return fn()
@@ -296,13 +265,13 @@ FUZZ_CASES = ["gauss", "ties", "signed_zero", "near_1e15", "huge", "nan"]
 
 
 @pytest.mark.parametrize("case", FUZZ_CASES + ["empty"])
-@pytest.mark.parametrize("where", [DRIVER, DISTRIBUTED])
-def test_kcenter_kernel_matches_jvm_fold(spark, case, where):
+def test_kcenter_kernel_matches_jvm_fold(spark, case):
     from prefect_flow_arc_indexer_spark.operators.curation import (
+        _kcenter_fold_rounds,
         _kcenter_rounds,
     )
 
-    rng = random.Random(f"{case}-{where}")
+    rng = random.Random(f"{case}-{DRIVER}")
     vecs = [] if case == "empty" else _vectors(rng, case, 23, 5)
     ids = rng.sample(range(1, 1000), len(vecs))
     schema = T.StructType(
@@ -313,8 +282,8 @@ def test_kcenter_kernel_matches_jvm_fold(spark, case, where):
     )
     # more partitions than some rows fill: empty partitions on both paths
     e = spark.createDataFrame(list(zip(ids, vecs)), schema).repartition(9)
-    want = _outcome(lambda: _jvm_kcenter(e, 6))
-    with placement(spark, where):
+    want = _outcome(lambda: _kcenter_fold_rounds(e, 6))
+    with placement(spark, DRIVER):
         got = _outcome(lambda: _kcenter_rounds(e, 6))
     assert got == want
     if case in ("huge", "nan"):
@@ -368,22 +337,53 @@ def test_local_frame_matches_create_dataframe_and_runs_no_job(
 # load_table(fan_out=True) decides from the footer
 # --------------------------------------------------------------------------
 def test_fan_out_decision_reads_the_footer_and_agrees_with_the_scan(spark):
+    import types
+
+    import pyarrow.parquet as pq
+
     from prefect_flow_arc_indexer_spark.sources.parquet import (
         TABLES,
         _splits,
         load_table,
     )
 
-    par = spark.sparkContext.defaultParallelism
+    # a frame with no plan: a local file never consults the scan
+    planless = types.SimpleNamespace(sparkSession=spark)
     for sf_dir in (SF_DIR, SF_DIR_MID):
         for name in TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
-            df = load_table(spark, sf_dir, name)
-            # a local file never consults the frame
-            assert _splits(None, path) >= 1
-            assert (_splits(df, path) < par) == (
-                df.rdd.getNumPartitions() < par
-            )
+            groups = pq.read_metadata(path).num_row_groups
+            scan = load_table(spark, sf_dir, name).rdd.getNumPartitions()
+            assert _splits(planless, path) == min(groups, scan)
+
+
+def test_fan_out_counts_byte_splits_of_a_many_row_group_file(spark, tmp_path):
+    """Eight row groups in a 10 MB file: Spark cuts it into fewer byte
+    splits than that (3 at 4 cores), and only those splits read rows."""
+    import types
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from prefect_flow_arc_indexer_spark.sources.parquet import _splits
+
+    path = str(tmp_path / "groups.parquet")
+    n = 8 * 160_000  # incompressible doubles: 10 MB
+    values = np.random.default_rng(0).random(n)
+    pq.write_table(
+        pa.table({"v": values}), path, row_group_size=n // 8,
+        compression="none",
+    )
+    assert pq.read_metadata(path).num_row_groups == 8
+    df = spark.read.parquet(path)
+    scan = df.rdd.getNumPartitions()
+    readers = (
+        df.select(F.spark_partition_id().alias("p")).distinct().count()
+    )
+    splits = _splits(types.SimpleNamespace(sparkSession=spark), path)
+    assert scan < 8
+    assert splits == scan
+    assert readers <= splits
 
 
 def test_fan_out_falls_back_to_the_scan_without_a_footer(spark, tmp_path):
